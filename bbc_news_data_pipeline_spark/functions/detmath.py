@@ -125,7 +125,7 @@ def det_exp_small_sql(binder: str) -> str:
 #      fixed-point noise floor.
 #   5. ln v = e*LN2 + ln(1+i/64) + ln m', constants pre-rounded to Q36
 #      Python ints (identical literals in both dialects).
-# Total error vs true ln: < ~1e-9 absolute (R truncation 4.7e-10 dominates;
+# Total error vs true ln: < 1.5e-9 absolute (R truncation 4.7e-10 dominates;
 # ladder/table/series each <= 2e-11). Deterministic regardless of accuracy.
 #
 # Domain: 1 <= v < 2^62 (callers pass exact count products; v <= nn^2 needs

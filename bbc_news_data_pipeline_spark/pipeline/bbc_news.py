@@ -1,13 +1,14 @@
 """End-to-end BBC-news pipeline — the reference DAG (bbc_news_dag.py:360-362)
 as composed engine stages:
 
-  count → links(sitemap) → crawl(parse html) → prep → topics ∥ sentiment →
-  stats → chart-ready aggregate tables
+  links(sitemap) → crawl(parse html) → prep → topics ∥ (sentiment → stats)
+  ∥ emotion → chart-ready aggregate tables
 
 Ingestion inputs are DataFrames of fetched content (xml/html) so tests run
 on fixtures; production would prepend a rate-limited fetch stage (O5).
 Every stage is a lazy DataFrame transformation; the Pipeline runner only
-sequences writes.
+schedules writes, running the three post-prep branches concurrently.
+Table row counts are observed during each write, not re-scanned after it.
 """
 
 from __future__ import annotations
@@ -54,6 +55,10 @@ def build_pipeline(
     articles_path = f"{workdir}/articles_raw"
     processed_path = f"{workdir}/articles_processed"
 
+    def write_counted(df: DataFrame, path: str) -> int:
+        # S10 overwrite that counts the written rows in the same pass
+        return sinks.write_with_metrics(df, path, {"n": F.count(F.lit(1))})["n"]
+
     def discover(_: dict[str, Any]) -> int:
         links = news_links(parse_links(sitemap_xml))
         return sinks.keyed_append(spark, links, links_path, key="url")
@@ -68,17 +73,19 @@ def build_pipeline(
     def prep(_: dict[str, Any]) -> int:
         raw = spark.read.parquet(articles_path)
         processed = prepare_articles(raw, min_words=min_words)
-        sinks.overwrite_table(processed, processed_path)  # S10 semantics
-        return spark.read.parquet(processed_path).count()
+        return write_counted(processed, processed_path)
 
     def topics(_: dict[str, Any]) -> dict[str, Any]:
         processed = spark.read.parquet(processed_path)
         bundle = fit_lda(processed, "text", "url", k=lda_k, min_df=2.0, max_iter=5)
         words = topic_words(bundle, topn=8)
-        assigned = dominant_topic(bundle, "url")
-        sinks.overwrite_table(
-            processed.join(assigned, "url", "left"), f"{workdir}/articles_topic_{lda_k}"
-        )
+        try:
+            assigned = dominant_topic(bundle, "url")
+            sinks.overwrite_table(
+                processed.join(assigned, "url", "left"), f"{workdir}/articles_topic_{lda_k}"
+            )
+        finally:
+            bundle.tokens_df.unpersist()  # cached by fit_lda; this write is its last use
         sinks.write_csv(words, f"{workdir}/topic_words_top8", partition_by="topic_id")
         return {"k": lda_k, "n_topics": words.select("topic_id").distinct().count()}
 
@@ -90,23 +97,19 @@ def build_pipeline(
         # oracle-checked PLANS pin engine="lexicon" for cross-engine
         # determinism.
         scored = with_sentiment(processed, "text", engine="auto")
-        sinks.overwrite_table(scored, f"{workdir}/articles_sentiment")
-        return scored.count()
+        return write_counted(scored, f"{workdir}/articles_sentiment")
 
     def emotion(_: dict[str, Any]) -> int:
         # reference's third inference branch (articles_emotion_distilroberta,
         # sentiment_analysis.py:66-74) — optional like the topic branch
         processed = spark.read.parquet(processed_path)
         scored = with_emotion(processed, "text")
-        sinks.overwrite_table(scored, f"{workdir}/articles_emotion")
-        return scored.count()
+        return write_counted(scored, f"{workdir}/articles_emotion")
 
     def stats(results: dict[str, Any]) -> dict[str, int]:
         scored = spark.read.parquet(f"{workdir}/articles_sentiment")
         tables = daily_sentiment_stats(scored)
-        for name, df in tables.items():
-            sinks.overwrite_table(df, f"{workdir}/stats_{name}")
-        return {name: spark.read.parquet(f"{workdir}/stats_{name}").count() for name in tables}
+        return {name: write_counted(df, f"{workdir}/stats_{name}") for name, df in tables.items()}
 
     return Pipeline(
         [

@@ -204,9 +204,9 @@ def main() -> None:
         for _ in range(3):
             t0 = time.perf_counter()
             q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        timings[q.name] = min(runs)
-        ambient[q.name] = {"t": t_off, "load": load_at, "runs": runs}
+            runs.append(time.perf_counter() - t0)
+        timings[q.name] = round(min(runs), 3)
+        ambient[q.name] = {"t": t_off, "load": load_at, "runs": [round(r, 3) for r in runs]}
 
     total = round(sum(timings.values()), 3)
     scale = CALIBRATION_REF_SEC / calibration if calibration > 0 else 1.0

@@ -1,8 +1,10 @@
 """End-to-end BBC pipeline on fixtures: sitemap → crawl → prep →
-topics ∥ sentiment → stats (the reference DAG bbc_news_dag.py:360-362),
-plus runner control-flow semantics (retries, ALL_DONE, skip-downstream)."""
+topics ∥ (sentiment → stats) ∥ emotion (the reference DAG
+bbc_news_dag.py:360-362), plus runner control-flow semantics (retries,
+ALL_DONE, skip-downstream, concurrent siblings, inherited job group)."""
 
 import random
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,18 +44,29 @@ def fixtures(spark):
     return sitemap_df, pages_df
 
 
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_full_pipeline(spark, fixtures, tmp_path):
     sitemap_df, pages_df = fixtures
     wd = str(tmp_path / "wd")
+    persisted_before = _persisted_rdd_ids(spark)
     pipe = build_pipeline(spark, sitemap_df, pages_df, wd, lda_k=2)
     report = pipe.run()
     assert not report.failed, report.failed
+    # the run leaves nothing cached in the session (fit_lda's tokens are released)
+    assert _persisted_rdd_ids(spark) <= persisted_before
     assert report.results["discover_links"] == 20
     assert report.results["crawl_articles"] == 20
     assert report.results["prepare"] == 20
     assert report.results["sentiment"] == 20
     assert report.results["emotion"] == 20
     assert report.results["topics"]["n_topics"] == 2
+    assert report.results["stats"] == {
+        name: spark.read.parquet(f"{wd}/stats_{name}").count()
+        for name in ("label_counts", "daily_mean", "daily_share")
+    }
 
     emo = spark.read.parquet(f"{wd}/articles_emotion")
     assert {"emotion_label", "emotion_score"} <= set(emo.columns)
@@ -114,3 +127,95 @@ def test_runner_skips_downstream_of_required_failure():
     assert "b" in report.failed
     assert "c" in report.failed and "skipped" in report.failed["c"]
     assert "c" not in report.results
+
+
+def test_runner_runs_sibling_stages_concurrently():
+    # Each sibling waits for the other at the barrier: run one after the
+    # other, the first would time out and break it.
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet(_):
+        barrier.wait()
+        return "met"
+
+    pipe = Pipeline(
+        [
+            Stage("root", lambda r: 0),
+            Stage("left", meet, deps=("root",), retries=0),
+            Stage("right", meet, deps=("root",), retries=0),
+            Stage("join", lambda r: (r["left"], r["right"]), deps=("left", "right")),
+        ]
+    )
+    report = pipe.run()
+    assert not report.failed, report.failed
+    assert report.results["join"] == ("met", "met")
+    assert set(report.timings) == {"root", "left", "right", "join"}
+
+
+def test_runner_stages_inherit_caller_job_group(spark):
+    sc = spark.sparkContext
+    # "own" sets its own job group before "count" runs a job: the caller's
+    # group must reach "count" untouched by its sibling's setJobGroup.
+    own_group_set = threading.Barrier(2, timeout=30)
+
+    def own(_):
+        sc.setJobGroup("runner-own", "sibling with its own group")
+        own_group_set.wait()
+        return spark.range(5).count()
+
+    def count(_):
+        own_group_set.wait()
+        return spark.range(10).count()
+
+    sc.setJobGroup("runner-caller", "caller of Pipeline.run")
+    try:
+        report = Pipeline(
+            [Stage("own", own, retries=0), Stage("count", count, retries=0)]
+        ).run()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert not report.failed, report.failed
+    assert report.results == {"own": 5, "count": 10}
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    caller_jobs = set(tracker.getJobIdsForGroup("runner-caller"))
+    own_jobs = set(tracker.getJobIdsForGroup("runner-own"))
+    assert caller_jobs and own_jobs
+    assert not caller_jobs & own_jobs
+
+
+def test_runner_required_failure_keeps_running_sibling():
+    sibling_running = threading.Event()
+    failure_recorded = threading.Event()
+
+    def slow(_):
+        sibling_running.set()
+        assert failure_recorded.wait(30)
+        return "kept"
+
+    def fail(_):
+        assert sibling_running.wait(30)
+        raise RuntimeError("required stage down")
+
+    pipe = Pipeline(
+        [
+            Stage("root", lambda r: 0),
+            Stage("slow", slow, deps=("root",), retries=0),
+            Stage("slow_child", lambda r: r["slow"] + "!", deps=("slow",)),
+            Stage("fail", fail, deps=("root",), retries=0),
+            # optional stages still start after a failed dependency, so this
+            # one only runs once the failure has been recorded
+            Stage("observer", lambda r: failure_recorded.set(), deps=("fail",), optional=True),
+            Stage("fail_child", lambda r: "never", deps=("fail",)),
+            Stage("fail_grandchild", lambda r: "never", deps=("fail_child",)),
+        ]
+    )
+    report = pipe.run()
+    assert report.results["slow"] == "kept"
+    assert report.results["slow_child"] == "kept!"
+    assert report.failed["fail"] == "RuntimeError: required stage down"
+    assert set(report.failed) == {"fail", "fail_child", "fail_grandchild"}
+    assert report.failed["fail_child"] == "skipped: upstream failed ['fail']"
+    assert report.failed["fail_grandchild"] == "skipped: upstream failed ['fail_child']"
+    assert "fail_child" not in report.timings and "fail_grandchild" not in report.timings
