@@ -115,7 +115,10 @@ def det_exp_small_sql(binder: str) -> str:
 # every engine defines exactly, immune to any float build flag.
 #
 # Algorithm (all quantities int64, every intermediate proven < 2^63):
-#   1. e = floor(log2 v) via a 62-comparison ladder (pure integer).
+#   1. e = floor(log2 v) via a staged binary ladder: six steps that each
+#      test x >= 2^s for s = 32, 16, 8, 4, 2, 1 and divide x by 2^s when
+#      it holds (pure integer; a 62-comparison linear ladder made q276's
+#      stage overflow the JVM's 64 KB method limit under codegen).
 #   2. M = v normalized into [2^31, 2^32) (shift by multiply/div with a
 #      power-of-two table; Q31 mantissa, truncation <= 2^-31 relative).
 #   3. Table reduction: c = 1 + i/64 with i = top 6 mantissa bits;
@@ -136,6 +139,7 @@ Q36 = 1 << 36
 LN2_Q36 = round(math.log(2.0) * Q36)
 _LNC_Q36 = [round(math.log(1.0 + i / 64.0) * Q36) for i in range(64)]
 _POW2 = [1 << k for k in range(32)]  # _POW2[k] = 2^k
+_LADDER = (32, 16, 8, 4, 2, 1)  # binary-search shifts; covers e <= 63
 
 
 def _idiv(a: str, b: str, dialect: str) -> str:
@@ -168,7 +172,7 @@ def det_ln_q36_stages(
     """
     d = dialect
     s_v: dict[str, str] = {}
-    s_e: dict[str, str] = {}
+    s_ladder: list[dict[str, str]] = [{} for _ in _LADDER]
     s_m: dict[str, str] = {}
     s_r: dict[str, str] = {}
     s_z: dict[str, str] = {}
@@ -176,11 +180,19 @@ def det_ln_q36_stages(
     for p, expr in args.items():
         v, e, m, r, z = f"{p}_v", f"{p}_e", f"{p}_m", f"{p}_r", f"{p}_z"
         s_v[v] = f"greatest(CAST({expr} AS BIGINT), CAST(1 AS BIGINT))"
-        ladder = " + ".join(
-            f"(CASE WHEN {v} >= {1 << k} THEN 1 ELSE 0 END)"
-            for k in range(1, 63)
-        )
-        s_e[e] = f"({ladder})"
+        # Binary ladder: step j tests x >= 2^sh, adding sh to e and
+        # dividing x by 2^sh when it holds; the last step writes e.
+        x, e_acc = v, "0"
+        for j, sh in enumerate(_LADDER):
+            hit = f"{x} >= {1 << sh}"
+            last = j == len(_LADDER) - 1
+            e_j = e if last else f"{p}_e{j}"
+            s_ladder[j][e_j] = f"({e_acc} + (CASE WHEN {hit} THEN {sh} ELSE 0 END))"
+            if not last:
+                s_ladder[j][f"{p}_x{j}"] = (
+                    f"(CASE WHEN {hit} THEN {_idiv(x, str(1 << sh), d)} ELSE {x} END)"
+                )
+            x, e_acc = f"{p}_x{j}", e_j
         # Normalize to Q31 mantissa in [2^31, 2^32). Index clamps keep the
         # not-taken CASE branch in-domain when an engine evaluates both.
         mul = _elem(_POW2, f"greatest(1, 32 - {e})", d)
@@ -203,13 +215,16 @@ def det_ln_q36_stages(
         s_ln[f"{p}_ln"] = (
             f"({e} * {LN2_Q36} + {lnc} + 2 * ({z} + {_idiv(z3, '3', d)}))"
         )
-    return [s_v, s_e, s_m, s_r, s_z, s_ln]
+    return [s_v, *s_ladder, s_m, s_r, s_z, s_ln]
 
 
 def det_ln_q36_py(v: int) -> int:
     """Pure-Python reference twin of the staged SQL (exact big-int ops)."""
     v = max(int(v), 1)
-    e = sum(1 for k in range(1, 63) if v >= 1 << k)
+    e, x = 0, v
+    for sh in _LADDER:
+        if x >= 1 << sh:
+            e, x = e + sh, x // (1 << sh)
     # SQL lookups are 1-based (element k holds 2^(k-1)): index 32-e is
     # 2^(31-e); index e-30 is 2^(e-31).
     m = v * _POW2[31 - e] if e <= 31 else v // _POW2[e - 31]

@@ -52,11 +52,9 @@ POSITIVE_THRESHOLD = 0.05  # sentiment_analysis.py:49
 NEGATIVE_THRESHOLD = -0.05  # sentiment_analysis.py:51
 
 
-def _valence_map() -> Column:
-    pairs: list[Column] = []
-    for w, v in VALENCE.items():
-        pairs.extend([F.lit(w), F.lit(float(v))])
-    return F.create_map(*pairs)
+def _valence_map_sql() -> str:
+    # DOUBLE literals ("3.0D"): a bare 3.0 is a DECIMAL in Spark SQL.
+    return "map(" + ", ".join(f"'{w}', {float(v)!r}D" for w, v in VALENCE.items()) + ")"
 
 
 def compound_score_expr(tokens_col: str) -> Column:
@@ -64,12 +62,14 @@ def compound_score_expr(tokens_col: str) -> Column:
     valences, normalized to (-1, 1) by s/sqrt(s²+15).
 
     One fold over the token array, map lookup per token — all JVM-side.
+    Built as SQL text so the lexicon map reaches the JVM in one call
+    instead of three py4j round trips per entry.
     """
-    lookups = F.transform(
-        F.col(tokens_col), lambda t: F.coalesce(F.element_at(_valence_map(), t), F.lit(0.0))
+    s = (
+        f"aggregate(transform({tokens_col}, t -> coalesce(element_at({_valence_map_sql()}, t), 0.0D)), "
+        "0.0D, (acc, x) -> acc + x)"
     )
-    s = F.aggregate(lookups, F.lit(0.0), lambda acc, x: acc + x)
-    return s / F.sqrt(s * s + 15.0)
+    return F.expr(f"{s} / sqrt({s} * {s} + 15.0D)")
 
 
 def sentiment_label_expr(score_col: Column | str) -> Column:

@@ -28,6 +28,14 @@ star expansion (:func:`pairs_within_groups` ``max_group``) so no key can
 trigger a quadratic pair blow-up or an unbounded array collect. All
 hashing uses md5 (stable, engine-portable, seed-prefixed) — NOT Spark's
 ``hash()``, whose values would not be reproducible in the DuckDB oracle.
+
+The shingle, MinHash, band-key and pair-generation expressions are built
+as Spark SQL text and sent with one ``F.expr``/``selectExpr`` call per
+projection: each ``F.lit``/``F.col`` of a node-by-node Column build is
+three py4j round trips, which made ``minhash_candidates`` ~1,600
+driver→JVM calls before any job ran — a fixed cost per curation pass
+and per streaming micro-batch. Catalyst receives the same expression
+tree either way, so plans and results do not change.
 """
 
 from __future__ import annotations
@@ -74,6 +82,12 @@ def first_wins(df: DataFrame, key_cols: list[str], order_cols: list[Column]) -> 
     )
 
 
+def _shingles_sql(tokens_col: str, k: int) -> str:
+    # element_at is 1-based; i ranges over 0..size-k.
+    gram = ", ".join(f"element_at({tokens_col}, i + {j} + 1)" for j in range(k))
+    return f"transform(sequence(0, size({tokens_col}) - {k}), i -> concat_ws(' ', {gram}))"
+
+
 def shingles_from_tokens(tokens_col: str, k: int = 5) -> Column:
     """k-gram word shingles from a MATERIALIZED tokens column.
 
@@ -83,13 +97,7 @@ def shingles_from_tokens(tokens_col: str, k: int = 5) -> Column:
     O(len²) per row (measured 24× slowdown at sf0.1). Use
     :func:`with_shingles` which stages tokens through a select first.
     """
-    toks = F.col(tokens_col)
-
-    def gram(i: Column) -> Column:
-        # element_at is 1-based; i ranges over 0..size-k.
-        return F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)])
-
-    return F.transform(F.sequence(F.lit(0), F.size(toks) - k), gram)
+    return F.expr(_shingles_sql(tokens_col, k))
 
 
 def with_shingles(
@@ -100,82 +108,44 @@ def with_shingles(
     Docs shorter than k tokens are dropped (Spark's ``sequence`` would
     count DOWN for a negative span, and ANSI mode rejects element_at(0)).
     """
-    toked = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")).filter(
-        F.size("_toks") >= k
+    toked = df.selectExpr(id_col, f"split({text_col}, ' ') AS _toks").filter(
+        f"size(_toks) >= {k}"
     )
-    return toked.select(F.col(id_col), shingles_from_tokens("_toks", k).alias(out))
-
-
-def minhash_lanes(shingles_col: str, n_hashes: int = 4, lane_hex: int = 8) -> list[Column]:
-    """n min-hash signature columns via md5 lane-splitting: each lane an
-    8-hex-char (32-bit) slice of a group md5. Row-local (array_min over
-    transform) — zero shuffles; lexicographic min over fixed-width hex ≡
-    numeric min over uniform 32-bit values.
-
-    NOTE: each lane expression here recomputes its group's md5 per
-    shingle (interpreted HOFs get no CSE across expressions — 4× the
-    hashing for 4 lanes/group). :func:`with_minhash` stages the md5
-    arrays through a select so each group hashes ONCE; prefer it. Kept
-    as the definitional form for single-lane callers and tests.
-    """
-    def lane_fn(group: int, sub: int):
-        prefix = F.lit(f"{group}:")
-
-        def h(s: Column) -> Column:
-            return F.substring(F.md5(F.concat(prefix, s)), 1 + sub * lane_hex, lane_hex)
-
-        return h
-
-    out: list[Column] = []
-    for lane in range(n_hashes):
-        group, sub = lane // 4, lane % 4  # 4 lanes per md5
-        out.append(
-            F.array_min(F.transform(F.col(shingles_col), lane_fn(group, sub))).alias(
-                f"sig_{lane}"
-            )
-        )
-    return out
+    return toked.selectExpr(id_col, f"{_shingles_sql('_toks', k)} AS {out}")
 
 
 def with_minhash(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 4, k: int = 5
 ) -> DataFrame:
-    """(id, sig_0..sig_{n-1}) minhash signature table.
+    """(id, sig_0..sig_{n-1}) minhash signature table via md5
+    lane-splitting: each lane an 8-hex-char (32-bit) slice of a group
+    md5, 4 lanes per group. Row-local (array_min over transform) — zero
+    shuffles; lexicographic min over fixed-width hex ≡ numeric min over
+    uniform 32-bit values.
 
     The md5 array for each 4-lane group is STAGED through its own select
     (same CollapseProject-safe pattern as :func:`with_shingles`: a
     multiply-referenced expensive expression is not inlined), so each
     group's md5 runs once per shingle and the 4 lanes are cheap substring
     slices over the materialized array — 4× less hashing than evaluating
-    the definitional per-lane expressions. Values are bit-identical to
-    :func:`minhash_lanes`.
+    one md5 per lane (interpreted HOFs get no CSE across expressions).
     """
     sh = with_shingles(df, id_col, text_col, k)
     n_groups = (n_hashes + 3) // 4
-
-    # Closure factories, NOT default-arg lambdas: a two-parameter lambda
-    # (even `lambda x, g=0:`) is treated by F.transform as the
-    # (element, index) form and the "constant" gets bound to the index.
-    def md5_fn(prefix: str):
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    def slice_fn(sub: int, lane_hex: int = 8):
-        return lambda x: F.substring(x, 1 + sub * lane_hex, lane_hex)
-
-    staged = sh.select(
-        F.col(id_col),
+    lane_hex = 8
+    staged = sh.selectExpr(
+        id_col,
         *[
-            F.transform("shingles", md5_fn(f"{g}:")).alias(f"_md5_{g}")
+            f"transform(shingles, s -> md5(concat('{g}:', s))) AS _md5_{g}"
             for g in range(n_groups)
         ],
     )
     lanes = [
-        F.array_min(F.transform(f"_md5_{lane // 4}", slice_fn(lane % 4))).alias(
-            f"sig_{lane}"
-        )
+        f"array_min(transform(_md5_{lane // 4}, "
+        f"h -> substring(h, {1 + (lane % 4) * lane_hex}, {lane_hex}))) AS sig_{lane}"
         for lane in range(n_hashes)
     ]
-    return staged.select(F.col(id_col), *lanes)
+    return staged.selectExpr(id_col, *lanes)
 
 
 def pairs_within_groups(
@@ -216,17 +186,12 @@ def pairs_within_groups(
     counting callers — topic coherence — need every pair and bound
     group size upstream by a broadcast vocab join).
     """
+    collect = f"array_sort(collect_set({payload_col})) AS _ds"
     if max_group is None:
-        grouped = (
-            df.groupBy(*key_cols)
-            .agg(F.array_sort(F.collect_set(payload_col)).alias("_ds"))
-            .filter(F.size("_ds") >= 2)
-        )
+        grouped = df.groupBy(*key_cols).agg(F.expr(collect)).filter("size(_ds) >= 2")
         return _all_pairs(grouped)
 
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*key_cols)
+    keys = ", ".join(key_cols)
     # Both window functions share one WindowExec over one hash exchange
     # on key_cols; the small-group groupBy rides the same partitioning.
     # The STATIC plan shows that exchange once per union branch (the
@@ -238,20 +203,23 @@ def pairs_within_groups(
     # oversized partitions to disk, unlike a collect_set agg buffer
     # which cannot.
     sized = (
-        df.select(*key_cols, F.col(payload_col).alias("_d"))
-        .withColumn("_cnt", F.count("*").over(w))
-        .withColumn("_minp", F.min("_d").over(w))
-        .filter(F.col("_cnt") >= 2)
+        df.selectExpr(*key_cols, f"{payload_col} AS _d")
+        .selectExpr(
+            "*",
+            f"count(*) OVER (PARTITION BY {keys}) AS _cnt",
+            f"min(_d) OVER (PARTITION BY {keys}) AS _minp",
+        )
+        .filter("_cnt >= 2")
     )
     small = (
-        sized.filter(F.col("_cnt") <= max_group)
+        sized.filter(f"_cnt <= {int(max_group)}")
         .groupBy(*key_cols)
-        .agg(F.array_sort(F.collect_set("_d")).alias("_ds"))
-        .filter(F.size("_ds") >= 2)
+        .agg(F.expr("array_sort(collect_set(_d)) AS _ds"))
+        .filter("size(_ds) >= 2")
     )
-    star = sized.filter(
-        (F.col("_cnt") > max_group) & (F.col("_d") != F.col("_minp"))
-    ).select(F.struct(F.col("_minp").alias("a"), F.col("_d").alias("b")).alias("p"))
+    star = sized.filter(f"_cnt > {int(max_group)} AND _d != _minp").selectExpr(
+        "struct(_minp AS a, _d AS b) AS p"
+    )
     return _all_pairs(small).unionByName(star)
 
 
@@ -260,18 +228,9 @@ def _all_pairs(grouped: DataFrame) -> DataFrame:
     # explode_outer: the pair array is non-empty (size(_ds) >= 2 upstream),
     # and plain explode's inferred size>0 filter would re-evaluate the
     # nested pair-generation transform once per group (see SCALE.md).
-    return grouped.select(
-        F.explode_outer(
-            F.flatten(
-                F.transform(
-                    "_ds",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("_ds"), i + F.lit(2), F.size("_ds")),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
+    return grouped.selectExpr(
+        "explode_outer(flatten(transform(_ds, (x, i) -> transform("
+        "slice(_ds, i + 2, size(_ds)), y -> struct(x AS a, y AS b))))) AS p"
     )
 
 
@@ -289,15 +248,13 @@ def band_keys(
     assert n_hashes % bands == 0
     rows_per_band = n_hashes // bands
     with_sig = with_minhash(df, id_col, text_col, n_hashes, k)
-    band_cols = [
-        F.md5(F.concat_ws("|", F.lit(str(b)), *[F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(
-            "band_key"
+    band_keys_sql = ", ".join(
+        "md5(concat_ws('|', '{}', {}))".format(
+            b, ", ".join(f"sig_{b * rows_per_band + r}" for r in range(rows_per_band))
         )
         for b in range(bands)
-    ]
-    return with_sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band_key")
     )
+    return with_sig.selectExpr(id_col, f"explode(array({band_keys_sql})) AS band_key")
 
 
 def minhash_candidates(
@@ -319,12 +276,12 @@ def minhash_candidates(
     degenerate hot buckets so adversarial corpora (millions of
     identical docs sharing every band) stay linear.
     """
-    banded = band_keys(df, id_col, text_col, n_hashes, bands, k).select(
-        F.struct(F.col(id_col)).alias("d"), "band_key"
+    banded = band_keys(df, id_col, text_col, n_hashes, bands, k).selectExpr(
+        f"struct({id_col}) AS d", "band_key"
     )
     return (
         pairs_within_groups(banded, ["band_key"], max_group=max_group)
-        .select(F.col(f"p.a.{id_col}").alias("id_a"), F.col(f"p.b.{id_col}").alias("id_b"))
+        .selectExpr(f"p.a.{id_col} AS id_a", f"p.b.{id_col} AS id_b")
         .distinct()
     )
 

@@ -22,6 +22,19 @@ embarrassingly parallel, no shuffle, and TakeOrderedAndProject handles the
 top-k merge. For all-pairs workloads use `lsh_bucket_ann` (random
 hyperplane signs → bucket join), which turns O(n²) into a per-bucket
 product like MinHash banding does for text.
+
+Expressions are built as Spark SQL text: every formula here is written
+once, in a private ``_*_sql`` function returning its text, and the public
+helpers return ``F.expr`` of that text and take column names or SQL text
+rather than ``Column``s.
+Assembling a lambda-bearing expression node by node through the
+DataFrame API costs three py4j round trips per ``F.lit``/``F.col``
+(~90 µs each), so building ``lsh_bucket_ann`` took ~2,500 driver→JVM
+calls before any job ran — a fixed cost paid per curation pass, DAG run
+and streaming micro-batch. One ``F.expr``/``selectExpr`` per projection
+ships the same expression tree in one call. Literals are written with
+their Column-API types (``0.5D``/``1e4`` doubles: a bare ``0.5`` is a
+DECIMAL in Spark SQL), so Catalyst sees the same tree, plans and results.
 """
 
 from __future__ import annotations
@@ -35,74 +48,98 @@ from pyspark.sql import functions as F
 QUANT_SCALE = 1_000_000
 
 
-def _qint(arr: Column) -> Column:
+def _qint_sql(arr: str) -> str:
+    return (
+        f"transform({arr}, c -> "
+        f"CAST(floor(CAST(c AS DOUBLE) * {QUANT_SCALE} + 0.5D) AS BIGINT))"
+    )
+
+
+def _qint(arr: str) -> Column:
     """Components quantized to int64 at 1e-6 resolution via
     floor(x·scale + 0.5) — pure IEEE ops, so identical in Spark and
     DuckDB for identical input doubles (native round() implementations
     diverge at decimal-representation boundaries; see :func:`qround`)."""
-    return F.transform(
-        arr,
-        lambda x: F.floor(x.cast("double") * QUANT_SCALE + F.lit(0.5)).cast("long"),
+    return F.expr(_qint_sql(arr))
+
+
+def _dot_q_sql(aq: str, bq: str) -> str:
+    return (
+        f"CAST(aggregate(zip_with({aq}, {bq}, (l, r) -> l * r), "
+        "CAST(0 AS BIGINT), (acc, p) -> acc + p) AS DOUBLE)"
     )
 
 
-def dot_q(aq: Column, bq: Column) -> Column:
+def dot_q(aq: str, bq: str) -> Column:
     """Dot product over PRE-QUANTIZED int64 arrays (see :func:`_qint`) —
     the hot-path form: stage the quantized array once per vector and
     score many pairs against it, instead of re-quantizing both sides per
     pair. Returns double in QUANT_SCALE² units."""
-    return F.aggregate(
-        F.zip_with(aq, bq, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
+    return F.expr(_dot_q_sql(aq, bq))
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot(a: str, b: str) -> Column:
     """Quantized-exact dot product: int64 sum of quantized component
     products (exactly associative — engine/order independent), returned
     as double in QUANT_SCALE² units."""
-    return dot_q(_qint(a), _qint(b))
+    return F.expr(_dot_q_sql(_qint_sql(a), _qint_sql(b)))
 
 
-def norm_q(aq: Column) -> Column:
-    """L2 norm over a PRE-QUANTIZED int64 array, in QUANT_SCALE units."""
-    return F.sqrt(
-        F.aggregate(
-            aq, F.lit(0).cast("long"), lambda acc, x: acc + x * x
-        ).cast("double")
+def _norm_q_sql(aq: str) -> str:
+    return (
+        f"sqrt(CAST(aggregate({aq}, CAST(0 AS BIGINT), "
+        "(acc, c) -> acc + c * c) AS DOUBLE))"
     )
 
 
-def norm(a: Column) -> Column:
+def norm_q(aq: str) -> Column:
+    """L2 norm over a PRE-QUANTIZED int64 array, in QUANT_SCALE units."""
+    return F.expr(_norm_q_sql(aq))
+
+
+def norm(a: str) -> Column:
     """Quantized-exact L2 norm in QUANT_SCALE units: sqrt of the exact
     int64 sum of squares (sqrt input is int64-exact → IEEE-deterministic)."""
-    return norm_q(_qint(a))
+    return F.expr(_norm_q_sql(_qint_sql(a)))
 
 
-def cosine(a: Column, b: Column) -> Column:
+def _cos_q_sql(aq: str, bq: str, a_nrm: str, b_nrm: str) -> str:
+    """Cosine from pre-quantized arrays and their staged norms — the
+    division grouping every cosine here shares (identical doubles)."""
+    return f"({_dot_q_sql(aq, bq)} / ({a_nrm} * {b_nrm}))"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    qa, qb = _qint_sql(a), _qint_sql(b)
+    return _cos_q_sql(qa, qb, _norm_q_sql(qa), _norm_q_sql(qb))
+
+
+def cosine(a: str, b: str) -> Column:
     """Cosine over quantized-exact dot/norms — unitless (scales cancel),
     deterministic across engines and evaluation orders."""
-    return dot(a, b) / (norm(a) * norm(b))
+    return F.expr(_cosine_sql(a, b))
 
 
-def sq_l2_q(aq: Column, bq: Column) -> Column:
+def _sq_l2_q_sql(aq: str, bq: str) -> str:
+    return (
+        f"aggregate(zip_with({aq}, {bq}, (l, r) -> (l - r) * (l - r)), "
+        "CAST(0 AS BIGINT), (acc, p) -> acc + p)"
+    )
+
+
+def sq_l2_q(aq: str, bq: str) -> Column:
     """Squared L2 over PRE-QUANTIZED int64 arrays (hot-path form of
     :func:`sq_l2` — stage :func:`_qint` once per vector when scoring
     many pairs)."""
-    return F.aggregate(
-        F.zip_with(aq, bq, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(_sq_l2_q_sql(aq, bq))
 
 
-def sq_l2(a: Column, b: Column) -> Column:
+def sq_l2(a: str, b: str) -> Column:
     """Quantized-exact squared L2 distance: int64 sum of squared
     quantized component differences (QUANT_SCALE² units). Being an exact
     integer, it ranks without ANY rounding — the k-means assignment
     argmin needs no 6dp tiebreak epsilon at all."""
-    return sq_l2_q(_qint(a), _qint(b))
+    return F.expr(_sq_l2_q_sql(_qint_sql(a), _qint_sql(b)))
 
 
 def qround(c: Column, d: int) -> Column:
@@ -116,9 +153,17 @@ def qround(c: Column, d: int) -> Column:
     IEEE multiply/floor/divide: identical doubles in → identical doubles
     out on both engines. (Half-ties round toward +inf rather than away
     from zero — applied identically on both sides, so parity is by
-    construction.) SQL twin: plans/embeddings_plans.py:_round_sql."""
+    construction.) SQL-text twin: :func:`_round_sql`."""
     s = float(10**d)
     return F.floor(c * F.lit(s) + F.lit(0.5)) / F.lit(s)
+
+
+def _round_sql(expr: str, d: int) -> str:
+    """:func:`qround` as SQL text, valid in both Spark SQL and DuckDB
+    (the DuckDB oracles use it too): ``1e{d}`` is a DOUBLE in both, and
+    the DECIMAL ``0.5`` is widened to the same double 0.5 in the add."""
+    s = f"1e{d}"
+    return f"(floor(({expr}) * {s} + 0.5) / {s})"
 
 
 def cosine_topk(
@@ -137,25 +182,27 @@ def cosine_topk(
     # broadcast — an inline cosine would re-quantize and re-fold them
     # once per corpus row. Same division grouping as cosine() ->
     # identical doubles.
-    q2 = query_vec.select(
-        _qint(F.col("qv")).alias("_qqv"), norm(F.col("qv")).alias("_qn")
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(q2))
-        .withColumn(
-            "cos_sim",
-            qround(
-                dot_q(_qint(F.col(vec_col)), F.col("_qqv"))
-                / (norm(F.col(vec_col)) * F.col("_qn")),
-                4,
-            ),
-        )
-        .select(id_col, "cos_sim")
+    q2 = query_vec.selectExpr(*_query_stage_sql("qv"))
+    scored = emb.crossJoin(F.broadcast(q2)).selectExpr(
+        id_col, f"{_round_sql(_cos_vs_query_sql(vec_col), 4)} AS cos_sim"
     )
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def hyperplane_sign_bucket(qvec_col: Column, planes: list[list[float]]) -> Column:
+def _query_stage_sql(qv: str) -> tuple[str, str]:
+    """(``_qqv``, ``_qn``) projections: a query vector's quantized array
+    and norm, staged once in a broadcast instead of once per corpus row."""
+    qq = _qint_sql(qv)
+    return f"{qq} AS _qqv", f"{_norm_q_sql(qq)} AS _qn"
+
+
+def _cos_vs_query_sql(vec_col: str) -> str:
+    """Cosine of ``vec_col`` against the staged ``_qqv``/``_qn`` query."""
+    q = _qint_sql(vec_col)
+    return _cos_q_sql(q, "_qqv", _norm_q_sql(q), "_qn")
+
+
+def _hyperplane_sign_bucket_sql(qvec: str, planes: list[list[float]]) -> str:
     """Random-hyperplane LSH bucket id: sign bit per plane, packed to a long.
 
     Takes a PRE-QUANTIZED vector column (:func:`_qint` staged once per
@@ -171,16 +218,11 @@ def hyperplane_sign_bucket(qvec_col: Column, planes: list[list[float]]) -> Colum
 
     bits = []
     for i, p in enumerate(planes):
-        qlit = F.array(
-            *[F.lit(int(math.floor(float(x) * QUANT_SCALE + 0.5))) for x in p]
-        )
+        qlit = ", ".join(str(int(math.floor(float(x) * QUANT_SCALE + 0.5))) for x in p)
         bits.append(
-            F.when(dot_q(qvec_col, qlit) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+            f"(CASE WHEN {_dot_q_sql(qvec, f'array({qlit})')} >= 0 THEN {1 << i} ELSE 0 END)"
         )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
+    return f"CAST({' + '.join(bits)} AS BIGINT)"
 
 
 def ivf_topk(
@@ -203,13 +245,11 @@ def ivf_topk(
     tiny probed-cell list. Recall < 1 by design — q40's brute force is
     the exactness baseline.
     """
-    from pyspark.sql import Window as W
-
-    cent = centroids.select(
-        F.col(id_col).alias("cell_id"),
-        F.col(vec_col).alias("cell_vec"),
-        _qint(F.col(vec_col)).alias("cell_qv"),
-        norm(F.col(vec_col)).alias("cell_nrm"),
+    cent = centroids.selectExpr(
+        f"{id_col} AS cell_id",
+        f"{vec_col} AS cell_vec",
+        f"{_qint_sql(vec_col)} AS cell_qv",
+        f"{_norm_q_sql(_qint_sql(vec_col))} AS cell_nrm",
     )
     # stage 1: inverted file — nearest centroid per corpus vector. The
     # corpus vector's quantized array + norm are staged ONCE per row
@@ -224,30 +264,20 @@ def ivf_topk(
     # and the embedding column rejoins afterwards instead of riding the
     # aggregation buffer (an array-typed first() demotes the whole agg
     # to SortAggregate).
+    c_cos = _cos_q_sql("_qv", "cell_qv", "_nrm", "cell_nrm")
     cell_map = (
-        emb.withColumn("_qv", _qint(F.col(vec_col)))
-        .withColumn("_nrm", norm_q(F.col("_qv")))
+        emb.selectExpr("*", f"{_qint_sql(vec_col)} AS _qv")
+        .selectExpr("*", f"{_norm_q_sql('_qv')} AS _nrm")
         .crossJoin(F.broadcast(cent))
-        .select(
-            id_col,
-            "cell_id",
-            qround(
-                dot_q(F.col("_qv"), F.col("cell_qv"))
-                / (F.col("_nrm") * F.col("cell_nrm")),
-                6,
-            ).alias("c_cos"),
-        )
+        .selectExpr(id_col, "cell_id", f"{_round_sql(c_cos, 6)} AS c_cos")
         .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.col("cell_id"), F.struct(F.col("c_cos"), (-F.col("cell_id")).alias("_t"))
-            ).alias("cell_id")
-        )
+        .agg(F.expr("max_by(cell_id, struct(c_cos, -cell_id AS _t)) AS cell_id"))
     )
     # probed cells: nprobe centroids nearest to the query
+    q_cos = _round_sql(_cosine_sql("cell_vec", "qv"), 6)
     probed = (
         cent.crossJoin(F.broadcast(query_vec))
-        .withColumn("q_cos", qround(cosine(F.col("cell_vec"), F.col("qv")), 6))
+        .selectExpr("*", f"{q_cos} AS q_cos")
         .orderBy(F.desc("q_cos"), F.asc("cell_id"))
         .limit(nprobe)
         .select("cell_id")
@@ -258,23 +288,12 @@ def ivf_topk(
     # join's build side shrinks before any vector bytes move (query-side
     # quantization + norm staged in the 1-row broadcast, one fold each
     # instead of one per row)
-    q2 = query_vec.select(
-        _qint(F.col("qv")).alias("_qqv"), norm(F.col("qv")).alias("_qn")
-    )
+    q2 = query_vec.selectExpr(*_query_stage_sql("qv"))
     candidates = emb.select(id_col, vec_col).join(
         cell_map.join(F.broadcast(probed), "cell_id"), id_col
     )
-    scored = (
-        candidates.crossJoin(F.broadcast(q2))
-        .withColumn(
-            "cos_sim",
-            qround(
-                dot_q(_qint(F.col(vec_col)), F.col("_qqv"))
-                / (norm(F.col(vec_col)) * F.col("_qn")),
-                4,
-            ),
-        )
-        .select(id_col, "cell_id", "cos_sim")
+    scored = candidates.crossJoin(F.broadcast(q2)).selectExpr(
+        id_col, "cell_id", f"{_round_sql(_cos_vs_query_sql(vec_col), 4)} AS cos_sim"
     )
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
@@ -312,18 +331,21 @@ def lsh_bucket_ann(
     # when it is referenced more than once). Identical ints -> identical
     # cosines; id stays the leading struct field so array_sort still
     # orders pairs by id.
-    staged = emb.select(F.col(id_col), _qint(F.col(vec_col)).alias("_qv"))
-    bucketed = staged.select(
-        F.struct(
-            F.col(id_col),
-            F.col("_qv"),
-            norm_q(F.col("_qv")).alias("_nrm"),
-        ).alias("d"),
-        hyperplane_sign_bucket(F.col("_qv"), planes).alias("bucket"),
+    staged = emb.selectExpr(id_col, f"{_qint_sql(vec_col)} AS _qv")
+    bucketed = staged.selectExpr(
+        _bucket_payload_sql(id_col),
+        f"{_hyperplane_sign_bucket_sql('_qv', planes)} AS bucket",
     )
     return pairs_within_buckets(
         bucketed, id_col=id_col, min_cos=min_cos, max_bucket=max_bucket
     )
+
+
+def _bucket_payload_sql(id_col: str) -> str:
+    """The ``d`` payload :func:`pairs_within_buckets` expects, from
+    ``id_col`` and a staged quantized ``_qv``: id leads so array_sort
+    orders by it."""
+    return f"struct({id_col}, _qv, {_norm_q_sql('_qv')} AS _nrm) AS d"
 
 
 def pairs_within_buckets(
@@ -348,15 +370,15 @@ def pairs_within_buckets(
         # the collect_list, so the oversized bucket's array is never
         # materialized in an agg buffer (same output as a post-collect
         # size filter; the groupBy reuses the window's exchange).
-        from pyspark.sql import Window as W
-
-        bucketed = bucketed.withColumn(
-            "_bc", F.count("*").over(W.partitionBy("bucket"))
-        ).filter(F.col("_bc") <= max_bucket).drop("_bc")
+        bucketed = (
+            bucketed.selectExpr("*", "count(*) OVER (PARTITION BY bucket) AS _bc")
+            .filter(f"_bc <= {int(max_bucket)}")
+            .drop("_bc")
+        )
     grouped = (
         bucketed.groupBy("bucket")
-        .agg(F.array_sort(F.collect_list("d")).alias("ds"))
-        .filter(F.size("ds") >= 2)
+        .agg(F.expr("array_sort(collect_list(d)) AS ds"))
+        .filter("size(ds) >= 2")
     )
     # Cosine is computed INSIDE the pair transform so each pair scores
     # exactly once: a post-projection .filter(cos_sim >= t) would be
@@ -365,31 +387,15 @@ def pairs_within_buckets(
     # Filtering on the generator's output field cannot sink below the
     # Generate. explode_outer: non-empty by the size>=2 filter; avoids
     # the inferred size>0 filter re-evaluating the pair transform.
-    pairs = grouped.select(
-        F.explode_outer(
-            F.flatten(
-                F.transform(
-                    "ds",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ds"), i + F.lit(2), F.size("ds")),
-                        lambda y: F.struct(
-                            x[id_col].alias("id_a"),
-                            y[id_col].alias("id_b"),
-                            qround(
-                                dot_q(x["_qv"], y["_qv"])
-                                / (x["_nrm"] * y["_nrm"]),
-                                4,
-                            ).alias("cos_sim"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
+    cos = _round_sql(_cos_q_sql("x._qv", "y._qv", "x._nrm", "y._nrm"), 4)
+    pairs = grouped.selectExpr(
+        "explode_outer(flatten(transform(ds, (x, i) -> "
+        "transform(slice(ds, i + 2, size(ds)), y -> struct("
+        f"x.{id_col} AS id_a, y.{id_col} AS id_b, {cos} AS cos_sim))))) AS p"
     )
-    return pairs.filter(F.col("p.cos_sim") >= min_cos).select(
-        F.col("p.id_a").alias("id_a"),
-        F.col("p.id_b").alias("id_b"),
-        F.col("p.cos_sim").alias("cos_sim"),
+    # "D": a bare 0.8 is a DECIMAL literal in Spark SQL
+    return pairs.filter(f"p.cos_sim >= {float(min_cos)!r}D").selectExpr(
+        "p.id_a AS id_a", "p.id_b AS id_b", "p.cos_sim AS cos_sim"
     )
 
 
@@ -430,22 +436,14 @@ def semantic_dedup(
     caps degenerate clusters exactly like ``max_bucket`` in
     :func:`lsh_bucket_ann`; mirror it in any oracle.
     """
-    staged = emb.select(F.col(id_col), _qint(F.col(vec_col)).alias("_qv"))
-    seed_ids = seeds.select(F.col("seed_id").alias(id_col))
+    staged = emb.selectExpr(id_col, f"{_qint_sql(vec_col)} AS _qv")
+    seed_ids = seeds.selectExpr(f"seed_id AS {id_col}")
     corpus = staged.join(F.broadcast(seed_ids), id_col, "left_anti")
     assign = (
         corpus.crossJoin(F.broadcast(seeds))
-        .select(
-            id_col,
-            "seed_id",
-            sq_l2_q(F.col("_qv"), F.col("seed_qv")).alias("_d"),
-        )
+        .selectExpr(id_col, "seed_id", f"{_sq_l2_q_sql('_qv', 'seed_qv')} AS _d")
         .groupBy(id_col)
-        .agg(
-            F.min_by(
-                F.col("seed_id"), F.struct(F.col("_d"), F.col("seed_id"))
-            ).alias("cluster_id")
-        )
+        .agg(F.expr("min_by(seed_id, struct(_d, seed_id)) AS cluster_id"))
     )
     # The assignment subtree feeds THREE consumers (pair generation, the
     # dropped-id derivation, and the survivor anti-join) and Catalyst
@@ -458,20 +456,15 @@ def semantic_dedup(
     members = (
         corpus.join(assign, id_col)
         .unionByName(
-            staged.join(F.broadcast(seed_ids), id_col).withColumn(
-                "cluster_id", F.col(id_col)
+            staged.join(F.broadcast(seed_ids), id_col).selectExpr(
+                "*", f"{id_col} AS cluster_id"
             )
         )
         .localCheckpoint(eager=False)
     )
-    bucketed = members.select(
-        F.struct(
-            F.col(id_col), F.col("_qv"), norm_q(F.col("_qv")).alias("_nrm")
-        ).alias("d"),
-        F.col("cluster_id").alias("bucket"),
-    )
+    bucketed = members.selectExpr(_bucket_payload_sql(id_col), "cluster_id AS bucket")
     pairs = pairs_within_buckets(
         bucketed, id_col=id_col, min_cos=min_cos, max_bucket=max_cluster
     )
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    dropped = pairs.selectExpr(f"id_b AS {id_col}").distinct()
     return members.select(id_col, "cluster_id").join(dropped, id_col, "left_anti")

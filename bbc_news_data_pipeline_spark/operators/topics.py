@@ -22,7 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.ml.clustering import LDA, LDAModel
-from pyspark.ml.feature import CountVectorizer, CountVectorizerModel, RegexTokenizer, StopWordsRemover
+from pyspark.ml.feature import CountVectorizer, CountVectorizerModel, RegexTokenizer
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,14 +49,18 @@ def tokenize(
     with the stopword wiring FIXED per SURVEY §2.13). ``max_tokens``
     reproduces the reference's first-5000-words truncation (SURVEY T6,
     stats_visualization.py:428) via ``slice`` — a bound on per-row work
-    that also caps skew from pathological documents."""
+    that also caps skew from pathological documents.
+
+    The stop list is one SQL ``filter`` (same output as ``StopWordsRemover``:
+    tokens are lowercased and every stop word is lowercase), shipped in one
+    call — ``StopWordsRemover`` sends its list to the JVM word by word.
+    """
     tok = RegexTokenizer(inputCol=text_col, outputCol="_raw_tokens", pattern=r"\s+")
-    remover = StopWordsRemover(
-        inputCol="_raw_tokens", outputCol="tokens", stopWords=list(EN_STOPWORDS)
-    )
-    out = remover.transform(tok.transform(df))
-    tokens = F.slice("tokens", 1, max_tokens) if max_tokens else F.col("tokens")
-    return out.select(F.col(id_col), tokens.alias("tokens"))
+    stop = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
+    tokens = f"filter(_raw_tokens, t -> NOT t IN ({stop}))"
+    if max_tokens:
+        tokens = f"slice({tokens}, 1, {max_tokens})"
+    return tok.transform(df).selectExpr(id_col, f"{tokens} AS tokens")
 
 
 def fit_lda(
@@ -97,23 +101,34 @@ def fit_lda(
     return TopicModelBundle(k=k, cv_model=cv_model, lda_model=lda_model, tokens_df=tokens)
 
 
+def _sql_str(s: str) -> str:
+    """A Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def topic_words(bundle: TopicModelBundle, topn: int = 10) -> DataFrame:
     """(topic_id, rank, word, weight) — the reference's topic_words_df
     shape (topic_modeling.py:34-40) via describeTopics + posexplode +
-    vocabulary lookup (a tiny broadcast array literal)."""
-    vocab = F.array(*[F.lit(w) for w in bundle.cv_model.vocabulary])
+    vocabulary lookup. describeTopics is a k·topn-row local table
+    (collecting it runs no Spark job), so only its k·topn term indices
+    are mapped to words, on the driver, and shipped as one per-topic
+    array literal: the cost does not grow with the vocabulary, which a
+    literal of the whole vocabulary would send to the JVM word by word.
+    """
+    vocab = bundle.cv_model.vocabulary
     desc = bundle.lda_model.describeTopics(topn)
-    return (
-        desc.select(
-            F.col("topic").alias("topic_id"),
-            F.posexplode(F.arrays_zip("termIndices", "termWeights")).alias("pos", "tw"),
-        )
-        .select(
-            "topic_id",
-            (F.col("pos") + 1).alias("rank"),
-            F.element_at(vocab, F.col("tw.termIndices") + 1).alias("word"),
-            F.col("tw.termWeights").cast("double").alias("weight"),
-        )
+    per_topic = ", ".join(
+        "array(" + ", ".join(_sql_str(vocab[i]) for i in r["termIndices"]) + ")"
+        for r in sorted(desc.collect(), key=lambda r: r["topic"])
+    )
+    return desc.selectExpr(
+        "topic AS topic_id", "posexplode(arrays_zip(termIndices, termWeights)) AS (pos, tw)"
+    ).selectExpr(
+        "topic_id",
+        "pos + 1 AS rank",
+        # topic ids are 0..k-1, so topic_id + 1 indexes its word array
+        f"element_at(element_at(array({per_topic}), topic_id + 1), pos + 1) AS word",
+        "CAST(tw.termWeights AS DOUBLE) AS weight",
     )
 
 

@@ -16,7 +16,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.similarity import cosine, cosine_topk, lsh_bucket_ann
+from ..operators.similarity import _round_sql, cosine_topk, lsh_bucket_ann
 from ..sources.tables import load
 from .dedup_plans import _hex2int_sql
 from .registry import Query
@@ -40,18 +40,6 @@ _NORM = (
 
 def _cos_sql(a: str, b: str) -> str:
     return f"({_DOT.format(a=a, b=b)} / ({_NORM.format(a=a)} * {_NORM.format(a=b)}))"
-
-
-def _round_sql(expr: str, d: int) -> str:
-    """Deterministic fixed-point rounding, the SQL twin of
-    operators/similarity.py:qround — floor(x·10^d + 0.5)/10^d in pure
-    IEEE ops. DuckDB's native round() rounds in float arithmetic while
-    Spark's rounds the exact decimal expansion; on a 6dp boundary value
-    the two disagree and rank-on-rounded-score queries flip a top-k
-    member (observed at sf0.1). This form gives identical doubles on
-    both engines for identical inputs."""
-    s = f"1e{d}"
-    return f"(floor(({expr}) * {s} + 0.5) / {s})"
 
 
 # ---------------------------------------------------------------------------
@@ -85,9 +73,9 @@ def q41_nearest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("probe_id"),
-        _qint(F.col("embedding")).alias("probe_qv"),
+        _qint("embedding").alias("probe_qv"),
         F.col("label").alias("probe_label"),
-        norm(F.col("embedding")).alias("probe_nrm"),
+        norm("embedding").alias("probe_nrm"),
     )
     # Target quantization + norm staged once per vector, probe ones once
     # in the tiny broadcast — the scoring row multiplies |probes| per
@@ -95,8 +83,8 @@ def q41_nearest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # division grouping as cosine() -> identical doubles.
     targets = (
         emb.filter(F.col("vec_id") >= 8)
-        .withColumn("_qv", _qint(F.col("embedding")))
-        .withColumn("_nrm", norm(F.col("embedding")))
+        .withColumn("_qv", _qint("embedding"))
+        .withColumn("_nrm", norm("embedding"))
     )
     scored = targets.crossJoin(F.broadcast(probes)).select(
         "vec_id",
@@ -104,7 +92,7 @@ def q41_nearest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "probe_label",
         qround(
-            dot_q(F.col("_qv"), F.col("probe_qv"))
+            dot_q("_qv", "probe_qv")
             / (F.col("_nrm") * F.col("probe_nrm")),
             6,
         ).alias("cos6"),
@@ -336,12 +324,12 @@ def q83_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     seeds = emb.filter(F.col("vec_id") % _Q83_SEED_MOD == 0).select(
-        F.col("vec_id").alias("seed_id"), _qint(F.col("embedding")).alias("seed_qv")
+        F.col("vec_id").alias("seed_id"), _qint("embedding").alias("seed_qv")
     )
     # corpus quantization staged once per row (the assignment scores
     # k seeds per vector); seed quantizations ride the tiny broadcast
     corpus = emb.filter(F.col("vec_id") % _Q83_SEED_MOD != 0).withColumn(
-        "_qv", _qint(F.col("embedding"))
+        "_qv", _qint("embedding")
     )
     # Sort-free argmin: min_by on the composite (d, seed_id) reproduces
     # the (distance asc, seed_id asc) tiebreak as a primitive-typed
@@ -353,7 +341,7 @@ def q83_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "seed_id",
-            sq_l2_q(F.col("_qv"), F.col("seed_qv")).alias("d"),
+            sq_l2_q("_qv", "seed_qv").alias("d"),
         )
         .groupBy("vec_id")
         .agg(
@@ -496,7 +484,7 @@ def q97_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     seeds = emb.filter(F.col("vec_id") % _Q97_SEED_MOD == 0).select(
-        F.col("vec_id").alias("seed_id"), _qint(F.col("embedding")).alias("seed_qv")
+        F.col("vec_id").alias("seed_id"), _qint("embedding").alias("seed_qv")
     )
     return semantic_dedup(
         emb, seeds, min_cos=_Q97_MIN_COS, max_cluster=_Q97_MAX_CLUSTER
@@ -576,7 +564,7 @@ def q107_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     vq = F.array(*[F.lit(v).cast("long") for v in _PI_VQ])
     scored = (
-        emb.select(_qint(F.col("embedding")).alias("xq"))
+        emb.select(_qint("embedding").alias("xq"))
         .withColumn(
             "s",
             F.aggregate(
@@ -677,10 +665,10 @@ def q127_kmeans_two_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     seeds = emb.filter(F.col("vec_id") % _Q83_SEED_MOD == 0).select(
-        F.col("vec_id").alias("cluster_id"), _qint(F.col("embedding")).alias("cqv")
+        F.col("vec_id").alias("cluster_id"), _qint("embedding").alias("cqv")
     )
     corpus = emb.filter(F.col("vec_id") % _Q83_SEED_MOD != 0).withColumn(
-        "_qv", _qint(F.col("embedding"))
+        "_qv", _qint("embedding")
     )
 
     def assign(centroids: DataFrame) -> DataFrame:
@@ -689,7 +677,7 @@ def q127_kmeans_two_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id",
                 "cluster_id",
-                sq_l2_q(F.col("_qv"), F.col("cqv")).alias("d"),
+                sq_l2_q("_qv", "cqv").alias("d"),
             )
             .groupBy("vec_id")
             .agg(
@@ -831,7 +819,7 @@ def q193_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sums = (
         emb.select(
-            "label", "epoch", F.posexplode(_qint(F.col("embedding"))).alias("dim", "q")
+            "label", "epoch", F.posexplode(_qint("embedding")).alias("dim", "q")
         )
         .groupBy("label", "epoch", "dim")
         .agg(F.sum("q").alias("s"))
@@ -963,9 +951,7 @@ def q186_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[
             F.struct(
                 F.lit(m).alias("m"),
-                _qint(
-                    F.slice("embedding", m * _Q186_SUB + 1, _Q186_SUB)
-                ).alias("qv"),
+                _qint(f"slice(embedding, {m * _Q186_SUB + 1}, {_Q186_SUB})").alias("qv"),
             )
             for m in range(_Q186_M)
         ]
@@ -986,7 +972,7 @@ def q186_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "m",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("seed_qv")).alias("d"),
+                sq_l2_q("qv", "seed_qv").alias("d"),
                 F.col("code").alias("code"),
             ).alias("ds"),
         )
@@ -1116,8 +1102,8 @@ def q231_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.crossJoin(F.broadcast(qrow))
         .select(
             "vec_id",
-            sq_l2_q(F.col("cv"), F.col("qcv")).alias("cdist"),
-            sq_l2_q(F.col("qv"), F.col("quvec")).alias("edist"),
+            sq_l2_q("cv", "qcv").alias("cdist"),
+            sq_l2_q("qv", "quvec").alias("edist"),
         )
         .orderBy("cdist", "vec_id")
         .limit(_Q231_K)
@@ -1125,7 +1111,7 @@ def q231_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact_topk = (
         corpus.crossJoin(F.broadcast(qrow))
-        .select("vec_id", sq_l2_q(F.col("qv"), F.col("quvec")).alias("ed"))
+        .select("vec_id", sq_l2_q("qv", "quvec").alias("ed"))
         .orderBy("ed", "vec_id")
         .limit(_Q231_K)
         .select("vec_id", F.lit(1).alias("in_exact"))
@@ -1265,9 +1251,7 @@ def q216_dim_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus.crossJoin(F.broadcast(query))
             .select(
                 "vec_id",
-                sq_l2_q(
-                    F.slice("qv", 1, d), F.slice("quvec", 1, d)
-                ).alias("dist"),
+                sq_l2_q(f"slice(qv, 1, {d})", f"slice(quvec, 1, {d})").alias("dist"),
             )
             .orderBy("dist", "vec_id")
             .limit(_Q216_K)
@@ -1393,7 +1377,7 @@ def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("cvec")).alias("d"),
+                sq_l2_q("qv", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )
@@ -1403,7 +1387,7 @@ def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probed = (
         cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q(F.col("cvec"), F.col("quvec")).alias("d"))
+        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
         .orderBy("d", "cell")
         .limit(_Q199_NPROBE)
         .select("cell")
@@ -1432,7 +1416,7 @@ def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "m",
             F.struct(
-                sq_l2_q(F.col("sv"), F.col("seed_sv")).alias("d"),
+                sq_l2_q("sv", "seed_sv").alias("d"),
                 F.col("code").alias("code"),
             ).alias("dc"),
         )
@@ -1447,7 +1431,7 @@ def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(subrows)
         .select("s.m", F.col("s.sv").alias("q_sv"))
         .join(seeds, "m")
-        .select("m", "code", sq_l2_q(F.col("q_sv"), F.col("seed_sv")).alias("d_mc"))
+        .select("m", "code", sq_l2_q("q_sv", "seed_sv").alias("d_mc"))
     )
     adc = (
         codes.join(assign, "vec_id")
@@ -1460,7 +1444,7 @@ def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = (
         corpus.crossJoin(F.broadcast(query))
-        .select("vec_id", sq_l2_q(F.col("qv"), F.col("quvec")).alias("ex_d"))
+        .select("vec_id", sq_l2_q("qv", "quvec").alias("ex_d"))
     )
     exact_topk = exact.orderBy("ex_d", "vec_id").limit(_Q199_K)
     hits = adc.join(
@@ -1655,7 +1639,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     M, SUB = _Q186_M, _Q186_SUB
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     cents = qe.filter(F.col("vec_id") < _Q268_NCELL).select(
         F.col("vec_id").alias("cell"),
         F.transform("qv", lambda x: x * _Q268_ASCALE).alias("cvec"),
@@ -1675,7 +1659,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("cvec")).alias("d"),
+                sq_l2_q("qv", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )
@@ -1696,7 +1680,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probed = (
         cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q(F.col("cvec"), F.col("quvec")).alias("d"))
+        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
         .orderBy("d", "cell")
         .limit(_Q268_NPROBE)
         .select("cell")
@@ -1741,7 +1725,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sp",
                 "m",
                 F.struct(
-                    sq_l2_q(F.col("sv"), F.col("cw")).alias("d"),
+                    sq_l2_q("sv", "cw").alias("d"),
                     F.col("code").alias("code"),
                 ).alias("dc"),
             )
@@ -1798,7 +1782,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(*extra, "s.m", F.col("s.qsv").alias("qsv"))
 
     lut_raw = qsubframe(query, F.col("quvec"), []).join(cb_raw, "m").select(
-        "m", "code", sq_l2_q(F.col("qsv"), F.col("cw")).alias("d_mc")
+        "m", "code", sq_l2_q("qsv", "cw").alias("d_mc")
     )
     qres = (
         probed.join(F.broadcast(cents), "cell")
@@ -1806,7 +1790,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cell", F.zip_with("quvec", "cvec", lambda a, b: a - b).alias("qrv"))
     )
     lut_res = qsubframe(qres, F.col("qrv"), ["cell"]).join(cb_res, "m").select(
-        "cell", "m", "code", sq_l2_q(F.col("qsv"), F.col("cw")).alias("d_mc")
+        "cell", "m", "code", sq_l2_q("qsv", "cw").alias("d_mc")
     )
 
     def adc_topk(codes, lut, on):
@@ -1823,7 +1807,7 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc_res = adc_topk(codes_res, lut_res, ["cell", "m", "code"])
     adc_raw = adc_topk(codes_raw, lut_raw, ["m", "code"])
     exact = corpus.crossJoin(F.broadcast(query)).select(
-        "vec_id", sq_l2_q(F.col("qv"), F.col("quvec")).alias("ex_d")
+        "vec_id", sq_l2_q("qv", "quvec").alias("ex_d")
     )
     exact_topk = exact.orderBy("ex_d", "vec_id").limit(_Q268_K)
     mark = exact_topk.select("vec_id", F.lit(1).alias("in_exact"))
@@ -2086,7 +2070,7 @@ def q280_projected_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     u = qe.filter(F.col("vec_id") == 0).select(F.col("qv").alias("uvec"))
     dot = lambda a, b: F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
@@ -2292,7 +2276,7 @@ def q279_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, sq_l2_q
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv")).localCheckpoint(
+    qe = emb.select("vec_id", _qint("embedding").alias("qv")).localCheckpoint(
         eager=False
     )  # both rankings stage from this
     query = qe.filter(F.col("vec_id") == _Q279_QID).select(
@@ -2302,9 +2286,9 @@ def q279_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def topk(d: int | None):
         dist = (
-            sq_l2_q(F.col("qv"), F.col("quvec"))
+            sq_l2_q("qv", "quvec")
             if d is None
-            else sq_l2_q(F.slice("qv", 1, d), F.slice("quvec", 1, d))
+            else sq_l2_q(f"slice(qv, 1, {d})", f"slice(quvec, 1, {d})")
         )
         return (
             corpus.crossJoin(F.broadcast(query))
@@ -2467,14 +2451,14 @@ def q275_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, sq_l2_q
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     query = qe.filter(F.col("vec_id") == _Q275_QID).select(
         F.col("qv").alias("quvec")
     )
     pool = (
         qe.filter(F.col("vec_id") != _Q275_QID)
         .crossJoin(F.broadcast(query))
-        .select("vec_id", "qv", sq_l2_q(F.col("qv"), F.col("quvec")).alias("dq"))
+        .select("vec_id", "qv", sq_l2_q("qv", "quvec").alias("dq"))
         .orderBy("dq", "vec_id")
         .limit(_Q275_POOL)
         .localCheckpoint()  # EAGER: 20 rows feed every round
@@ -2494,7 +2478,7 @@ def q275_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(pick.select(F.col("qv").alias("pk_qv"))))
         .select(
             "vec_id", "qv", "dq",
-            sq_l2_q(F.col("qv"), F.col("pk_qv")).alias("mind"),
+            sq_l2_q("qv", "pk_qv").alias("mind"),
         )
         .localCheckpoint()
     )
@@ -2523,7 +2507,7 @@ def q275_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id", "qv", "dq",
                 F.least(
-                    F.col("mind"), sq_l2_q(F.col("qv"), F.col("pk_qv"))
+                    F.col("mind"), sq_l2_q("qv", "pk_qv")
                 ).alias("mind"),
             )
             .localCheckpoint()
@@ -2644,7 +2628,7 @@ def q274_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     g = qe.filter(F.col("vec_id") == 0).select(F.col("qv").alias("g"))
     corpus = (
         qe.crossJoin(F.broadcast(g))
@@ -2841,12 +2825,12 @@ def q248_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cur = emb.select(
-        "vec_id", _qint(F.col("embedding")).alias("_qv")
+        "vec_id", _qint("embedding").alias("_qv")
     ).localCheckpoint(eager=False)  # K distance scans reference this
     c0 = cur.orderBy("vec_id").limit(1)
     mind = cur.crossJoin(
         F.broadcast(c0.select(F.col("_qv").alias("_cqv")))
-    ).select("vec_id", "_qv", sq_l2_q(F.col("_qv"), F.col("_cqv")).alias("mind"))
+    ).select("vec_id", "_qv", sq_l2_q("_qv", "_cqv").alias("mind"))
     picks = [c0.select(F.lit(0).alias("round"), "vec_id", F.lit(0).cast("long").alias("radius_q"))]
     for k in range(1, _Q248_K):
         best = (
@@ -2871,7 +2855,7 @@ def q248_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id",
                 "_qv",
                 F.least(
-                    F.col("mind"), sq_l2_q(F.col("_qv"), F.col("_cqv"))
+                    F.col("mind"), sq_l2_q("_qv", "_cqv")
                 ).alias("mind"),
             )
             .localCheckpoint(eager=False)  # next round folds onto this
@@ -2995,10 +2979,9 @@ def q265_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qlabel",
         "vec_id",
         (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
-        sq_l2_q(F.col("qv"), F.col("quvec")).alias("d_full"),
+        sq_l2_q("qv", "quvec").alias("d_full"),
         sq_l2_q(
-            F.slice(F.col("qv"), 1, _Q265_TRUNC_D),
-            F.slice(F.col("quvec"), 1, _Q265_TRUNC_D),
+            f"slice(qv, 1, {_Q265_TRUNC_D})", f"slice(quvec, 1, {_Q265_TRUNC_D})"
         ).alias("d_tr"),
     ).localCheckpoint(eager=False)  # both arms rank this frame
     dcgs = {}
@@ -3204,7 +3187,7 @@ def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, sq_l2_q
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
         F.col("vec_id").alias("cell"),
         F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
@@ -3224,7 +3207,7 @@ def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("cvec")).alias("d"),
+                sq_l2_q("qv", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )
@@ -3245,7 +3228,7 @@ def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cd = (
         cents.crossJoin(F.broadcast(query))
         .select(
-            "cell", sq_l2_q(F.col("cvec"), F.col("quvec")).alias("d")
+            "cell", sq_l2_q("cvec", "quvec").alias("d")
         )
         .join(sizes, "cell", "left")
         .select("cell", "d", F.coalesce("sz", F.lit(0).cast("long")).alias("sz"))
@@ -3285,7 +3268,7 @@ def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(cells_df.select("cell")), "cell", "left_semi")
             .crossJoin(F.broadcast(query))
             .select(
-                "vec_id", "cell", sq_l2_q(F.col("qv"), F.col("quvec")).alias("d")
+                "vec_id", "cell", sq_l2_q("qv", "quvec").alias("d")
             )
             .orderBy("d", "vec_id")
             .limit(_Q281_K)
@@ -3295,7 +3278,7 @@ def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     one = topk(single)
     exact_topk = (
         corpus.crossJoin(F.broadcast(query))
-        .select("vec_id", sq_l2_q(F.col("qv"), F.col("quvec")).alias("ex_d"))
+        .select("vec_id", sq_l2_q("qv", "quvec").alias("ex_d"))
         .orderBy("ex_d", "vec_id")
         .limit(_Q281_K)
         .localCheckpoint(eager=False)  # both recall joins read it
@@ -3476,7 +3459,7 @@ def q282_stream_ann_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < _Q282_NCELL).select(
             F.col("vec_id").alias("cell"),
             F.transform(
-                _qint(F.col("embedding")), lambda x: x * _Q282_ASCALE
+                _qint("embedding"), lambda x: x * _Q282_ASCALE
             ).alias("cvec"),
         ).write.mode("overwrite").parquet(f"{state}/centroids")
 
@@ -3611,7 +3594,7 @@ def q285_multiprobe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, sq_l2_q
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
         F.col("vec_id").alias("cell"),
         F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
@@ -3631,7 +3614,7 @@ def q285_multiprobe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("cvec")).alias("d"),
+                sq_l2_q("qv", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )
@@ -3644,7 +3627,7 @@ def q285_multiprobe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     nt = corpus.agg(F.count("*").cast("long").alias("nt"))
     cd = (
         cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q(F.col("cvec"), F.col("quvec")).alias("d"))
+        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
         .join(sizes, "cell", "left")
         .select("cell", "d", F.coalesce("sz", F.lit(0).cast("long")).alias("sz"))
         .localCheckpoint(eager=False)
@@ -3667,7 +3650,7 @@ def q285_multiprobe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         corpus.join(assign, "vec_id")
         .crossJoin(F.broadcast(query))
-        .select("vec_id", "cell", sq_l2_q(F.col("qv"), F.col("quvec")).alias("d"))
+        .select("vec_id", "cell", sq_l2_q("qv", "quvec").alias("d"))
         .localCheckpoint(eager=False)  # 4 budget scans + exact read it
     )
     exact_topk = (
@@ -3812,7 +3795,7 @@ def q286_multiprobe_recall_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, sq_l2_q
 
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint(F.col("embedding")).alias("qv"))
+    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
     cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
         F.col("vec_id").alias("cell"),
         F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
@@ -3836,7 +3819,7 @@ def q286_multiprobe_recall_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("qv"), F.col("cvec")).alias("d"),
+                sq_l2_q("qv", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )
@@ -3850,7 +3833,7 @@ def q286_multiprobe_recall_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     cd = (
         cents.crossJoin(F.broadcast(qset))
         .select(
-            "qid", "cell", sq_l2_q(F.col("cvec"), F.col("quvec")).alias("d")
+            "qid", "cell", sq_l2_q("cvec", "quvec").alias("d")
         )
         .join(sizes, "cell", "left")
         .select(
@@ -3882,7 +3865,7 @@ def q286_multiprobe_recall_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(qset))
         .select(
             "qid", "vec_id", "cell",
-            sq_l2_q(F.col("qv"), F.col("quvec")).alias("d"),
+            sq_l2_q("qv", "quvec").alias("d"),
         )
         .localCheckpoint(eager=False)  # 4 budget scans + exact read it
     )

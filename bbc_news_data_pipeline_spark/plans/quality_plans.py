@@ -1209,7 +1209,7 @@ def q276_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor(mi*1e9) was still environment-sensitive in the driver's
     # DuckDB build (FP contraction / build flags no local probe can
     # reproduce). The whole MI computation now runs in int64 fixed-point
-    # (detmath.det_ln_q36: Q36 log via comparison ladder + table + atanh
+    # (detmath.det_ln_q36: Q36 log via binary comparison ladder + table + atanh
     # cubic, only integer ops): mi_nano never touches a double in EITHER
     # engine, so no float build flag can flip it. _q276_mi_stages builds
     # the identical staged expressions for both dialects.

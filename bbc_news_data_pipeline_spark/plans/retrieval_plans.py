@@ -33,9 +33,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import with_shingles
+from ..operators.similarity import _round_sql
 from ..sources.tables import load
 from .dedup_plans import _hex2int_sql, _shingle_sql
-from .embeddings_plans import _cos_sql, _round_sql
+from .embeddings_plans import _cos_sql
 from .registry import Query
 
 
@@ -406,7 +407,7 @@ def q84_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(qv))
         .select(
             F.col("vec_id").alias("id"),
-            qround(cosine(F.col("embedding"), F.col("qv")), 4).alias("cs"),
+            qround(cosine("embedding", "qv"), 4).alias("cs"),
         )
         .orderBy(F.col("cs").desc(), F.col("id"))
         .limit(_Q84_POOL)
@@ -508,18 +509,18 @@ def q100_semantic_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     ev = emb.filter(F.col("vec_id") % _Q100_EVAL_MOD == 0).select(
-        _qint(F.col("embedding")).alias("_eqv")
+        _qint("embedding").alias("_eqv")
     )
-    ev = ev.withColumn("_enrm", norm_q(F.col("_eqv")))
+    ev = ev.withColumn("_enrm", norm_q("_eqv"))
     corpus = (
         emb.filter(F.col("vec_id") % _Q100_EVAL_MOD != 0)
-        .select("vec_id", _qint(F.col("embedding")).alias("_qv"))
-        .withColumn("_nrm", norm_q(F.col("_qv")))
+        .select("vec_id", _qint("embedding").alias("_qv"))
+        .withColumn("_nrm", norm_q("_qv"))
     )
     scored = corpus.crossJoin(F.broadcast(ev)).select(
         "vec_id",
         qround(
-            dot_q(F.col("_qv"), F.col("_eqv")) / (F.col("_nrm") * F.col("_enrm")), 4
+            dot_q("_qv", "_eqv") / (F.col("_nrm") * F.col("_enrm")), 4
         ).alias("cos"),
     )
     return (

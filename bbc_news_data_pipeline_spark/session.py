@@ -16,6 +16,9 @@ needs so plans behave identically everywhere:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -96,3 +99,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def count_py4j_round_trips() -> Iterator[Callable[[], int]]:
+    """Count py4j gateway commands (Python→JVM round trips, ~90 µs each)
+    sent inside the block; yields a callable giving the running total.
+
+    Wraps ``py4j.clientserver.ClientServerConnection.send_command``, the
+    connection PySpark uses in its default pinned-thread mode. Building
+    a DataFrame runs no job but costs round trips — three per ``F.lit``
+    or ``F.col`` of a node-by-node Column build — so this is the measure
+    of an operator's driver-side construction cost.
+    """
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    lock = threading.Lock()  # concurrent DAG stages send from several threads
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        with lock:
+            sent[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting_send
+    try:
+        yield lambda: sent[0]
+    finally:
+        ClientServerConnection.send_command = send

@@ -110,7 +110,7 @@ def apply_postings_batch(
     # clustered-corpus derivation shared with q268/q281: anchor + own vec
     vecs = (
         batch_df.filter(F.col("vec_id") >= ncell)
-        .select("vec_id", _qint(F.col("embedding")).alias("v"))
+        .select("vec_id", _qint("embedding").alias("v"))
         .withColumn("_ac", F.col("vec_id") % ncell)
         .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
         .select(
@@ -177,7 +177,7 @@ def apply_postings_batch(
         .select(
             "vec_id",
             F.struct(
-                sq_l2_q(F.col("v"), F.col("cvec")).alias("d"),
+                sq_l2_q("v", "cvec").alias("d"),
                 F.col("cell").alias("cell"),
             ).alias("dc"),
         )

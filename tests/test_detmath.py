@@ -141,3 +141,17 @@ def test_det_ln_q36_spark_matches_python_twin(spark):
     got = {r["v"]: r["q_ln"] for r in df.select("v", "q_ln").collect()}
     for v in Q36_INPUTS:
         assert got[v] == det_ln_q36_py(v), v
+
+
+def test_q276_compiles_without_codegen_fallback(spark, sf_dir):
+    """The staged binary ladder keeps q276's generated code under the
+    JVM's 64 KB method limit: with interpreted fallback disabled, a
+    stage that fails to compile raises instead of silently slowing."""
+    from bbc_news_data_pipeline_spark.plans.quality_plans import q276_feature_mi
+
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = q276_feature_mi(spark, sf_dir).collect()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    assert rows

@@ -416,7 +416,7 @@ def test_semantic_dedup_matches_python_twin(spark, vecs, n_seeds, min_cos):
     # quantize seed floats through Spark so both sides see the float32→
     # double value Spark reads (python floats here are float64)
     seeds = emb.filter(F.col("vec_id").isin(*seed_ids)).select(
-        F.col("vec_id").alias("seed_id"), _qint(F.col("embedding")).alias("seed_qv")
+        F.col("vec_id").alias("seed_id"), _qint("embedding").alias("seed_qv")
     )
     got = {
         r.vec_id: r.cluster_id

@@ -1,0 +1,102 @@
+"""Driver-side construction cost of the curation operators, in py4j round
+trips (one Python→JVM gateway command each, ~90 µs).
+
+Building a DataFrame runs no job, but every expression node assembled
+through the Column API is a gateway call, and a curation pass or a
+``foreachBatch`` micro-batch pays that cost on every call. The similarity
+and dedup operators ship their expressions as SQL text, one call per
+projection; these budgets hold them there (node-by-node builds cost
+1,200–2,500 round trips each).
+"""
+
+import gc
+
+import numpy as np
+import pytest
+from pyspark.sql import types as T
+
+from bbc_news_data_pipeline_spark.operators.dedup import minhash_candidates
+from bbc_news_data_pipeline_spark.operators.similarity import (
+    QUANT_SCALE,
+    lsh_bucket_ann,
+    semantic_dedup,
+)
+from bbc_news_data_pipeline_spark.operators.topics import fit_lda, topic_words
+
+
+def _build_trips(counter, build):
+    """Round trips of one build, after a warm-up build so one-off
+    first-use costs are not counted. The cyclic garbage collector is off
+    while counting: releasing py4j proxies sends commands too, and a
+    collection at a random point would add unrelated ones."""
+    build()
+    gc.collect()
+    gc.disable()
+    try:
+        before = counter()
+        build()
+        n = counter() - before
+    finally:
+        gc.enable()
+    assert n > 0, "round-trip counter saw no gateway traffic"
+    return n
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    rng = np.random.default_rng(11)
+    emb = rng.standard_normal((40, 32)).astype(np.float32)
+    emb_df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(emb)],
+        "vec_id long, embedding array<float>",
+    )
+    seed_ids = [0, 10, 20, 30]
+    seed_qv = np.floor(emb[seed_ids].astype(np.float64) * QUANT_SCALE + 0.5).astype(np.int64)
+    seeds = spark.createDataFrame(
+        [(s, [int(x) for x in q]) for s, q in zip(seed_ids, seed_qv)],
+        "seed_id long, seed_qv array<bigint>",
+    )
+    planes = rng.standard_normal((6, 32)).round(6).tolist()
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(20))) for i in range(30)],
+        "doc_id long, text string",
+    )
+    return emb_df, seeds, planes, docs
+
+
+def test_lsh_bucket_ann_budget_and_double_cosine(spark, py4j_round_trips, corpus):
+    emb, _, planes, _ = corpus
+    n = _build_trips(py4j_round_trips, lambda: lsh_bucket_ann(emb, planes, min_cos=0.9))
+    assert n <= 200, n
+    schema = lsh_bucket_ann(emb, planes, min_cos=0.9).schema
+    assert schema["cos_sim"].dataType == T.DoubleType()
+
+
+def test_semantic_dedup_budget(spark, py4j_round_trips, corpus):
+    emb, seeds, _, _ = corpus
+    n = _build_trips(py4j_round_trips, lambda: semantic_dedup(emb, seeds, min_cos=0.9))
+    assert n <= 400, n
+
+
+def test_minhash_candidates_budget(spark, py4j_round_trips, corpus):
+    docs = corpus[3]
+    n = _build_trips(py4j_round_trips, lambda: minhash_candidates(docs, "doc_id", "text"))
+    assert n <= 500, n
+
+
+def test_topic_words_cost_independent_of_vocabulary(spark, py4j_round_trips):
+    trips = {}
+    for vocab in (10, 500):
+        # quotes and backslashes must survive the SQL literal of the words
+        words = [(f"t{i}", f"t{i}'s", f"t{i}\\b")[i % 3] for i in range(vocab)]
+        docs = spark.createDataFrame(
+            [(i, " ".join(words[(i * 40 + j) % vocab] for j in range(40))) for i in range(50)],
+            "id long, text string",
+        )
+        bundle = fit_lda(docs, "text", "id", 2, max_iter=1, min_df=1.0, max_df=50.0)
+        assert sorted(bundle.cv_model.vocabulary) == sorted(words)
+        trips[vocab] = _build_trips(py4j_round_trips, lambda: topic_words(bundle, topn=5))
+        tw = topic_words(bundle, topn=5).collect()
+        assert len(tw) == 10 and {r.word for r in tw} <= set(words)
+        bundle.tokens_df.unpersist()
+    assert trips[500] <= trips[10], trips

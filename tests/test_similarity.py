@@ -49,7 +49,7 @@ def test_quantized_cosine_error_bound(spark, vectors):
         .select(
             F.col("a.vec_id").alias("ia"),
             F.col("b.vec_id").alias("ib"),
-            similarity.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
+            similarity.cosine("a.embedding", "b.embedding").alias("c"),
         )
         .collect()
     )
@@ -270,7 +270,7 @@ def test_pq_codebook_dominates_full_vector_vq(spark, sf_dir):
         emb.filter(F.col("vec_id") % _Q186_SEED_MOD != 0)
         .select("vec_id", _qint("embedding").alias("qv"))
         .crossJoin(F.broadcast(seeds))
-        .select("vec_id", sq_l2_q(F.col("qv"), F.col("seed_qv")).alias("d"))
+        .select("vec_id", sq_l2_q("qv", "seed_qv").alias("d"))
         .groupBy("vec_id")
         .agg(F.min("d").alias("dm"))
         .agg(F.sum("dm"))

@@ -17,7 +17,7 @@ def _seed_centroids(spark, sf_dir, state):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     emb.filter(F.col("vec_id") < NCELL).select(
         F.col("vec_id").alias("cell"),
-        F.transform(_qint(F.col("embedding")), lambda x: x * ASCALE).alias("cvec"),
+        F.transform(_qint("embedding"), lambda x: x * ASCALE).alias("cvec"),
     ).write.mode("overwrite").parquet(f"{state}/centroids")
     return emb
 
@@ -142,7 +142,7 @@ def test_maintained_index_serves_like_fresh_build(spark, sf_dir, tmp_path):
     def serve(postings):
         probed = (
             cents.crossJoin(F.broadcast(query))
-            .select("cell", sq_l2_q(F.col("cvec"), F.col("qv")).alias("d"))
+            .select("cell", sq_l2_q("cvec", "qv").alias("d"))
             .orderBy("d", "cell")
             .limit(3)
             .select("cell")
@@ -152,7 +152,7 @@ def test_maintained_index_serves_like_fresh_build(spark, sf_dir, tmp_path):
             for r in corpus.join(postings.select("vec_id", "cell"), "vec_id")
             .join(F.broadcast(probed), "cell", "left_semi")
             .crossJoin(F.broadcast(query))
-            .select("vec_id", sq_l2_q(F.col("v"), F.col("qv")).alias("d"))
+            .select("vec_id", sq_l2_q("v", "qv").alias("d"))
             .orderBy("d", "vec_id")
             .limit(10)
             .collect()

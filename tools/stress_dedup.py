@@ -128,7 +128,7 @@ def main() -> None:
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_emb = emb.count()
     seeds = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("seed_id"), _qint(F.col("embedding")).alias("seed_qv")
+        F.col("vec_id").alias("seed_id"), _qint("embedding").alias("seed_qv")
     )
     organic_survivors = semantic_dedup(emb, seeds, min_cos=0.3, max_cluster=1024).count()
     for n_dup in (2_000, 20_000):
