@@ -79,7 +79,6 @@ def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
 
 
 def stop_token_count_expr_from(tokens: Column, words: tuple[str, ...] = EN_STOPWORDS_CORE) -> Column:
-    lst = _quoted_list(words)
     return F.size(F.filter(tokens, lambda t: t.isin(*words))).cast("long")
 
 

@@ -186,23 +186,18 @@ def _hf_rows_to_frame(results, label_key: str, score_key: str) -> pd.DataFrame:
     return pd.DataFrame({label_key: labels, score_key: scores})
 
 
-def hf_sentiment_udf(pipeline_factory=None):
-    """Transformer sentiment as an iterator Pandas UDF (reference M7,
-    sentiment_analysis.py:76-112).
-
-    Real plumbing: Arrow batches, model loaded once per executor process
-    (the iterator form), truncation semantics. ``pipeline_factory``
-    injects the classifier callable (built inside the worker, shipped via
-    the closure) — how the wire-format parity test exercises this real
-    branch without model weights. With no factory, the real transformers
-    pipeline is constructed when importable; otherwise the fallback is a
-    DETERMINISTIC STUB (lexicon sign), clearly marked — swap in the real
-    model by installing `transformers`, the Spark side needs no change.
-    """
+def _hf_classifier_udf(pipeline_factory, label_key: str, score_key: str, stub, **hf_kwargs):
+    """Iterator Pandas UDF → struct<``label_key``, ``score_key``> over a
+    HF text-classification pipeline: Arrow batches, classifier built once
+    per executor process (the iterator form), truncation on. The
+    classifier is ``pipeline_factory()`` when injected (built inside the
+    worker, shipped via the closure), else ``transformers.pipeline(
+    **hf_kwargs)`` when importable, else the DETERMINISTIC ``stub``
+    (text → (label, score)), clearly not a model."""
 
     @F.pandas_udf(T.StructType([
-        T.StructField("label", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
+        T.StructField(label_key, T.StringType()),
+        T.StructField(score_key, T.DoubleType()),
     ]))
     def infer(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         clf = None
@@ -212,36 +207,46 @@ def hf_sentiment_udf(pipeline_factory=None):
             try:  # pragma: no cover - heavy dep absent in CI container
                 from transformers import pipeline  # type: ignore
 
-                clf = pipeline(
-                    "sentiment-analysis",
-                    model="distilbert-base-uncased-finetuned-sst-2-english",
-                    truncation=True,
-                )
+                clf = pipeline(truncation=True, **hf_kwargs)
             except ImportError:
                 pass
 
-        if clf is not None:
-
-            def score(texts: pd.Series) -> pd.DataFrame:
-                return _hf_rows_to_frame(
-                    clf(texts.fillna("").tolist()), "label", "confidence"
-                )
-
-        else:
-
-            def score(texts: pd.Series) -> pd.DataFrame:
-                # STUB: deterministic lexicon-sign fallback (not a model).
-                def one(t: str) -> tuple[str, float]:
-                    s = sum(VALENCE.get(w, 0.0) for w in str(t).lower().split())
-                    return ("positive" if s >= 0 else "negative", min(1.0, abs(s) / 10.0))
-
-                labels, confs = zip(*[one(t) for t in texts]) if len(texts) else ((), ())
-                return pd.DataFrame({"label": list(labels), "confidence": list(confs)})
+        def score(texts: pd.Series) -> pd.DataFrame:
+            if clf is not None:
+                return _hf_rows_to_frame(clf(texts.fillna("").tolist()), label_key, score_key)
+            rows = [stub(t) for t in texts]
+            return pd.DataFrame(
+                {label_key: [r[0] for r in rows], score_key: [r[1] for r in rows]}
+            )
 
         for batch in batches:
             yield score(batch)
 
     return infer
+
+
+def _sentiment_stub(t) -> tuple[str, float]:
+    """STUB: deterministic lexicon-sign fallback (not a model)."""
+    s = sum(VALENCE.get(w, 0.0) for w in str(t).lower().split())
+    return ("positive" if s >= 0 else "negative", min(1.0, abs(s) / 10.0))
+
+
+def hf_sentiment_udf(pipeline_factory=None):
+    """Transformer sentiment as an iterator Pandas UDF (reference M7,
+    sentiment_analysis.py:76-112) → struct<label, confidence>.
+
+    ``pipeline_factory`` injects the classifier callable — how the
+    wire-format parity test exercises the real branch without model
+    weights. With no factory, the real transformers pipeline is
+    constructed when importable; otherwise the fallback is a
+    DETERMINISTIC STUB (lexicon sign) — swap in the real model by
+    installing `transformers`, the Spark side needs no change.
+    """
+    return _hf_classifier_udf(
+        pipeline_factory, "label", "confidence", _sentiment_stub,
+        task="sentiment-analysis",
+        model="distilbert-base-uncased-finetuned-sst-2-english",
+    )
 
 
 # 7-class emotion lexicon for the deterministic stub (M8 fallback):
@@ -263,75 +268,36 @@ EMOTION_CUES: dict[str, str] = {
 }
 
 
+def _emotion_stub(t) -> tuple[str, float]:
+    """STUB: cue-lexicon vote, 'neutral' default (not a model)."""
+    votes: dict[str, int] = {}
+    for w in str(t).lower().split():
+        cls = EMOTION_CUES.get(w)
+        if cls:
+            votes[cls] = votes.get(cls, 0) + 1
+    if not votes:
+        return ("neutral", 0.5)
+    label = max(sorted(votes), key=lambda k: votes[k])
+    return (label, votes[label] / sum(votes.values()))
+
+
 def hf_emotion_udf(pipeline_factory=None):
     """7-class emotion classification (reference M8,
     sentiment_analysis.py:66-74,96-103: DistilRoBERTa with top_k=None,
-    keep the max-score label — SURVEY F28 argmax-of-struct-list).
+    keep the max-score label — SURVEY F28 argmax-of-struct-list, done by
+    :func:`_hf_rows_to_frame`) → struct<emotion_label, emotion_score>.
 
     Same iterator-UDF lifecycle and ``pipeline_factory`` injection as
     :func:`hf_sentiment_udf`; the deterministic stub votes over a cue
     lexicon and defaults to 'neutral', mirroring the real model's
     argmax contract.
     """
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("emotion_label", T.StringType()),
-        T.StructField("emotion_score", T.DoubleType()),
-    ]))
-    def infer(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        clf = None
-        if pipeline_factory is not None:
-            clf = pipeline_factory()
-        else:
-            try:  # pragma: no cover - heavy dep absent in CI container
-                from transformers import pipeline  # type: ignore
-
-                clf = pipeline(
-                    "text-classification",
-                    model="j-hartmann/emotion-english-distilroberta-base",
-                    top_k=None,
-                    truncation=True,
-                )
-            except ImportError:
-                pass
-
-        if clf is not None:
-
-            def score(texts: pd.Series) -> pd.DataFrame:
-                # top_k=None → list of {label, score} per doc; argmax via
-                # the shared normalizer (reference sentiment_analysis.py:97-99)
-                return _hf_rows_to_frame(
-                    clf(texts.fillna("").tolist()), "emotion_label", "emotion_score"
-                )
-
-        else:
-
-            def score(texts: pd.Series) -> pd.DataFrame:
-                # STUB: cue-lexicon vote, 'neutral' default (not a model).
-                def one(t: str) -> tuple[str, float]:
-                    votes: dict[str, int] = {}
-                    for w in str(t).lower().split():
-                        cls = EMOTION_CUES.get(w)
-                        if cls:
-                            votes[cls] = votes.get(cls, 0) + 1
-                    if not votes:
-                        return ("neutral", 0.5)
-                    label = max(sorted(votes), key=lambda k: votes[k])
-                    total = sum(votes.values())
-                    return (label, votes[label] / total)
-
-                pairs = [one(t) for t in texts]
-                return pd.DataFrame(
-                    {
-                        "emotion_label": [p[0] for p in pairs],
-                        "emotion_score": [p[1] for p in pairs],
-                    }
-                )
-
-        for batch in batches:
-            yield score(batch)
-
-    return infer
+    return _hf_classifier_udf(
+        pipeline_factory, "emotion_label", "emotion_score", _emotion_stub,
+        task="text-classification",
+        model="j-hartmann/emotion-english-distilroberta-base",
+        top_k=None,
+    )
 
 
 def with_emotion(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -142,6 +142,8 @@ def connected_components(
         does not grow exponentially with iterations;
       * fully deterministic: min() is order-insensitive, no partitioning
         dependence.
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without a
+    fixpoint: a partial clustering is corruption, not a result.
     Isolated vertices never enter ``edges`` and are their own singleton
     clusters by definition — callers that need them add
     ``all_ids.join(result, "v", "left")`` + coalesce(cluster_id, v).
@@ -186,8 +188,11 @@ def connected_components(
         )
         labels = stepped.select("v", "lbl")
         if changed == 0:
-            break
-    return labels.select("v", F.col("lbl").alias("cluster_id"))
+            return labels.select("v", F.col("lbl").alias("cluster_id"))
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(unconverged labels split components)"
+    )
 
 
 def resolve_ancestors(
@@ -217,6 +222,8 @@ def resolve_ancestors(
     ONE hash-join shuffle each (both sides partitioned on the join key);
     ``localCheckpoint`` truncates lineage per round; the convergence
     probe is a ``limit(1).count()`` — no driver-side data movement.
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without a
+    fixpoint (an unresolved parent is a dropped document).
     """
     res = (
         mapping.select(F.col(child).alias("c"), F.col(parent).alias("p"))
@@ -240,8 +247,11 @@ def resolve_ancestors(
         )
         res = stepped.select("c", "p")
         if moved == 0:
-            break
-    return res.select(F.col("c").alias(child), F.col("p").alias(parent))
+            return res.select(F.col("c").alias(child), F.col("p").alias(parent))
+    raise RuntimeError(
+        f"resolve_ancestors did not converge in {max_iter} rounds "
+        "(unresolved parents name dropped documents)"
+    )
 
 
 def asof_join(
@@ -561,17 +571,10 @@ def delta_corpus_build(
     the stored manifest (O(#shards)) and fingerprint index, so a delta
     apply touches batch rows + metadata only.
     """
-    from pyspark.sql import Window as W
-
-    from ..operators.dedup import fingerprint
+    from ..operators.dedup import fingerprint, first_wins
     from ..operators.skew import exclusive_prefix_sum
 
-    w = W.partitionBy(fingerprint("text")).orderBy("e", "doc_id")
-    surv = (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    surv = first_wins(tagged, [fingerprint("text")], ["e", "doc_id"])
     gated = gate_documents(
         surv, dup_t=dup_t, bigram_t=bigram_t, carry=("lang", "e")
     ).localCheckpoint(eager=False)  # feeds rate counts + keyed pass

@@ -15,9 +15,16 @@ The reference deduplicates only by exact key (unique ``url`` index,
                  shape), with blockize/reassemble shared by the
                  streaming twin (streaming/blockdedup.py)
   bloom_*      — relational Bloom filter over any md5 key column:
-                 bloom_build/bloom_probe (join form) and
-                 bloom_collected/bloom_hit_expr (row-local literal-map
-                 form for scan filters and streaming ingest)
+                 bloom_build/bloom_probe (join form), and row-local
+                 probes of a bloom_collected filter densified by
+                 bloom_dense_masks: bloom_hits_count_dense (hits over
+                 a key array — per-token gates) and bloom_hit_expr
+                 (one key — scan filters, streaming ingest)
+
+Shared primitives, each written once: :func:`first_wins` (the keep-first
+window), :func:`all_pairs_sql` (row-local pair expansion of a grouped
+array), :func:`drop_hot_groups` (the pre-collect hot-group cap), and the
+Bloom positions and bit test (``_bloom_positions``/``_bloom_bit_set``).
 
 Scale notes: every operator is expressed as DataFrame ops whose only wide
 stages are hash-partitioned groupBy/join on content-derived keys, so skew
@@ -55,25 +62,22 @@ def fingerprint(col: Column | str, *, normalize: bool = True) -> Column:
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep the min-id row per identical (normalized) text.
 
-    ONE scan + one shuffle: row_number over a fingerprint-partitioned
-    window. md5 keys partition perfectly uniformly regardless of content
-    skew, and each partition's sort is by the tiny (fp, id) prefix. The
-    groupBy-then-semi-join alternative reads the input twice and adds a
-    join exchange — strictly worse both locally and at 100 TB.
+    ONE scan + one shuffle: :func:`first_wins` over a fingerprint-
+    partitioned window. md5 keys partition perfectly uniformly regardless
+    of content skew, and each partition's sort is by the tiny (fp, id)
+    prefix. The groupBy-then-semi-join alternative reads the input twice
+    and adds a join exchange — strictly worse both locally and at 100 TB.
     """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(fingerprint(text_col)).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return first_wins(df, [fingerprint(text_col)], [F.col(id_col)])
 
 
-def first_wins(df: DataFrame, key_cols: list[str], order_cols: list[Column]) -> DataFrame:
+def first_wins(
+    df: DataFrame, key_cols: list[Column | str], order_cols: list[Column | str]
+) -> DataFrame:
     """Reference semantics (bbc_news_dag.py:39-43): keep one row per key,
-    deterministic winner by ``order_cols``."""
+    deterministic winner by ``order_cols``. Keys may be expressions
+    (``fingerprint(...)``); the window every keep-first dedup here uses
+    (exact, streaming corpus build, delta corpus build)."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy(*key_cols).orderBy(*order_cols)
@@ -187,9 +191,10 @@ def pairs_within_groups(
     group size upstream by a broadcast vocab join).
     """
     collect = f"array_sort(collect_set({payload_col})) AS _ds"
+    pairs = f"{all_pairs_sql('_ds', 'struct(x AS a, y AS b)')} AS p"
     if max_group is None:
         grouped = df.groupBy(*key_cols).agg(F.expr(collect)).filter("size(_ds) >= 2")
-        return _all_pairs(grouped)
+        return grouped.selectExpr(pairs)
 
     keys = ", ".join(key_cols)
     # Both window functions share one WindowExec over one hash exchange
@@ -220,17 +225,40 @@ def pairs_within_groups(
     star = sized.filter(f"_cnt > {int(max_group)} AND _d != _minp").selectExpr(
         "struct(_minp AS a, _d AS b) AS p"
     )
-    return _all_pairs(small).unionByName(star)
+    return small.selectExpr(pairs).unionByName(star)
 
 
-def _all_pairs(grouped: DataFrame) -> DataFrame:
-    """Row-local all-pairs expansion of a grouped ``_ds`` payload array."""
-    # explode_outer: the pair array is non-empty (size(_ds) >= 2 upstream),
-    # and plain explode's inferred size>0 filter would re-evaluate the
-    # nested pair-generation transform once per group (see SCALE.md).
-    return grouped.selectExpr(
-        "explode_outer(flatten(transform(_ds, (x, i) -> transform("
-        "slice(_ds, i + 2, size(_ds)), y -> struct(x AS a, y AS b))))) AS p"
+def all_pairs_sql(arr: str, pair: str) -> str:
+    """Row-local all-pairs expansion of a sorted array column, as SQL
+    text: one generated row per element pair i < j, with ``pair`` the SQL
+    text of the row over the lambda variables ``x`` (element i) and ``y``
+    (element j). Callers put scoring inside ``pair`` so each pair is
+    computed exactly once (:func:`~.similarity.pairs_within_buckets`)."""
+    # explode_outer: callers keep only arrays of size >= 2, so the pair
+    # array is non-empty, and plain explode's inferred size>0 filter would
+    # re-evaluate the nested pair-generation transform once per group
+    # (see SCALE.md).
+    return (
+        f"explode_outer(flatten(transform({arr}, (x, i) -> transform("
+        f"slice({arr}, i + 2, size({arr})), y -> {pair}))))"
+    )
+
+
+def drop_hot_groups(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
+    """Drop every row of a group (under ``key_cols``) holding more than
+    ``cap`` rows — the hot-group cap of the bucketed pair generators
+    (hot shingles in :func:`ngram_jaccard_pairs`, over-full buckets in
+    :func:`~.similarity.pairs_within_buckets`). Counted by a window
+    BEFORE the caller's collect, so a hot group's array is never
+    materialized in an agg buffer (same output as a post-collect size
+    filter; a groupBy on the same keys reuses the window's exchange).
+    Not :func:`pairs_within_groups`' ``max_group``, which keeps hot
+    groups as star pairs instead of dropping them."""
+    keys = ", ".join(key_cols)
+    return (
+        df.selectExpr("*", f"count(*) OVER (PARTITION BY {keys}) AS _gc")
+        .filter(f"_gc <= {int(cap)}")
+        .drop("_gc")
     )
 
 
@@ -435,63 +463,32 @@ def ngram_jaccard_pairs(
     twin). Returns (id_a, id_b, jaccard) with jaccard rounded to 4dp and
     id_a < id_b.
     """
-    sh = with_shingles(df, id_col, text_col, k).select(
-        F.col(id_col),
-        F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s))).alias("_hs"),
+    sh = with_shingles(df, id_col, text_col, k).selectExpr(
+        id_col, "array_distinct(transform(shingles, s -> xxhash64(s))) AS _hs"
     )
-    posting = sh.select(
-        F.struct(F.col(id_col).alias("i"), F.size("_hs").cast("long").alias("n")).alias("d"),
+    posting = sh.selectExpr(
+        f"struct({id_col} AS i, CAST(size(_hs) AS BIGINT) AS n) AS d",
         # explode_outer: _hs is non-empty (>=k tokens -> >=1 shingle); see
         # the inferred-filter pushdown note on winnow_fingerprints.
-        F.explode_outer("_hs").alias("h"),
+        "explode_outer(_hs) AS h",
     )
     if max_df is not None:
-        # Pre-collect cap: drop hot shingles via a window count BEFORE
-        # collect_list so a boilerplate shingle's posting array is never
-        # materialized (identical output to a post-collect size filter;
-        # the groupBy reuses the window's hash exchange on h).
-        from pyspark.sql import Window as W
-
-        posting = posting.withColumn(
-            "_df", F.count("*").over(W.partitionBy("h"))
-        ).filter(F.col("_df") <= max_df).drop("_df")
+        posting = drop_hot_groups(posting, ["h"], max_df)
     # array_distinct upstream guarantees one posting per (doc, shingle), so
-    # each list holds unique ids; array_sort orders by id (first struct
-    # field) making every in-list pair strictly id_a < id_b.
-    grouped = (
-        posting.groupBy("h")
-        .agg(F.array_sort(F.collect_list("d")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ds",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ds"), i + F.lit(2), F.size("ds")),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
+    # each list holds unique ids and every pair is id_a < id_b.
+    pairs = pairs_within_groups(posting, ["h"], max_group=None)
     out = (
-        pairs.groupBy(F.col("p.a.i").alias("id_a"), F.col("p.b.i").alias("id_b"))
+        pairs.groupBy(F.expr("p.a.i AS id_a"), F.expr("p.b.i AS id_b"))
         .agg(
-            F.count("*").alias("n_inter"),
+            F.expr("count(*) AS n_inter"),
             # all rows in a pair-group carry the same per-doc set sizes
-            F.first("p.a.n").alias("n_a"),
-            F.first("p.b.n").alias("n_b"),
+            F.expr("first(p.a.n) AS n_a"),
+            F.expr("first(p.b.n) AS n_b"),
         )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4),
-        )
-        .select("id_a", "id_b", "jaccard")
+        .selectExpr("id_a", "id_b", "round(n_inter / (n_a + n_b - n_inter), 4) AS jaccard")
     )
     if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
+        out = out.filter(f"jaccard >= {float(min_jaccard)!r}D")
     return out
 
 
@@ -606,16 +603,38 @@ def block_dedup(df: DataFrame, id_col: str, text_col: str, block_w: int = 10) ->
 BLOOM_WORD_BITS = 32
 
 
+def _bloom_hashes(key: Column) -> tuple[Column, Column]:
+    """(h1, h2): the two leading 32-bit hex slices of an md5-hex key."""
+    h1 = F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
+    h2 = F.conv(F.substring(key, 9, 8), 16, 10).cast("long")
+    return h1, h2
+
+
+def _bloom_positions(h1: Column, h2: Column, words: int, k: int) -> list[Column]:
+    m = words * BLOOM_WORD_BITS
+    return [(h1 + F.lit(j) * h2) % F.lit(m) for j in range(k)]
+
+
+def _bloom_word(p: Column) -> Column:
+    """Index (bigint) of the 32-bit filter word holding bit position ``p``."""
+    return F.call_function("div", p, F.lit(BLOOM_WORD_BITS))
+
+
+def _bloom_bit_set(mask: Column, p: Column) -> Column:
+    """Whether ``mask``, the filter word holding position ``p``, has p's
+    bit set; a NULL mask (word absent from a joined filter) yields NULL.
+    ``call_function``: ``F.shiftright`` only takes a literal shift."""
+    bit = (p % F.lit(BLOOM_WORD_BITS)).cast("int")
+    return F.call_function("shiftright", mask, bit) % 2 == 1
+
+
 def bloom_positions(key_col: Column, words: int, k: int = 4) -> list[Column]:
     """k Bloom bit positions for an md5-hex key column: double hashing
     h1 + j*h2 (Kirsch-Mitzenmacher 2006) over two 32-bit hex slices of
     the key, mod m = words*32. Pure integer algebra over md5 — identical
     in Spark and DuckDB, so a filter built from these positions can be
     reproduced bit-for-bit by an oracle."""
-    m = words * BLOOM_WORD_BITS
-    h1 = F.conv(F.substring(key_col, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(key_col, 9, 8), 16, 10).cast("long")
-    return [(h1 + F.lit(j) * h2) % F.lit(m) for j in range(k)]
+    return _bloom_positions(*_bloom_hashes(key_col), words, k)
 
 
 def bloom_build(keys: DataFrame, key_col: str, words: int = 2048, k: int = 4) -> DataFrame:
@@ -627,7 +646,7 @@ def bloom_build(keys: DataFrame, key_col: str, words: int = 2048, k: int = 4) ->
     return (
         keys.select(F.explode(F.array(*bloom_positions(F.col(key_col), words, k))).alias("p"))
         .select(
-            F.expr(f"p DIV {BLOOM_WORD_BITS}").alias("word"),
+            _bloom_word(F.col("p")).alias("word"),
             F.expr(
                 f"shiftleft(CAST(1 AS BIGINT), CAST(p % {BLOOM_WORD_BITS} AS INT))"
             ).alias("m1"),
@@ -649,15 +668,12 @@ def bloom_probe(
     probes = keys.select(
         id_col, key_col,
         F.explode(F.array(*bloom_positions(F.col(key_col), words, k))).alias("p"),
-    ).withColumn("word", F.expr(f"p DIV {BLOOM_WORD_BITS}"))
+    ).withColumn("word", _bloom_word(F.col("p")))
     return (
         probes.join(F.broadcast(bloom), "word", "left")
         .withColumn(
             "hit",
-            F.when(
-                F.expr(f"shiftright(mask, CAST(p % {BLOOM_WORD_BITS} AS INT)) % 2") == 1,
-                1,
-            ).otherwise(0),
+            F.when(_bloom_bit_set(F.col("mask"), F.col("p")), 1).otherwise(0),
         )
         .groupBy(id_col, key_col)
         .agg((F.sum("hit") == k).cast("int").alias("bloom_hit"))
@@ -669,104 +685,61 @@ def bloom_collected(bloom: DataFrame) -> dict[int, int]:
     filter is ≤``words`` rows BY CONSTRUCTION (a sizing constant, not a
     data-dependent cardinality), so this driver-side collect is bounded
     the same way a broadcast of it would be — it is the packaging step
-    for :func:`bloom_hit_expr`'s in-plan literal map."""
+    for the row-local probes' in-plan mask literal."""
     return {int(r["word"]): int(r["mask"]) for r in bloom.collect()}
+
+
+def bloom_dense_masks(filter_map: dict[int, int], words: int) -> list[int]:
+    """Densify a :func:`bloom_collected` map to a ``words``-length list
+    (absent words → 0, a definitive miss), the input
+    :func:`bloom_hits_count_dense` wants."""
+    return [filter_map.get(w, 0) for w in range(words)]
 
 
 def bloom_hit_expr(
     key_col: Column, filter_map: dict[int, int], words: int, k: int = 4
 ) -> Column:
-    """ROW-LOCAL Bloom membership test (1/0) against a collected filter —
-    zero shuffle, zero join, so it composes anywhere a plain expression
-    does: scan filters, streaming ingest (readStream .filter), generated
-    columns. The filter rides the plan as a literal int→int map; the bit
-    test is pure arithmetic (floor(mask / 2^bit) % 2 — 2^bit exact in
-    doubles for bit < 32, no shift builtin needed since Spark's
-    shiftright only takes a literal shift amount). Same no-FN guarantee
-    as :func:`bloom_probe`; per-position misses (word absent from the
-    map) are definitive negatives."""
-    items: list[Column] = []
-    for w, mask in sorted(filter_map.items()):
-        items.extend((F.lit(w), F.lit(mask)))
-    m_map = F.create_map(*items) if items else F.create_map(F.lit(0), F.lit(0))
-    hit = F.lit(True)
-    for p in bloom_positions(key_col, words, k):
-        word = F.floor(p / F.lit(BLOOM_WORD_BITS)).cast("int")
-        bit = (p % F.lit(BLOOM_WORD_BITS)).cast("double")
-        mask = F.element_at(m_map, word)
-        bit_set = (
-            F.floor(mask.cast("double") / F.pow(F.lit(2.0), bit)).cast("long") % 2 == 1
-        )
-        hit = hit & F.coalesce(bit_set, F.lit(False))
-    return hit.cast("int")
-
-
-def bloom_dense_masks(filter_map: dict[int, int], words: int) -> list[int]:
-    """Densify a :func:`bloom_collected` map to a ``words``-length list
-    (absent words → 0), the input :func:`bloom_hit_expr_dense` wants."""
-    return [filter_map.get(w, 0) for w in range(words)]
-
-
-def bloom_hit_expr_dense(key_col: Column, masks: list[int], k: int = 4) -> Column:
-    """ROW-LOCAL Bloom test against a DENSE mask array. Same contract as
-    :func:`bloom_hit_expr`, different lookup cost: the map form's
-    ``element_at`` scans the folded MapData linearly per probe (fine for
-    a handful of probes per row), while this form indexes a folded
-    ARRAY literal — O(1) per probe — which is what a per-TOKEN gate
-    needs (k probes × shingles-per-doc × docs lookups inside a
-    higher-order ``transform``). Every word has a mask (0 when empty),
-    so the missing-word branch disappears."""
-    words = len(masks)
-    arr = F.array(*[F.lit(m) for m in masks])  # foldable → one literal
-    hit = F.lit(True)
-    for p in bloom_positions(key_col, words, k):
-        word = F.floor(p / F.lit(BLOOM_WORD_BITS)).cast("int")
-        bit = (p % F.lit(BLOOM_WORD_BITS)).cast("double")
-        mask = F.element_at(arr, word + F.lit(1))
-        bit_set = (
-            F.floor(mask.cast("double") / F.pow(F.lit(2.0), bit)).cast("long") % 2 == 1
-        )
-        hit = hit & bit_set
-    return hit.cast("int")
+    """ROW-LOCAL Bloom membership test (1/0) of one key against a
+    collected filter — zero shuffle, zero join, so it composes anywhere a
+    plain expression does: scan filters, streaming ingest (readStream
+    .filter), generated columns. It is :func:`bloom_hits_count_dense`
+    over the one-key array: same positions, same bit test, same no-FN
+    guarantee as :func:`bloom_probe`, and a NULL key is a miss (0)."""
+    hits = bloom_hits_count_dense(
+        F.array(key_col), bloom_dense_masks(filter_map, words), k
+    )
+    return F.coalesce(hits.cast("int"), F.lit(0))
 
 
 def bloom_hits_count_dense(
     md5_keys_arr: Column, masks: list[int], k: int = 4
 ) -> Column:
-    """COUNT of Bloom hits over an ARRAY column of md5-hex keys — the
-    per-TOKEN gate shape (q128). Identical bit test as
-    :func:`bloom_hit_expr_dense`, restructured for lambda evaluation
-    cost: higher-order-function lambdas are evaluated interpreted, where
-    codegen's subexpression elimination cannot reach, so the per-key
-    form re-evaluated md5+conv k·2 times per element. Here each key's
-    (h1, h2) pair is computed ONCE in a first ``transform`` and the k
-    probes are pure integer algebra over the pair — same positions, same
-    masks, same count."""
+    """COUNT of Bloom hits over an ARRAY column of md5-hex keys against a
+    DENSE mask array (:func:`bloom_dense_masks`) — the per-TOKEN gate
+    shape (q128). The masks ride the plan as one folded array literal
+    indexed in O(1) per probe, which is what k probes × shingles-per-doc
+    × docs lookups inside a higher-order ``transform`` need; the literal
+    is sent as SQL text in one gateway call (an ``F.lit`` per word costs
+    three round trips each, ~6,000 at 2,048 words).
+
+    Structured for lambda evaluation cost: higher-order-function lambdas
+    are evaluated interpreted, where codegen's subexpression elimination
+    cannot reach, so each key's (h1, h2) pair is computed ONCE in a first
+    ``transform`` and the k probes are pure integer algebra over the
+    pair. The lambdas themselves are still built node by node through
+    the Column API (their cost does not depend on ``words``)."""
     words = len(masks)
-    m = words * BLOOM_WORD_BITS
-    arr = F.array(*[F.lit(mm) for mm in masks])
+    arr = F.expr(f"array({', '.join(str(int(m)) for m in masks)})")
     hs = F.transform(
         md5_keys_arr,
-        lambda hk: F.struct(
-            F.conv(F.substring(hk, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(hk, 9, 8), 16, 10).cast("long").alias("h2"),
-        ),
+        lambda hk: F.struct(*(h.alias(n) for n, h in zip(("h1", "h2"), _bloom_hashes(hk)))),
     )
 
     def _probe(s):
         hit = F.lit(True)
-        for j in range(k):
-            p = (s["h1"] + F.lit(j) * s["h2"]) % F.lit(m)
-            word = F.floor(p / F.lit(BLOOM_WORD_BITS)).cast("int")
-            bit = (p % F.lit(BLOOM_WORD_BITS)).cast("double")
-            mask = F.element_at(arr, word + F.lit(1))
-            hit = hit & (
-                F.floor(mask.cast("double") / F.pow(F.lit(2.0), bit)).cast(
-                    "long"
-                )
-                % 2
-                == 1
-            )
+        for p in _bloom_positions(s["h1"], s["h2"], words, k):
+            mask = F.element_at(arr, _bloom_word(p).cast("int") + F.lit(1))
+            hit = hit & _bloom_bit_set(mask, p)
         return hit.cast("long")
 
     return F.aggregate(

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import all_pairs_sql, drop_hot_groups
+
 
 #: Quantization scale: 1e-6 component resolution. Scales cancel in
 #: cosine (dot is scale², each norm is scale¹), so no rescaling needed.
@@ -362,19 +364,11 @@ def pairs_within_buckets(
 
     One shuffle (groupBy bucket), collect-sorted payloads, pair transform
     scoring each pair exactly once; ``max_bucket`` drops over-full buckets
-    via a pre-collect window count so the oversized bucket's array is
+    (:func:`~.dedup.drop_hot_groups`) so the oversized bucket's array is
     never materialized in an agg buffer.
     """
     if max_bucket is not None:
-        # Pre-collect cap: filter hot buckets via a window count BEFORE
-        # the collect_list, so the oversized bucket's array is never
-        # materialized in an agg buffer (same output as a post-collect
-        # size filter; the groupBy reuses the window's exchange).
-        bucketed = (
-            bucketed.selectExpr("*", "count(*) OVER (PARTITION BY bucket) AS _bc")
-            .filter(f"_bc <= {int(max_bucket)}")
-            .drop("_bc")
-        )
+        bucketed = drop_hot_groups(bucketed, ["bucket"], max_bucket)
     grouped = (
         bucketed.groupBy("bucket")
         .agg(F.expr("array_sort(collect_list(d)) AS ds"))
@@ -385,14 +379,10 @@ def pairs_within_buckets(
     # pushed below the Project, substituting the whole fold expression
     # into a second per-row evaluation (SCALE.md pushdown pathology).
     # Filtering on the generator's output field cannot sink below the
-    # Generate. explode_outer: non-empty by the size>=2 filter; avoids
-    # the inferred size>0 filter re-evaluating the pair transform.
+    # Generate.
     cos = _round_sql(_cos_q_sql("x._qv", "y._qv", "x._nrm", "y._nrm"), 4)
-    pairs = grouped.selectExpr(
-        "explode_outer(flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct("
-        f"x.{id_col} AS id_a, y.{id_col} AS id_b, {cos} AS cos_sim))))) AS p"
-    )
+    pair = f"struct(x.{id_col} AS id_a, y.{id_col} AS id_b, {cos} AS cos_sim)"
+    pairs = grouped.selectExpr(f"{all_pairs_sql('ds', pair)} AS p")
     # "D": a bare 0.8 is a DECIMAL literal in Spark SQL
     return pairs.filter(f"p.cos_sim >= {float(min_cos)!r}D").selectExpr(
         "p.id_a AS id_a", "p.id_b AS id_b", "p.cos_sim AS cos_sim"

@@ -111,16 +111,24 @@ def count_py4j_round_trips() -> Iterator[Callable[[], int]]:
     a DataFrame runs no job but costs round trips — three per ``F.lit``
     or ``F.col`` of a node-by-node Column build — so this is the measure
     of an operator's driver-side construction cost.
+
+    Object-release commands are not counted: py4j's finalizer thread
+    sends them whenever it gets to proxies Python dropped earlier, so
+    they land in whichever block happens to be open and made counts of
+    the same build differ by 100+ between runs.
     """
+    from py4j import protocol
     from py4j.clientserver import ClientServerConnection
 
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
     sent = [0]
     lock = threading.Lock()  # concurrent DAG stages send from several threads
     send = ClientServerConnection.send_command
 
     def counting_send(self, command):
-        with lock:
-            sent[0] += 1
+        if not command.startswith(release):
+            with lock:
+                sent[0] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting_send

@@ -125,13 +125,3 @@ def prepare_articles(articles: DataFrame, min_words: int = 50) -> DataFrame:
         .drop("images", "topic_name", "topic_url", "authors")
     )
     return out
-
-
-def articles_to_json_cols(articles: DataFrame, cols: tuple[str, ...] = ("authors",)) -> DataFrame:
-    """F24: JSON-encode array columns at a storage boundary
-    (topic_modeling.py:265-267 stores main_topic_words_list as JSON)."""
-    out = articles
-    for c in cols:
-        if c in articles.columns:
-            out = out.withColumn(c, F.to_json(F.col(c)))
-    return out

@@ -41,7 +41,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -82,7 +81,7 @@ def apply_corpus_batch(
         sample_key_expr,
         shuffle_shards,
     )
-    from ..operators.dedup import fingerprint
+    from ..operators.dedup import fingerprint, first_wins
     from ..operators.skew import exclusive_prefix_sum
     from ..plans.curation_plans import _temperature_rates
 
@@ -91,13 +90,7 @@ def apply_corpus_batch(
     )
 
     # 1. dedup: min-id within the batch, then anti-join the stored index
-    wfp = W.partitionBy("_fp").orderBy("doc_id")
-    batch = (
-        batch_df.withColumn("_fp", fingerprint("text"))
-        .withColumn("_rn", F.row_number().over(wfp))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = first_wins(batch_df.withColumn("_fp", fingerprint("text")), ["_fp"], ["doc_id"])
     if _exists(spark, fpi):
         batch = batch.join(
             spark.read.parquet(fpi),

@@ -131,6 +131,15 @@ def test_connected_components_idempotent_on_clique(spark):
     assert got == {i: 0 for i in range(5)}
 
 
+def test_connected_components_raises_on_round_cap(spark):
+    import pytest
+
+    # a 13-vertex path needs ~12 propagation rounds; 3 leave wrong labels
+    df = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=3)
+
+
 # --- large-star/small-star connected components ------------------------------
 
 
@@ -221,6 +230,17 @@ def test_resolve_ancestors_deep_chain_and_fanin(spark):
 def test_resolve_ancestors_no_chains_is_identity(spark):
     # parents that are not themselves children pass through unchanged
     assert _resolved(spark, [(7, 2), (8, 3)]) == {7: 2, 8: 3}
+
+
+def test_resolve_ancestors_raises_on_round_cap(spark):
+    import pytest
+
+    from bbc_news_data_pipeline_spark.operators.curation import resolve_ancestors
+
+    # one doubling round cannot resolve a depth-9 chain
+    df = spark.createDataFrame([(i + 1, i) for i in range(9)], "child long, parent long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        resolve_ancestors(df, max_iter=1)
 
 
 # --- as-of join ------------------------------------------------------------

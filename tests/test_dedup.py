@@ -74,6 +74,56 @@ def test_ngram_jaccard_values(corpus):
     assert (0, 3) not in got
 
 
+def test_ngram_jaccard_max_df_matches_python_reference(spark):
+    """The df cap against a pure-Python reference: set sizes count every
+    shingle, the intersection only shingles held by <= max_df docs, and
+    a pair sharing only hot shingles is no pair (q39's oracle shape)."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    hot = "click here to read more"  # boilerplate in every document
+    texts = {
+        0: f"{BASE} {hot}",
+        1: f"{BASE.replace('lazy', 'sleepy')} {hot}",
+        2: f"{hot} alpha bravo charlie delta echo foxtrot",
+        3: f"golf hotel india juliet kilo {hot} lima",
+        4: f"{hot} alpha bravo charlie delta echo golf hotel",
+        5: "too short",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    k = 3
+
+    def shingles(t):
+        ws = t.split(" ")
+        return {" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)}
+
+    sets = {i: shingles(t) for i, t in texts.items() if len(t.split(" ")) >= k}
+    dfreq = Counter(s for ss in sets.values() for s in ss)
+
+    def reference(max_df):
+        out = {}
+        for a in sets:
+            for b in sets:
+                inter = {
+                    s for s in sets[a] & sets[b] if max_df is None or dfreq[s] <= max_df
+                }
+                if a < b and inter:
+                    j = len(inter) / (len(sets[a]) + len(sets[b]) - len(inter))
+                    out[(a, b)] = float(
+                        Decimal(repr(j)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+                    )
+        return out
+
+    assert max(dfreq.values()) == 5  # the hot shingles
+    for max_df in (None, 2, 4):
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in dedup.ngram_jaccard_pairs(df, "doc_id", "text", k=k, max_df=max_df).collect()
+        }
+        assert got == reference(max_df), max_df
+    assert (2, 3) not in reference(4)  # shares only boilerplate
+
+
 def test_fingerprint_normalizes(spark):
     df = spark.createDataFrame([("  Hello World ",), ("hello world",)], "text string")
     fps = df.select(dedup.fingerprint("text").alias("fp")).collect()

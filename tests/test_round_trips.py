@@ -10,12 +10,19 @@ projection; these budgets hold them there (node-by-node builds cost
 """
 
 import gc
+import hashlib
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bbc_news_data_pipeline_spark.operators.dedup import minhash_candidates
+from bbc_news_data_pipeline_spark.operators.dedup import (
+    bloom_hit_expr,
+    bloom_hits_count_dense,
+    minhash_candidates,
+    ngram_jaccard_pairs,
+)
 from bbc_news_data_pipeline_spark.operators.similarity import (
     QUANT_SCALE,
     lsh_bucket_ann,
@@ -82,6 +89,36 @@ def test_minhash_candidates_budget(spark, py4j_round_trips, corpus):
     docs = corpus[3]
     n = _build_trips(py4j_round_trips, lambda: minhash_candidates(docs, "doc_id", "text"))
     assert n <= 500, n
+
+
+def test_ngram_jaccard_pairs_budget(spark, py4j_round_trips, corpus):
+    docs = corpus[3]
+    for max_df in (None, 3):
+        n = _build_trips(
+            py4j_round_trips, lambda: ngram_jaccard_pairs(docs, "doc_id", "text", max_df=max_df)
+        )
+        assert n <= 300, (max_df, n)
+
+
+def test_bloom_probe_cost_independent_of_filter_words(spark, py4j_round_trips):
+    keys = [hashlib.md5(f"k{i}".encode()).hexdigest() for i in range(4)]
+    df = spark.createDataFrame([(keys[0], keys)], "k string, ks array<string>")
+    trips = {}
+    for words in (64, 2048):
+        # spread masks, some above 2^31 (bigint literals)
+        masks = [(w * 2654435761) % (1 << 32) for w in range(words)]
+        fmap = dict(enumerate(masks))
+        trips[words] = (
+            _build_trips(
+                py4j_round_trips,
+                lambda: df.select(bloom_hits_count_dense(F.col("ks"), masks)),
+            ),
+            _build_trips(
+                py4j_round_trips,
+                lambda: df.select(bloom_hit_expr(F.col("k"), fmap, words)),
+            ),
+        )
+    assert trips[2048][0] <= trips[64][0] and trips[2048][1] <= trips[64][1], trips
 
 
 def test_topic_words_cost_independent_of_vocabulary(spark, py4j_round_trips):
