@@ -13,6 +13,10 @@ The reference curates its corpus with only two tools: a unique-key index
                           (duplicate clustering on top of MinHash/SimHash)
   asof_join             — generic as-of join as a composition of existing
                           DataFrame ops (union + ignoreNulls last() window)
+  temperature_rates     — n^0.5-temperature per-language mixing rates
+  shard_manifest        — deal docs into shards, pack them after the
+                          stored token totals, per-shard manifest partials
+                          (the batch q267 and streaming q277 corpus builds)
 
 Scale notes: PII redaction and sampling are row-local (zero shuffle);
 connected_components is the standard O(diameter)-round label propagation
@@ -28,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .incremental import merge_partials
 
 # Patterns chosen to compile identically under Java regex (Spark) and RE2
 # (DuckDB): no backreferences, no lookaround.
@@ -86,6 +92,42 @@ def sample_threshold(rate: float) -> int:
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
     return int(rate * SAMPLE_KEY_MOD)
+
+
+#: Fixed per-language mixing rates (q56 and the streaming curation
+#: flow); power-of-two rates make the thresholds exact integers.
+LANG_RATES: tuple[tuple[str, float], ...] = (
+    ("en", 1.0),
+    ("de", 0.5),
+    ("es", 0.25),
+    ("fr", 0.125),
+    ("zh", 0.0625),
+)
+
+
+def temperature_rates(counts: DataFrame, budget: float) -> DataFrame:
+    """(lang, rate): n^0.5-temperature sampling rates off a per-stratum
+    count table (q103/q167 shared core). The Σ√n / Σn denominators come
+    from a GLOBAL window over the counts table — O(#strata) rows in one
+    task, so the unpartitioned window is bounded by construction AND the
+    counts subtree enters the plan once (a separate .agg() + crossJoin
+    re-derives the count pass). Association mirrors the oracle exactly:
+    (budget*tot) * (sqrt(n)/d) / n."""
+    from pyspark.sql import Window as W
+
+    w_all = W.partitionBy()
+    return counts.select(
+        "lang",
+        F.least(
+            F.lit(1.0),
+            F.round(
+                (F.lit(budget) * F.sum("n").over(w_all))
+                * (F.sqrt("n") / F.sum(F.sqrt("n")).over(w_all))
+                / F.col("n"),
+                6,
+            ),
+        ).alias("rate"),
+    )
 
 
 def hash_sample(df: DataFrame, id_col: str, rate: float, salt: str = "smpl") -> DataFrame:
@@ -524,6 +566,63 @@ def gate_documents(
     ).select("doc_id", *carry, "n_tokens")
 
 
+#: The per-shard manifest's columns: every one an additive partial, so a
+#: manifest folds by merge_partials on shard_id.
+MANIFEST_COLS = ("n_docs", "n_tokens", "n_spanning", "checksum")
+
+
+def shard_manifest(
+    docs: DataFrame,
+    stored_man: DataFrame | None,
+    *,
+    n_shards: int,
+    seqlen: int,
+    salt_shuf: str,
+    salt_sum: str,
+) -> DataFrame:
+    """The manifest partials of ``docs`` (doc_id, n_tokens) packed after
+    ``stored_man`` — the corpus shard → manifest algebra shared by the
+    batch (q267) and streaming (q277) corpus builds.
+
+    Docs are dealt into shards by :func:`shuffle_shards` and packed in
+    (shuffle_key, doc_id) order, starting at the shard's stored token
+    total (q170's offset algebra; 0 for a new shard or no stored
+    manifest), so history is never repacked. Returns one row per shard
+    the docs land in: (shard_id, *MANIFEST_COLS) of ``docs`` alone —
+    n_spanning counts docs crossing a ``seqlen`` boundary, checksum sums
+    a ``salt_sum`` sample key per doc (exact int64). Fold it into
+    ``stored_man`` with ``incremental.merge_partials``.
+    """
+    from ..operators.skew import exclusive_prefix_sum
+
+    sharded = (
+        shuffle_shards(
+            docs.select("doc_id", "n_tokens"), "doc_id", n_shards, salt=salt_shuf
+        )
+        .withColumn("_ord", F.col("shuffle_key") * F.lit(2**31) + F.col("doc_id"))
+        .withColumn("_ck", sample_key_expr("doc_id", salt=salt_sum))
+    )
+    packed = exclusive_prefix_sum(
+        sharded, "shard_id", "_ord", "n_tokens", block_size=2**47
+    )
+    if stored_man is None:
+        packed = packed.withColumn("_base_tok", F.lit(0))
+    else:
+        packed = packed.join(
+            stored_man.select("shard_id", F.col("n_tokens").alias("_base_tok")),
+            "shard_id",
+            "left",
+        ).withColumn("_base_tok", F.coalesce("_base_tok", F.lit(0)))
+    first = F.expr(f"(_base_tok + _prefix) div {seqlen}")
+    last = F.expr(f"(_base_tok + _prefix + n_tokens - 1) div {seqlen}")
+    return packed.groupBy("shard_id").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
+        F.sum(F.when(last > first, 1).otherwise(0)).cast("long").alias("n_spanning"),
+        F.sum("_ck").cast("long").alias("checksum"),
+    )
+
+
 def delta_corpus_build(
     tagged: DataFrame,
     *,
@@ -572,21 +671,17 @@ def delta_corpus_build(
     apply touches batch rows + metadata only.
     """
     from ..operators.dedup import fingerprint, first_wins
-    from ..operators.skew import exclusive_prefix_sum
 
     surv = first_wins(tagged, [fingerprint("text")], ["e", "doc_id"])
     gated = gate_documents(
         surv, dup_t=dup_t, bigram_t=bigram_t, carry=("lang", "e")
-    ).localCheckpoint(eager=False)  # feeds rate counts + keyed pass
-    # Per-epoch frozen rates. Import here to avoid a circular import at
-    # module load (plans.curation_plans imports this module).
-    from ..plans.curation_plans import _temperature_rates
-
-    rates0 = _temperature_rates(
+    ).localCheckpoint()  # feeds rate counts + keyed pass
+    # Per-epoch frozen rates
+    rates0 = temperature_rates(
         gated.filter(F.col("e") == 0).groupBy("lang").agg(F.count("*").alias("n")),
         budget,
     ).withColumnRenamed("rate", "r0")
-    rates1 = _temperature_rates(
+    rates1 = temperature_rates(
         gated.groupBy("lang").agg(F.count("*").alias("n")), budget
     ).withColumnRenamed("rate", "r1")
     key = sample_key_expr("doc_id", salt=salt_mix)
@@ -599,64 +694,21 @@ def delta_corpus_build(
             | ((F.col("e") == 1) & (key < thr("r1")))
         )
         .select("doc_id", "e", "n_tokens")
+        .localCheckpoint()  # feeds the base and batch packings
     )
-    sharded = (
-        shuffle_shards(mixed, "doc_id", n_shards, salt=salt_shuf)
-        .withColumn("_ord", F.col("shuffle_key") * F.lit(2**31) + F.col("doc_id"))
-        .withColumn("_ck", sample_key_expr("doc_id", salt=salt_sum))
-        .localCheckpoint(eager=False)  # feeds the base and batch branches
+    pack = dict(
+        n_shards=n_shards, seqlen=seqlen, salt_shuf=salt_shuf, salt_sum=salt_sum
     )
-
-    def _man(packed, off):
-        first = F.expr(f"({off} + _prefix) div {seqlen}")
-        last = F.expr(f"({off} + _prefix + n_tokens - 1) div {seqlen}")
-        return packed.groupBy("shard_id").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum(F.when(last > first, 1).otherwise(0)).cast("long")
-            .alias("n_spanning"),
-            F.sum("_ck").cast("long").alias("checksum"),
-        )
-
-    base_man = _man(
-        exclusive_prefix_sum(
-            sharded.filter(F.col("e") == 0), "shard_id", "_ord", "n_tokens",
-            block_size=2**47,
-        ),
-        "0",
-    ).localCheckpoint(eager=False)  # stored manifest stand-in: offsets + merge
-    batch_p = (
-        exclusive_prefix_sum(
-            sharded.filter(F.col("e") == 1), "shard_id", "_ord", "n_tokens",
-            block_size=2**47,
-        )
-        .join(
-            base_man.select("shard_id", F.col("n_tokens").alias("_base_tok")),
-            "shard_id",
-            "left",
-        )
-        .withColumn("_base_tok", F.coalesce("_base_tok", F.lit(0)))
-    )
-    batch_man = _man(batch_p, "_base_tok")
-
-    b = base_man.select(
-        "shard_id", F.col("n_docs").alias("d0"), F.col("n_tokens").alias("t0"),
-        F.col("n_spanning").alias("s0"), F.col("checksum").alias("c0"),
-    )
-    n = batch_man.select(
-        "shard_id", F.col("n_docs").alias("d1"), F.col("n_tokens").alias("t1"),
-        F.col("n_spanning").alias("s1"), F.col("checksum").alias("c1"),
-    )
-    z = F.lit(0).cast("long")
+    base_man = shard_manifest(
+        mixed.filter(F.col("e") == 0), None, **pack
+    ).localCheckpoint()  # stored manifest stand-in: offsets + merge
+    batch_man = shard_manifest(mixed.filter(F.col("e") == 1), base_man, **pack)
     return (
-        b.join(n, "shard_id", "full")
-        .select(
-            "shard_id",
-            (F.coalesce("d0", z) + F.coalesce("d1", z)).alias("n_docs"),
-            (F.coalesce("t0", z) + F.coalesce("t1", z)).alias("n_tokens"),
-            (F.coalesce("s0", z) + F.coalesce("s1", z)).alias("n_spanning"),
-            (F.coalesce("c0", z) + F.coalesce("c1", z)).alias("checksum"),
-            F.coalesce("d1", z).alias("delta_docs"),
+        merge_partials(
+            base_man,
+            batch_man.withColumn("delta_docs", F.col("n_docs")),
+            ["shard_id"],
+            (*MANIFEST_COLS, "delta_docs"),
         )
         .select(
             "shard_id",

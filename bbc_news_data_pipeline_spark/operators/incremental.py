@@ -12,8 +12,9 @@ plus *mergeable* partial aggregates:
   2. read back just the affected partitions of the existing rollup
      (partition pruning on the day key — the unaffected 99.9% of the
      table is never opened);
-  3. merge and rewrite ONLY those partitions via dynamic partition
-     overwrite.
+  3. merge (``merge_partials``, the additive fold every state table in
+     streaming/ shares) and rewrite ONLY those partitions
+     (``sinks.overwrite_partitions``).
 
 Cost per refresh is O(new data + affected partitions), independent of
 table history length. Avg/stddev derive from (n, sum, sum_sq) at read
@@ -22,16 +23,20 @@ time — never store non-mergeable aggregates in an incremental rollup.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.sinks import capped_distinct, overwrite_partitions, table_exists
 
 # Mergeable state kept per (event_type, day): n, sum, sum_sq. Derived
 # metrics (mean, variance) are computed by readers from these.
 _STATE_COLS = ("n", "sum_value", "sum_sq")
 
-#: Cap on the driver-side affected-day list (the scd2.py discipline): a
-#: normal incremental delta touches a handful of days; thousands means an
-#: unbatched backfill replay, which must be split rather than silently
+#: Cap on the driver-side affected-day list (``sinks.capped_distinct``):
+#: a normal incremental delta touches a handful of days; thousands means
+#: an unbatched backfill replay, which must be split rather than silently
 #: materializing an unbounded isin() literal list on the driver.
 MAX_AFFECTED_DAYS = 1024
 
@@ -47,12 +52,36 @@ def rollup_events(events: DataFrame) -> DataFrame:
     )
 
 
-def merge_rollups(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two partial rollups (sum of mergeable states)."""
+def merge_partials(
+    stored: DataFrame | None,
+    delta: DataFrame,
+    keys: Sequence[str],
+    cols: Sequence[str],
+) -> DataFrame:
+    """Fold a delta of mergeable partial aggregates into the stored ones:
+    per ``keys``, each of ``cols`` is the sum of both sides (union +
+    groupBy-sum, one shuffle). A column one side does not carry counts as
+    0 there, so a stored-only column (a frozen baseline) passes through
+    and a delta-only column (a per-batch count) is 0 on stored-only keys.
+    ``stored=None`` (first fold) returns the delta alone. Keys the delta
+    does not touch keep bit-identical values: a sum of one integer."""
+
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(
+            *keys,
+            *[
+                F.col(c) if c in df.columns else F.lit(0).cast("long").alias(c)
+                for c in cols
+            ],
+        )
+
+    if stored is None:
+        return side(delta)
     return (
-        a.unionByName(b)
-        .groupBy("day", "event_type")
-        .agg(*[F.sum(c).alias(c) for c in _STATE_COLS])
+        side(stored)
+        .unionByName(side(delta))
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in cols])
     )
 
 
@@ -64,61 +93,21 @@ def incremental_update(
     Returns the number of affected days.
 
     The read-back of existing state filters on the delta's day set —
-    partition pruning keeps it O(affected partitions); dynamic
-    partition overwrite leaves every other partition byte-identical.
+    partition pruning keeps it O(affected partitions); the
+    partition-scoped overwrite leaves every other partition
+    byte-identical.
     """
-    from ..sources.sinks import table_exists
-
     delta = rollup_events(new_events)
+    affected = None
     # Filesystem probe, not read-and-swallow: an existing-but-unreadable
     # rollup must fail loudly on the read below, never be mistaken for
     # "first refresh" (which would silently drop all accumulated state on
     # the overwrite) — the shared sinks.table_exists discipline.
     if table_exists(spark, rollup_dir):
-        existing = spark.read.parquet(rollup_dir)
-        # LIMIT-bounded collect (round-8 verdict chore; mirrors
-        # streaming/scd2.py): the driver never materializes an unbounded
-        # day list even on a misconfigured months-long replay.
-        probe = (
-            delta.select("day").distinct().limit(MAX_AFFECTED_DAYS + 1).collect()
-        )
-        if len(probe) > MAX_AFFECTED_DAYS:
-            raise ValueError(
-                f"delta touches more than {MAX_AFFECTED_DAYS} distinct days — "
-                "this looks like an unbatched backfill replay; split it into "
-                "bounded batches (or rebuild the rollup from scratch) instead "
-                "of pruning with a thousands-element driver-side day list"
-            )
-        days = [r.day for r in probe]
-        affected = existing.filter(F.col("day").isin(days))
-        merged = merge_rollups(affected, delta)
-    else:
-        merged = delta
+        days = capped_distinct(delta, "day", MAX_AFFECTED_DAYS)
+        affected = spark.read.parquet(rollup_dir).filter(F.col("day").isin(days))
+    merged = merge_partials(affected, delta, ["day", "event_type"], _STATE_COLS)
 
     n_days = merged.select("day").distinct().count()
-    with _dynamic_overwrite(spark):
-        (
-            merged.repartition("day")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(rollup_dir)
-        )
+    overwrite_partitions(merged, rollup_dir, "day")
     return n_days
-
-
-class _dynamic_overwrite:
-    """Scoped ``partitionOverwriteMode=dynamic`` (overwrite replaces only
-    partitions present in the written data, not the whole table)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
-        return False

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..operators.curation import (
     EMAIL_RE,
     IPV4_RE,
+    LANG_RATES,
     PHONE_RE,
     asof_join,
     cc_two_phase,
@@ -34,6 +35,7 @@ from ..operators.curation import (
     sample_key_expr,
     sample_threshold,
 )
+from ..operators.curation import temperature_rates as _temperature_rates
 from ..operators.dedup import minhash_candidates
 from ..sources.tables import load
 from .dedup_plans import (
@@ -141,18 +143,10 @@ ORDER BY doc_id
 
 # ---------------------------------------------------------------------------
 # q56 — weighted dataset mixing (ext). Per-language sampling rates (the
-# dataset-mixing knob of an LLM data pipeline) via the same hash key under
-# an independent salt; power-of-two rates make thresholds exact integers.
+# dataset-mixing knob of an LLM data pipeline, operators.curation.LANG_RATES)
+# via the same hash key under an independent salt; power-of-two rates make
+# thresholds exact integers.
 # ---------------------------------------------------------------------------
-LANG_RATES: tuple[tuple[str, float], ...] = (
-    ("en", 1.0),
-    ("de", 0.5),
-    ("es", 0.25),
-    ("fr", 0.125),
-    ("zh", 0.0625),
-)
-
-
 def q56_dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     thr = F.lit(None).cast("long")
@@ -762,31 +756,8 @@ ORDER BY shard_id, shuffle_key, doc_id
 # twice for the same column. No global sort, row-local key derivation.
 # ---------------------------------------------------------------------------
 _Q103_BUDGET = 0.5  # target sample size as a fraction of the corpus
-
-
-def _temperature_rates(counts: DataFrame, budget: float) -> DataFrame:
-    """(lang, rate): n^0.5-temperature sampling rates off a per-stratum
-    count table (q103/q167 shared core). The Σ√n / Σn denominators come
-    from a GLOBAL window over the counts table — O(#strata) rows in one
-    task, so the unpartitioned window is bounded by construction AND the
-    counts subtree enters the plan once (a separate .agg() + crossJoin
-    re-derives the count pass). Association mirrors the oracle exactly:
-    (budget*tot) * (sqrt(n)/d) / n."""
-    from pyspark.sql import Window as W
-
-    w_all = W.partitionBy()
-    return counts.select(
-        "lang",
-        F.least(
-            F.lit(1.0),
-            F.round(
-                (F.lit(budget) * F.sum("n").over(w_all))
-                * (F.sqrt("n") / F.sum(F.sqrt("n")).over(w_all))
-                / F.col("n"),
-                6,
-            ),
-        ).alias("rate"),
-    )
+# The rates come from operators.curation.temperature_rates (imported as
+# _temperature_rates), shared with q167 and the corpus builds.
 
 
 def q103_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,14 @@
       → header CSV, optionally partitioned by a key column instead of the
         reference's per-topic filter loop.
 
+The state-table folds (operators/incremental.py, streaming/) share three
+write decisions from here: ``overwrite_partitions`` (partition-scoped
+overwrite as a per-write option — never session conf, which concurrent
+stages on one session would race on), ``capped_distinct`` (the bounded
+driver-side list of affected partitions) and the two-rename swap
+(``_swap_write`` / ``_recover_swap``) behind merge_upsert and
+compact_parquet.
+
 Scale notes: keyed append reads only the KEY COLUMN of the existing table
 (column pruning) for the anti-join; with AQE the freshly-arriving (small)
 side broadcasts. True atomic upsert needs a table format (Delta/Iceberg —
@@ -18,6 +26,7 @@ jars not in this container; noted as the production path in SCALE.md).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,11 +35,12 @@ from pyspark.sql import functions as F
 def table_exists(spark: SparkSession, path: str) -> bool:
     """S7 collection-exists probe (stats.py:13,21) for path-based tables.
 
-    A filesystem probe, NOT read-and-swallow (the corpusbuild._exists
-    discipline, round-9 sweep): an existing-but-unreadable table must
-    fail loudly on the subsequent read, never be mistaken for absent —
-    keyed_append would otherwise skip its anti-join and violate the
-    unique-key contract on the very table that is corrupt.
+    A filesystem probe, NOT read-and-swallow (round-9 sweep): an
+    existing-but-unreadable table must fail loudly on the subsequent
+    read, never be mistaken for absent — keyed_append would otherwise
+    skip its anti-join and violate the unique-key contract on the very
+    table that is corrupt, and a state-table fold would rebuild its
+    state from empty.
 
     "Exists" means the path holds at least one COMMITTED entry (a name
     not starting with ``_`` or ``.``): a directory containing only
@@ -66,11 +76,15 @@ def keyed_append(spark: SparkSession, df: DataFrame, path: str, key: str) -> int
         incoming = incoming.join(existing_keys, key, "left_anti")
     # Two actions (count + write) are fine here: the anti-join result is
     # cached implicitly small; at production scale use Delta MERGE instead.
+    # The cache is released even when an action raises, so a stage retry
+    # does not pile a second copy on top of the first.
     incoming = incoming.cache()
-    n = incoming.count()
-    if n:
-        incoming.write.mode("append").parquet(path)
-    incoming.unpersist()
+    try:
+        n = incoming.count()
+        if n:
+            incoming.write.mode("append").parquet(path)
+    finally:
+        incoming.unpersist()
     return n
 
 
@@ -206,19 +220,33 @@ def run_metadata_table(spark: SparkSession, path: str, record: dict) -> None:
     spark.createDataFrame([record]).write.mode("append").parquet(path)
 
 
-def _recover_swap(path: str, tmp: str, bak: str) -> str:
-    """Crash recovery for the two-rename swap protocol shared by
+def _swap_paths(path: str, tag: str) -> tuple[str, str]:
+    """The staging (``tmp``) and superseded (``bak``) siblings of a swap."""
+    return f"{path}.{tag}.tmp", f"{path}.{tag}.bak"
+
+
+def _swap_write(df: DataFrame, path: str, tag: str) -> None:
+    """Replace the table at ``path`` with ``df`` by the two-rename swap:
+    write ``tmp`` → rename path→``bak`` → rename tmp→path → delete
+    ``bak``. A crash at any step is repaired by :func:`_recover_swap`."""
+    tmp, bak = _swap_paths(path, tag)
+    df.write.mode("overwrite").parquet(tmp)
+    os.rename(path, bak)
+    os.rename(tmp, path)
+    shutil.rmtree(bak)
+
+
+def _recover_swap(path: str, tag: str) -> str:
+    """Crash recovery for :func:`_swap_write`, shared by
     :func:`compact_parquet` and :func:`merge_upsert`.
 
-    The swap protocol is: write ``tmp`` → rename path→``bak`` →
-    rename tmp→path → delete ``bak``. A crash can strand the table at any
-    point; this inspects what survived and either rolls FORWARD (tmp held
-    a complete rewritten copy) or rolls BACK (restore ``bak``), so the
-    table directory always exists again afterwards. Returns what it did:
-    ``clean`` / ``rolled_forward`` / ``rolled_back`` / ``missing``.
+    A crash can strand the table at any point of the swap; this inspects
+    what survived and either rolls FORWARD (tmp held a complete rewritten
+    copy) or rolls BACK (restore ``bak``), so the table directory always
+    exists again afterwards. Returns what it did: ``clean`` /
+    ``rolled_forward`` / ``rolled_back`` / ``missing``.
     """
-    import shutil
-
+    tmp, bak = _swap_paths(path, tag)
     if os.path.exists(path):
         # Crash before the first rename (tmp incomplete or complete — the
         # original is intact either way) or after the second (bak is the
@@ -242,18 +270,55 @@ def _recover_swap(path: str, tmp: str, bak: str) -> str:
 
 def recover_compact(path: str) -> str:
     """Crash recovery for :func:`compact_parquet` (see :func:`_recover_swap`)."""
-    return _recover_swap(path, f"{path}.compact.tmp", f"{path}.compact.bak")
+    return _recover_swap(path, "compact")
 
 
 def recover_merge(path: str) -> str:
     """Crash recovery for :func:`merge_upsert`'s unpartitioned swap."""
-    return _recover_swap(path, f"{path}.merge.tmp", f"{path}.merge.bak")
+    return _recover_swap(path, "merge")
 
 
 #: merge_upsert refuses batches touching more partitions than this —
 #: the driver-side partition list must stay O(affected partitions),
-#: never a full-history replay (operators/incremental.py discipline).
+#: never a full-history replay (see :func:`capped_distinct`).
 MAX_AFFECTED_PARTITIONS = 1024
+
+
+def capped_distinct(df: DataFrame, col: str, cap: int) -> list:
+    """The distinct values of ``col`` in ``df`` as a driver-side list,
+    refusing more than ``cap`` of them.
+
+    A normal incremental batch touches a handful of partitions (days,
+    snapshot dates); thousands mean an unbatched backfill replay, which
+    must be split into bounded batches rather than drive a
+    thousands-element isin() list or MERGE loop from the driver. The
+    collect itself is LIMIT-bounded to ``cap + 1`` rows, so even the
+    refused probe never materializes the full list. Callers pass their
+    module-level cap at call time.
+    """
+    vals = [r[0] for r in df.select(col).distinct().limit(cap + 1).collect()]
+    if len(vals) > cap:
+        raise ValueError(
+            f"batch carries more than {cap} distinct '{col}' values — this "
+            "looks like an unbatched backfill replay; split it into bounded "
+            "batches (e.g. one file per partition with maxFilesPerTrigger), "
+            "or rebuild the table from scratch"
+        )
+    return vals
+
+
+def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Partition-scoped overwrite: rewrite only the ``partition_col``
+    directories present in ``df``; every other partition of the table at
+    ``path`` stays byte-identical. Dynamic mode is a per-write option,
+    so concurrent writers on one session never see each other's mode."""
+    (
+        df.repartition(partition_col)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def merge_upsert(
@@ -272,12 +337,11 @@ def merge_upsert(
     "partitions_rewritten": n | None}``.
 
     With ``partition_col`` the rewrite is PARTITION-SCOPED (the 100 TB
-    path, reusing :class:`_dynamic_overwrite` from
-    ``operators/incremental.py``'s rollup machinery): only the
-    directories named by the incoming batch's partition values are read
-    back (partition pruning bounds the read to O(affected partitions))
-    and rewritten via dynamic partition overwrite — every other
-    partition stays byte-identical. CONTRACT (enforced): ``partition_col``
+    path, :func:`overwrite_partitions`, shared with
+    ``operators/incremental.py``'s rollup): only the directories named
+    by the incoming batch's partition values are read back (partition
+    pruning bounds the read to O(affected partitions)) and rewritten —
+    every other partition stays byte-identical. CONTRACT (enforced): ``partition_col``
     must be stable per key (derived from the key or an immutable
     attribute); a key that "moves" partitions between snapshots would
     dodge its matched-row delete and duplicate, so incoming keys found in
@@ -300,8 +364,6 @@ def merge_upsert(
     write (a column-pruned key scan of the cold partitions against the
     broadcast incoming keys — the alternative is the silent duplicate).
     """
-    import shutil
-
     # Repair any stranded swap BEFORE probing existence: a crash between
     # the two renames leaves `path` absent while the table lives on in
     # .merge.tmp/.merge.bak — probing first would take the create branch,
@@ -329,14 +391,10 @@ def merge_upsert(
         )
 
     if not table_exists(spark, path):
-        writer = df.write.mode("overwrite")
         if partition_col:
-            writer = (
-                df.repartition(partition_col)
-                .write.mode("overwrite")
-                .partitionBy(partition_col)
-            )
-        writer.parquet(path)
+            overwrite_partitions(df, path, partition_col)
+        else:
+            df.write.mode("overwrite").parquet(path)
         return {
             "inserted": n_in,
             "updated": 0,
@@ -349,27 +407,8 @@ def merge_upsert(
     incoming_keys = df.select(key)
 
     if partition_col:
-        # LIMIT-bounded collect (r10, verdict chore; mirrors
-        # operators/incremental.py's MAX_AFFECTED_DAYS): one value per
-        # affected partition directory, and the driver never
-        # materializes an unbounded list even on a misconfigured
-        # full-history replay.
-        probe = (
-            df.select(partition_col)
-            .distinct()
-            .limit(MAX_AFFECTED_PARTITIONS + 1)
-            .collect()
-        )
-        if len(probe) > MAX_AFFECTED_PARTITIONS:
-            raise ValueError(
-                f"incoming batch touches more than "
-                f"{MAX_AFFECTED_PARTITIONS} distinct '{partition_col}' "
-                "partitions — this looks like an unbatched backfill; "
-                "split it into bounded batches (or rebuild the table "
-                "with truncate_and_load) instead of pruning with a "
-                "thousands-element driver-side partition list"
-            )
-        parts = [r[0] for r in probe]
+        # one value per affected partition directory
+        parts = capped_distinct(df, partition_col, MAX_AFFECTED_PARTITIONS)
         # Enforce the partition-stability contract: a key arriving under a
         # NEW partition value would dodge its matched-row delete (the
         # rewrite is scoped to `parts`) and silently duplicate. The probe
@@ -397,15 +436,7 @@ def merge_upsert(
         matched = scoped.join(F.broadcast(incoming_keys), key, "left_semi").count()
         survivors = scoped.join(F.broadcast(incoming_keys), key, "left_anti")
         merged = survivors.unionByName(df.select(*existing.columns))
-        from ..operators.incremental import _dynamic_overwrite
-
-        with _dynamic_overwrite(spark):
-            (
-                merged.repartition(partition_col)
-                .write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
+        overwrite_partitions(merged, path, partition_col)
         return {
             "inserted": n_in - matched,
             "updated": matched,
@@ -415,11 +446,7 @@ def merge_upsert(
     matched = existing.join(F.broadcast(incoming_keys), key, "left_semi").count()
     survivors = existing.join(F.broadcast(incoming_keys), key, "left_anti")
     merged = survivors.unionByName(df.select(*existing.columns))
-    tmp, bak = f"{path}.merge.tmp", f"{path}.merge.bak"
-    merged.write.mode("overwrite").parquet(tmp)
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    _swap_write(merged, path, "merge")
     return {"inserted": n_in - matched, "updated": matched, "partitions_rewritten": None}
 
 
@@ -461,7 +488,6 @@ def compact_parquet(
     """
     import glob as _glob
     import math
-    import shutil
 
     recover_compact(path)
 
@@ -493,10 +519,6 @@ def compact_parquet(
         stats["compacted"] = False
         return stats
 
-    tmp, bak = f"{path}.compact.tmp", f"{path}.compact.bak"
-    spark.read.parquet(path).repartition(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    _swap_write(spark.read.parquet(path).repartition(n_out), path, "compact")
     stats["compacted"] = True
     return stats

@@ -72,7 +72,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .corpusbuild import _exists
+from ..operators.incremental import merge_partials
+from ..sources.sinks import table_exists
+from .drain import drain
 
 #: Physical fan-out of the postings layout (partition dirs bucket=0..N-1).
 #: Scale with the index: the replay probe reads only the buckets a
@@ -122,7 +124,7 @@ def apply_postings_batch(
     # POSTING_BUCKETS (bounded collect), and the isin filter on the
     # partition column prunes the postings scan to matching directories
     # only (asserted by tests/test_streaming_annindex.py).
-    if _exists(spark, post_p):
+    if table_exists(spark, post_p):
         stored_post = spark.read.parquet(post_p)
         if "bucket" not in stored_post.columns:
             # r10 review: a pre-bucketing state dir (flat layout) would
@@ -134,7 +136,7 @@ def apply_postings_batch(
                 "annindex.migrate_postings_layout(spark, state_dir) once "
                 "before draining" % post_p
             )
-        if not _exists(spark, stats_p):
+        if not table_exists(spark, stats_p):
             # r10 review: postings-without-stats is EXACTLY the batch-0
             # tear (the first committed batch writes both). Proceeding
             # would let the replay anti-join drop the vectors and the
@@ -191,31 +193,21 @@ def apply_postings_batch(
         .localCheckpoint()  # EAGER: feeds stats fold + postings append
     )
     bstats = new_post.groupBy("cell").agg(
-        F.count("*").cast("long").alias("n1"),
-        F.sum("r2").cast("long").alias("s1"),
+        F.count("*").cast("long").alias("n"),
+        F.sum("r2").cast("long").alias("sum_r2"),
     )
-    z = F.lit(0).cast("long")
-    if _exists(spark, stats_p):
-        stored = spark.read.parquet(stats_p)
-        merged = (
-            stored.join(bstats, "cell", "full")
-            .select(
-                "cell",
-                (F.coalesce("n", z) + F.coalesce("n1", z)).alias("n"),
-                (F.coalesce("sum_r2", z) + F.coalesce("s1", z)).alias("sum_r2"),
-                # baseline frozen: cells first seen after batch 0 get 0
-                F.coalesce("base_n", z).alias("base_n"),
-                F.coalesce("base_sum_r2", z).alias("base_sum_r2"),
-            )
+    if table_exists(spark, stats_p):
+        # baseline frozen: the batch carries no base_* columns, so they
+        # merge as 0 — stored baselines stay, new cells get 0
+        merged = merge_partials(
+            spark.read.parquet(stats_p), bstats, ["cell"],
+            ("n", "sum_r2", "base_n", "base_sum_r2"),
         )
     else:
         # FIRST batch: its stats ARE the baseline
         merged = bstats.select(
-            "cell",
-            F.col("n1").alias("n"),
-            F.col("s1").alias("sum_r2"),
-            F.col("n1").alias("base_n"),
-            F.col("s1").alias("base_sum_r2"),
+            "cell", "n", "sum_r2",
+            F.col("n").alias("base_n"), F.col("sum_r2").alias("base_sum_r2"),
         )
     merged = merged.localCheckpoint()  # safe to overwrite the source below
     # Postings FIRST, stats second (r10 ADVICE fix): a crash between the
@@ -264,7 +256,7 @@ def rebuild_cellstats(spark: SparkSession, state_dir: str) -> None:
     """
     post_p = os.path.join(state_dir, "postings")
     stats_p = os.path.join(state_dir, "cellstats")
-    if not _exists(spark, stats_p):
+    if not table_exists(spark, stats_p):
         raise ValueError(
             "rebuild_cellstats requires an existing cellstats table "
             "(a batch-0 tear is unrepairable: reset the state dir and "
@@ -298,12 +290,8 @@ def run_stream_postings(
     stream_df: DataFrame, state_dir: str, ckpt_dir: str
 ) -> None:
     """Drain every available micro-batch of vectors into the index state."""
-    (
-        stream_df.writeStream.foreachBatch(
-            lambda bdf, _id: apply_postings_batch(bdf.sparkSession, bdf, state_dir)
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        stream_df,
+        lambda bdf: apply_postings_batch(bdf.sparkSession, bdf, state_dir),
+        ckpt_dir,
     )

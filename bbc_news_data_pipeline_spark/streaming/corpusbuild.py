@@ -12,14 +12,21 @@ State (parquet tables under one state dir):
               (tiny, overwritten; n_tokens doubles as the packing
               offset for the next batch — q170's algebra)
 
-Per batch: dedup within the batch (min doc_id per fingerprint), probe
-the stored index with ONE left-anti join (the corpus-scale index never
-shuffles onto the batch side beyond the join), gate row-locally,
-sample at temperature rates recomputed from the UPDATED cumulative
-counts (sticky rates: earlier epochs were sampled at their own stored
-rates and are never revisited), pack per shard starting at the stored
-token totals, merge the manifest additively, append the new
-fingerprints.
+Per batch:
+  1. dedup within the batch (min doc_id per fingerprint), then probe
+     the stored index with ONE left-anti join (the corpus-scale index
+     never shuffles onto the batch side beyond the join);
+  2. gate row-locally (operators/curation.gate_documents);
+  3. fold the gated per-lang counts into ``counts``
+     (operators/incremental.merge_partials) and derive temperature rates
+     from the UPDATED cumulative counts (sticky rates: earlier epochs
+     were sampled at their own stored rates and are never revisited);
+  4. sample the batch at those rates;
+  5. pack per shard starting at the stored token totals
+     (operators/curation.shard_manifest — the same algebra as the batch
+     delta build);
+  6. fold the batch manifest into ``manifest`` (merge_partials);
+  7. append the new fingerprints to ``fpindex``.
 
 Equivalence contract (the oracle in plans/curation_plans.q277): a full
 rebuild over the union with epoch stamps — window dedup ordered by
@@ -42,21 +49,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    """True iff the state table holds committed data on disk.
-
-    A filesystem probe, NOT a read-and-swallow: a state table that exists
-    but cannot be read (corrupt parquet, transient IO error) must FAIL
-    LOUDLY on the subsequent read, never be mistaken for "first batch" —
-    silently rebuilding dedup/counts/manifest state from empty would
-    corrupt every later batch (round-8 ADVICE finding). Delegates to
-    sinks.table_exists, whose committed-entry semantics also keep a
-    crashed first write (an only-``_temporary`` directory) retryable.
-    """
-    from ..sources.sinks import table_exists
-
-    return table_exists(spark, path)
+from ..operators.curation import (
+    MANIFEST_COLS,
+    SAMPLE_KEY_MOD,
+    gate_documents,
+    sample_key_expr,
+    shard_manifest,
+    temperature_rates,
+)
+from ..operators.dedup import fingerprint, first_wins
+from ..operators.incremental import merge_partials
+from ..sources.sinks import table_exists
+from .drain import drain
 
 
 def apply_corpus_batch(
@@ -75,58 +79,34 @@ def apply_corpus_batch(
 ) -> dict:
     """Fold one micro-batch of (doc_id, lang, text) into the stored
     corpus state. Returns per-batch stats."""
-    from ..operators.curation import (
-        SAMPLE_KEY_MOD,
-        gate_documents,
-        sample_key_expr,
-        shuffle_shards,
-    )
-    from ..operators.dedup import fingerprint, first_wins
-    from ..operators.skew import exclusive_prefix_sum
-    from ..plans.curation_plans import _temperature_rates
-
     fpi, cnts, man = (
         os.path.join(state_dir, t) for t in ("fpindex", "counts", "manifest")
     )
 
-    # 1. dedup: min-id within the batch, then anti-join the stored index
+    # 1. dedup: min-id within the batch, then anti-join the stored index.
+    # Every checkpoint below is eager: a lazily checkpointed frame lets
+    # Spark drop its SQL-metric accumulators before its tasks report.
     batch = first_wins(batch_df.withColumn("_fp", fingerprint("text")), ["_fp"], ["doc_id"])
-    if _exists(spark, fpi):
+    if table_exists(spark, fpi):
         batch = batch.join(
             spark.read.parquet(fpi),
             batch["_fp"] == F.col("fp"),
             "left_anti",
         )
-    # lazy: survivors feed gate + index append through ONE compiled RDD;
-    # the cum eager checkpoint below (a full groupBy over gated) is the
-    # batch's first action and materializes batch+gated caches end-to-end,
-    # so the later fpindex append and stats counts read the cache — two
-    # fewer scheduler jobs per micro-batch, identical data.
-    batch = batch.localCheckpoint(eager=False)
+    batch = batch.localCheckpoint()  # feeds the gate and the index append
 
     # 2. row-local quality gate
     gated = gate_documents(
         batch, dup_t=dup_t, bigram_t=bigram_t, carry=("lang",)
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
 
     # 3. cumulative counts -> this epoch's frozen rates
-    bc = gated.groupBy("lang").agg(F.count("*").alias("n"))
-    if _exists(spark, cnts):
-        stored = spark.read.parquet(cnts)
-        z = F.lit(0).cast("long")
-        cum = (
-            stored.withColumnRenamed("n", "n0")
-            .join(bc.withColumnRenamed("n", "n1"), "lang", "full")
-            .select(
-                "lang",
-                (F.coalesce("n0", z) + F.coalesce("n1", z)).alias("n"),
-            )
-        )
-    else:
-        cum = bc.select("lang", F.col("n").cast("long").alias("n"))
-    cum = cum.localCheckpoint()  # safe to overwrite the source below
+    stored_cnt = spark.read.parquet(cnts) if table_exists(spark, cnts) else None
+    cum = merge_partials(
+        stored_cnt, gated.groupBy("lang").agg(F.count("*").alias("n")), ["lang"], ["n"]
+    ).localCheckpoint()  # safe to overwrite the source below
     cum.write.mode("overwrite").parquet(cnts)
-    rates = _temperature_rates(cum, budget)
+    rates = temperature_rates(cum, budget)
 
     # 4. mix at the updated rates (batch docs only — history is sticky)
     thr = F.floor(F.col("rate") * F.lit(float(SAMPLE_KEY_MOD))).cast("long")
@@ -136,60 +116,18 @@ def apply_corpus_batch(
         .select("doc_id", "n_tokens")
     )
 
-    # 5. pack from the stored per-shard token totals (q170's offsets)
-    sharded = (
-        shuffle_shards(mixed, "doc_id", n_shards, salt=salt_shuf)
-        .withColumn("_ord", F.col("shuffle_key") * F.lit(2**31) + F.col("doc_id"))
-        .withColumn("_ck", sample_key_expr("doc_id", salt=salt_sum))
+    # 5. pack from the stored per-shard token totals, 6. merge the
+    # manifest additively; unchanged shards keep bit-identical rows
+    stored_man = (
+        spark.read.parquet(man).localCheckpoint() if table_exists(spark, man) else None
     )
-    if _exists(spark, man):
-        # lazy: merged's EAGER checkpoint below consumes it (fully
-        # materializing this cache) strictly before the manifest overwrite,
-        # so the read-then-overwrite hazard is still fenced
-        stored_man = spark.read.parquet(man).localCheckpoint(eager=False)
-    else:
-        stored_man = None
-    packed = exclusive_prefix_sum(
-        sharded, "shard_id", "_ord", "n_tokens", block_size=2**47
+    bman = shard_manifest(
+        mixed, stored_man,
+        n_shards=n_shards, seqlen=seqlen, salt_shuf=salt_shuf, salt_sum=salt_sum,
     )
-    if stored_man is not None:
-        packed = packed.join(
-            stored_man.select("shard_id", F.col("n_tokens").alias("_base_tok")),
-            "shard_id",
-            "left",
-        ).withColumn("_base_tok", F.coalesce("_base_tok", F.lit(0)))
-    else:
-        packed = packed.withColumn("_base_tok", F.lit(0))
-    first = F.expr(f"(_base_tok + _prefix) div {seqlen}")
-    last = F.expr(f"(_base_tok + _prefix + n_tokens - 1) div {seqlen}")
-    bman = packed.groupBy("shard_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.sum(F.when(last > first, 1).otherwise(0)).cast("long").alias("n_spanning"),
-        F.sum("_ck").cast("long").alias("checksum"),
-    )
-
-    # 6. additive manifest merge; unchanged shards keep bit-identical rows
-    if stored_man is not None:
-        z = F.lit(0).cast("long")
-        b = stored_man.select(
-            "shard_id", F.col("n_docs").alias("d0"), F.col("n_tokens").alias("t0"),
-            F.col("n_spanning").alias("s0"), F.col("checksum").alias("c0"),
-        )
-        n = bman.select(
-            "shard_id", F.col("n_docs").alias("d1"), F.col("n_tokens").alias("t1"),
-            F.col("n_spanning").alias("s1"), F.col("checksum").alias("c1"),
-        )
-        merged = b.join(n, "shard_id", "full").select(
-            "shard_id",
-            (F.coalesce("d0", z) + F.coalesce("d1", z)).alias("n_docs"),
-            (F.coalesce("t0", z) + F.coalesce("t1", z)).alias("n_tokens"),
-            (F.coalesce("s0", z) + F.coalesce("s1", z)).alias("n_spanning"),
-            (F.coalesce("c0", z) + F.coalesce("c1", z)).alias("checksum"),
-        )
-    else:
-        merged = bman
-    merged = merged.localCheckpoint()
+    merged = merge_partials(
+        stored_man, bman, ["shard_id"], MANIFEST_COLS
+    ).localCheckpoint()
     merged.write.mode("overwrite").parquet(man)
 
     # 7. append the batch's fingerprints to the stored index
@@ -209,14 +147,8 @@ def run_stream_corpus_build(
 ) -> None:
     """Drain every available micro-batch of documents into the corpus
     state tables."""
-    (
-        stream_df.writeStream.foreachBatch(
-            lambda bdf, _id: apply_corpus_batch(
-                bdf.sparkSession, bdf, state_dir, **kwargs
-            )
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        stream_df,
+        lambda bdf: apply_corpus_batch(bdf.sparkSession, bdf, state_dir, **kwargs),
+        ckpt_dir,
     )

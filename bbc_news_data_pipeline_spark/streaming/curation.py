@@ -23,9 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.textstats import max_run_count_expr
-from ..operators.curation import redact_pii, sample_key_expr, sample_threshold
+from ..operators.curation import (
+    LANG_RATES,
+    redact_pii,
+    sample_key_expr,
+    sample_threshold,
+)
 from ..operators.dedup import fingerprint, shingles_from_tokens
-from ..plans.curation_plans import LANG_RATES
 
 DOC_SCHEMA = T.StructType(
     [

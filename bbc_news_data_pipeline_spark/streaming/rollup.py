@@ -21,10 +21,11 @@ skipping batch ids already recorded.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..operators.incremental import incremental_update
+from .drain import drain
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -42,15 +43,8 @@ def run_streaming_rollup(
 ) -> None:
     """Drain all available event micro-batches, folding each into the
     rollup table (only affected day partitions rewritten per batch)."""
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
-
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        incremental_update(batch.sparkSession, rollup_dir, batch)
-
-    (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir),
+        lambda batch: incremental_update(batch.sparkSession, rollup_dir, batch),
+        ckpt_dir,
     )

@@ -21,19 +21,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_apply_table
+from ..sources.sinks import capped_distinct
+from .drain import drain
 
 
 MAX_SNAPSHOTS_PER_BATCH = 1024
 """Hard cap on distinct snapshot dates applied from one micro-batch.
 
-The per-batch ``collect()`` below is bounded by snapshots-per-batch (a
-handful in steady state), never by rows — but a backfill replay that
-feeds months of daily snapshots in ONE batch would silently turn it
-into a driver-side list of thousands, and each date then costs a full
-MERGE pass. Mirroring merge_upsert's duplicate-key refusal, a batch
-carrying more than this many distinct dates fails loudly with
-re-ingestion guidance (split the replay into bounded batches, e.g.
-maxFilesPerTrigger) instead of degrading the driver.
+The per-batch date list is bounded by snapshots-per-batch (a handful
+in steady state), never by rows — but a backfill replay that feeds
+months of daily snapshots in ONE batch would silently turn it into a
+driver-side list of thousands, and each date then costs a full MERGE
+pass. A batch carrying more than this many distinct dates fails loudly
+with re-ingestion guidance (``sinks.capped_distinct``, the guard
+merge_upsert and the incremental rollup share) instead of degrading
+the driver.
 """
 
 
@@ -45,24 +47,11 @@ def apply_snapshot_batch(
     date_col: str,
     n_buckets: int = 16,
 ) -> list[dict]:
-    """Apply every full snapshot in the batch, in date order. The distinct
-    date collect itself is LIMIT-bounded to the cap + 1 (the driver never
-    materializes an unbounded list even on a misconfigured replay)."""
-    probe = (
-        batch_df.select(date_col)
-        .distinct()
-        .limit(MAX_SNAPSHOTS_PER_BATCH + 1)
-        .collect()
+    """Apply every full snapshot in the batch, in date order (at most
+    MAX_SNAPSHOTS_PER_BATCH distinct dates)."""
+    dates = sorted(
+        str(d) for d in capped_distinct(batch_df, date_col, MAX_SNAPSHOTS_PER_BATCH)
     )
-    if len(probe) > MAX_SNAPSHOTS_PER_BATCH:
-        raise ValueError(
-            f"micro-batch carries more than {MAX_SNAPSHOTS_PER_BATCH} distinct "
-            f"'{date_col}' snapshot dates — this looks like an unbatched "
-            "backfill replay; split it into bounded micro-batches (e.g. one "
-            "file per snapshot with maxFilesPerTrigger) instead of applying "
-            "thousands of MERGE passes from one driver-side loop"
-        )
-    dates = sorted(str(r[0]) for r in probe)
     stats = []
     for d in dates:
         snap = batch_df.filter(F.col(date_col) == d).select(key, attr)
@@ -85,14 +74,10 @@ def run_stream_scd2(
 ) -> None:
     """Drain every available micro-batch of snapshot rows into the SCD2
     table at ``path``."""
-    (
-        stream_df.writeStream.foreachBatch(
-            lambda bdf, _id: apply_snapshot_batch(
-                bdf, path, key, attr, date_col, n_buckets=n_buckets
-            )
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        stream_df,
+        lambda bdf: apply_snapshot_batch(
+            bdf, path, key, attr, date_col, n_buckets=n_buckets
+        ),
+        ckpt_dir,
     )

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.sinks import merge_upsert, recover_merge, table_exists
+from .drain import drain
 
 
 def resolve_latest(df: DataFrame, key: str, version_col: str) -> DataFrame:
@@ -104,14 +105,10 @@ def run_stream_upsert(
     """Drain every available micro-batch through the versioned upsert.
     Exactly-once effective: the checkpoint dedups batch REPLAY, and the
     version guard dedups row REDELIVERY across checkpoints."""
-    (
-        stream_df.writeStream.foreachBatch(
-            lambda bdf, _id: upsert_batch(
-                bdf, path, key, version_col, partition_col=partition_col
-            )
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        stream_df,
+        lambda bdf: upsert_batch(
+            bdf, path, key, version_col, partition_col=partition_col
+        ),
+        ckpt_dir,
     )

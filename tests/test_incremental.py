@@ -132,3 +132,38 @@ def test_update_fails_loudly_on_unreadable_state(spark, sf_dir, tmp_path):
     (rollup_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception):
         incremental_update(spark, str(rollup_dir), ev.limit(10))
+
+
+def test_partition_scoped_writes_leave_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The partition-scoped overwrites (a rollup refresh over an existing
+    rollup, a partitioned merge_upsert) set dynamic mode per write, never
+    on the session: a session-wide set/restore would race with another
+    stage writing on the same session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from bbc_news_data_pipeline_spark.sources.sinks import merge_upsert
+
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys_set.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    ev = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00", 1, "view", 1.0),
+         (2, "2024-01-02 10:00:00", 1, "view", 2.0)],
+        "event_id long, ts string, user_id long, event_type string, value double",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    rollup_dir = str(tmp_path / "rollup")
+    incremental_update(spark, rollup_dir, ev)
+    incremental_update(spark, rollup_dir, ev.limit(1))
+    path = str(tmp_path / "t")
+    for v in ("a", "b"):
+        rows = spark.createDataFrame([(1, 0, v), (2, 1, v)], "k long, p long, v string")
+        merge_upsert(spark, rows, path, "k", partition_col="p")
+
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys_set
+    assert spark.read.parquet(path).count() == 2
+    assert spark.read.parquet(rollup_dir).agg(F.sum("n")).first()[0] == 3

@@ -153,11 +153,12 @@ def test_unpartitioned_window_sites_pinned():
                                         # digest cum (value-DOMAIN-bounded)
         "plans/embeddings_plans.py": 1, # q107 component-norm fold over the
                                         # 64-row (dim-bounded) table
-        "plans/curation_plans.py": 4,   # q120 rep ring (B=64 bucket reps);
+        "plans/curation_plans.py": 3,   # q120 rep ring (B=64 bucket reps);
                                         # q189 source-size ladder
-                                        # (<= #sources rows); q103
-                                        # temperature rates over O(#langs)
-                                        # strata counts
+                                        # (<= #sources rows)
+        "operators/curation.py": 1,     # temperature_rates (q103, q167,
+                                        # the corpus builds) over
+                                        # O(#langs) strata counts
         "plans/quality_plans.py": 6,    # q73 PSI totals (5 event types);
                                         # q159 ECE rollup (<=10 bin rows);
                                         # q177 global digest cumulative

@@ -27,6 +27,34 @@ def test_keyed_append_insert_if_absent(spark, links, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
+def test_keyed_append_releases_cache_when_an_action_raises(spark, tmp_path):
+    """keyed_append caches the deduped batch for its count + write; a
+    raising action must still release that cache, or every stage retry
+    would pile one more cached copy into the session."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    def boom(url):
+        raise RuntimeError("udf failure")
+
+    # the count raises: no cache entry is left for the deduped batch
+    bad = spark.createDataFrame([("u1",)], "url string").withColumn(
+        "x", F.udf(boom, "int")("url")
+    )
+    with pytest.raises(Exception, match="udf failure"):
+        sinks.keyed_append(spark, bad, str(tmp_path / "links"), key="url")
+    assert bad.dropDuplicates(["url"]).storageLevel == StorageLevel.NONE
+
+    # the write raises after the count materialized the cache (the target's
+    # parent is a regular file): no persisted RDD is left behind
+    (tmp_path / "file").write_text("x")
+    rows = spark.createDataFrame([("u1",)], "url string")
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    with pytest.raises(Exception):
+        sinks.keyed_append(spark, rows, str(tmp_path / "file" / "links"), key="url")
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted_before
+
+
 def test_merge_upsert_unpartitioned(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
