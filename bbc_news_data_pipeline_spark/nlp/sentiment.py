@@ -6,8 +6,8 @@ VADER (M6), a DistilBERT binary classifier (M7), and a 7-class emotion
 model (M8). This container has neither NLTK/VADER nor transformers, so:
 
   * the PRIMARY path is a deterministic lexicon scorer expressed as pure
-    column algebra (map-literal lookup + fold + VADER's compound
-    normalization s/sqrt(s²+15)) — JVM-side, scales to any corpus;
+    column algebra (hash-set filter + map-literal lookup + fold + VADER's
+    compound normalization s/sqrt(s²+15)) — JVM-side, scales to any corpus;
   * the threshold labeling reproduces the reference EXACTLY
     (``sentiment_analysis.py:48-53``): positive iff ≥ .05, negative iff
     ≤ -.05, else neutral;
@@ -61,15 +61,22 @@ def compound_score_expr(tokens_col: str) -> Column:
     """VADER-style compound score from a tokens column: sum of token
     valences, normalized to (-1, 1) by s/sqrt(s²+15).
 
-    One fold over the token array, map lookup per token — all JVM-side.
-    Built as SQL text so the lexicon map reaches the JVM in one call
-    instead of three py4j round trips per entry.
+    One fold over the lexicon tokens of the array — all JVM-side. The
+    tokens are first filtered by ``t IN (<lexicon words>)``, which
+    OptimizeIn turns into a hash-set lookup; only the survivors pay the
+    map lookup, a linear scan over the lexicon keys. Dropping the other
+    tokens drops only ``+0.0D`` terms, so the sum is bit-identical to a
+    fold over every token. The fold's finish lambda normalizes, so the
+    sum is computed once, not once per use. Built as SQL text so the
+    lexicon reaches the JVM in one call instead of three py4j round
+    trips per entry.
     """
-    s = (
-        f"aggregate(transform({tokens_col}, t -> coalesce(element_at({_valence_map_sql()}, t), 0.0D)), "
-        "0.0D, (acc, x) -> acc + x)"
+    words = ", ".join(f"'{w}'" for w in VALENCE)
+    return F.expr(
+        f"aggregate(filter({tokens_col}, t -> t IN ({words})), "
+        f"0.0D, (acc, t) -> acc + element_at({_valence_map_sql()}, t), "
+        "s -> s / sqrt(s * s + 15.0D))"
     )
-    return F.expr(f"{s} / sqrt({s} * {s} + 15.0D)")
 
 
 def sentiment_label_expr(score_col: Column | str) -> Column:

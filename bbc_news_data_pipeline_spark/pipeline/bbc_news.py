@@ -87,7 +87,10 @@ def build_pipeline(
         finally:
             bundle.tokens_df.unpersist()  # cached by fit_lda; this write is its last use
         sinks.write_csv(words, f"{workdir}/topic_words_top8", partition_by="topic_id")
-        return {"k": lda_k, "n_topics": words.select("topic_id").distinct().count()}
+        # the topic ids topic_words explodes, from describeTopics' local
+        # rows: collecting them runs no Spark job
+        desc = bundle.lda_model.describeTopics(8).collect()
+        return {"k": lda_k, "n_topics": len({r["topic"] for r in desc if r["termIndices"]})}
 
     def sentiment(_: dict[str, Any]) -> int:
         processed = spark.read.parquet(processed_path)

@@ -11,6 +11,17 @@ needs so plans behave identically everywhere:
   * shuffle.partitions sized to cores for local runs; on a real cluster
     AQE's coalescing makes the initial number mostly a ceiling.
   * Arrow enabled so pandas interchange and Pandas UDFs are vectorized.
+  * Generated-code cache sized to the pipeline's working set. Spark keeps
+    Janino-compiled whole-stage and expression classes in one JVM-wide
+    LRU keyed by the generated source, capped by the static conf
+    ``spark.sql.codegen.cache.maxEntries`` (default 100). On the
+    benchmark's inputs one DAG run generates ~135 distinct classes and
+    one curation pass ~117–129, so at 100 the LRU evicts every class
+    before its next use and each warm run recompiles ~90–120 of them
+    (0.5–1 s of Janino time). A session that runs a DAG, a curation pass
+    and a stream ladder touches 263 classes (mean 2.1 KB, max 8.7 KB of
+    bytecode), so 1,000 entries leave ~4x headroom for at most ~9 MB.
+    ``count_codegen_compiles`` checks that a repeat compiles nothing.
 """
 
 from __future__ import annotations
@@ -21,6 +32,11 @@ from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries, sized in the module docstring. New
+# plans grow the working set: re-measure it with count_codegen_compiles
+# and raise this, never cut it to a current count.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def cluster_conf(
@@ -37,7 +53,8 @@ def cluster_conf(
     repo is written against these assumptions: AQE re-plans from actual
     map sizes, shuffle partitions start at 2×total-cores and coalesce
     down, scan splits target ``target_partition_mb``, skew joins split
-    oversized partitions, and speculation covers stragglers.
+    oversized partitions, speculation covers stragglers, and every JVM's
+    generated-code cache holds the pipeline's working set.
     """
     total_cores = executors * cores_per_executor
     conf = {
@@ -52,6 +69,8 @@ def cluster_conf(
         "spark.sql.session.timeZone": "UTC",
         "spark.speculation": "true",
         "spark.sql.parquet.compression.codec": "zstd",
+        # executors keep their own generated-code caches and thrash alike
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
     }
     # Arrow batch ROW cap — the memory bound the multimodal mapInPandas
     # contract relies on (operators/multimodal.py): the 10k default means
@@ -91,6 +110,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -136,3 +156,20 @@ def count_py4j_round_trips() -> Iterator[Callable[[], int]]:
         yield lambda: sent[0]
     finally:
         ClientServerConnection.send_command = send
+
+
+@contextmanager
+def count_codegen_compiles(spark: SparkSession) -> Iterator[Callable[[], int]]:
+    """Count generated classes Janino compiles inside the block; yields a
+    callable giving the running total.
+
+    Reads the count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``
+    histogram, which the generated-code cache updates only on a miss, so
+    a repeated operation whose classes are still cached reads 0. The
+    counter is JVM-wide: in local mode it covers the executors' compiles
+    too, on a cluster only the driver's.
+    """
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    hist = metrics.METRIC_COMPILATION_TIME()
+    start = hist.getCount()
+    yield lambda: hist.getCount() - start

@@ -1,4 +1,5 @@
 import os
+import random
 import sys
 
 import pytest
@@ -10,6 +11,11 @@ from bbc_news_data_pipeline_spark.session import count_py4j_round_trips  # noqa:
 
 SF_DIR = "/root/testdata/sf0.001"
 
+POS_WORDS = ["wonderful", "great", "success", "hope", "progress", "win"]
+NEG_WORDS = ["crisis", "war", "terrible", "failure", "threat", "disaster"]
+FILLER = ["community", "report", "city", "people", "meeting", "plan", "event",
+          "update", "council", "project", "program", "service", "group"]
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -20,6 +26,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _article_html(title, date, words):
+    body = " ".join(f"<p>{w}</p>" for w in [" ".join(words[i:i+12]) for i in range(0, len(words), 12)])
+    return (
+        f'<html><body><h1 data-testid="headline">{title}</h1>'
+        f'<time datetime="{date}">x</time>{body}</body></html>'
+    )
+
+
+@pytest.fixture(scope="session")
+def news_pages(spark):
+    """(sitemap xml, fetched pages) DataFrames for ``build_pipeline``: 20
+    articles, even ones planted positive and odd ones negative."""
+    rng = random.Random(42)
+    pages, xml_entries = [], []
+    for i in range(20):
+        url = f"https://www.bbc.com/news/articles/doc{i:08d}aaaa"
+        date = f"2024-03-{(i % 9) + 1:02d}T10:00:00.000Z"
+        sentiment_words = POS_WORDS if i % 2 == 0 else NEG_WORDS
+        words = [rng.choice(FILLER) for _ in range(70)] + sentiment_words * 3
+        rng.shuffle(words)
+        pages.append((url, _article_html(f"Title {i}", date, words)))
+        xml_entries.append(f"<url><loc>{url}</loc><lastmod>{date}</lastmod></url>")
+    xml = f"<urlset>{''.join(xml_entries)}</urlset>"
+    sitemap_df = spark.createDataFrame([(xml,)], "xml string")
+    pages_df = spark.createDataFrame(pages, "url string, html string")
+    return sitemap_df, pages_df
 
 
 @pytest.fixture

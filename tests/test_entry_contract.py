@@ -241,12 +241,16 @@ def test_query_callables_accept_sf_dir(spark, sf_dir):
         assert df.count() > 0
 
 
-def test_cluster_conf_shape():
+def test_cluster_conf_shape(spark):
     from bbc_news_data_pipeline_spark.session import cluster_conf
 
     conf = cluster_conf(executors=1000, cores_per_executor=4)
     assert conf["spark.sql.shuffle.partitions"] == str(2 * 1000 * 4)
     assert conf["spark.sql.adaptive.enabled"] == "true"
+    # executors get the same generated-code cache size as get_spark's session
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert conf[key] == spark.conf.get(key)
+    assert int(conf[key]) > 100  # Spark's default; thrashes (session.py)
     # every value must be a string (SparkConf contract)
     assert all(isinstance(v, str) for v in conf.values())
 

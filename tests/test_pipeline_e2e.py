@@ -3,53 +3,20 @@ topics ∥ (sentiment → stats) ∥ emotion (the reference DAG
 bbc_news_dag.py:360-362), plus runner control-flow semantics (retries,
 ALL_DONE, skip-downstream, concurrent siblings, inherited job group)."""
 
-import random
 import threading
 
-import pytest
 from pyspark.sql import functions as F
 
 from bbc_news_data_pipeline_spark.pipeline.bbc_news import build_pipeline
 from bbc_news_data_pipeline_spark.pipeline.runner import Pipeline, Stage
-
-POS_WORDS = ["wonderful", "great", "success", "hope", "progress", "win"]
-NEG_WORDS = ["crisis", "war", "terrible", "failure", "threat", "disaster"]
-FILLER = ["community", "report", "city", "people", "meeting", "plan", "event",
-          "update", "council", "project", "program", "service", "group"]
-
-
-def _article_html(title, date, words):
-    body = " ".join(f"<p>{w}</p>" for w in [" ".join(words[i:i+12]) for i in range(0, len(words), 12)])
-    return (
-        f'<html><body><h1 data-testid="headline">{title}</h1>'
-        f'<time datetime="{date}">x</time>{body}</body></html>'
-    )
-
-
-@pytest.fixture(scope="module")
-def fixtures(spark):
-    rng = random.Random(42)
-    urls, pages, xml_entries = [], [], []
-    for i in range(20):
-        url = f"https://www.bbc.com/news/articles/doc{i:08d}aaaa"
-        date = f"2024-03-{(i % 9) + 1:02d}T10:00:00.000Z"
-        sentiment_words = POS_WORDS if i % 2 == 0 else NEG_WORDS
-        words = [rng.choice(FILLER) for _ in range(70)] + sentiment_words * 3
-        rng.shuffle(words)
-        pages.append((url, _article_html(f"Title {i}", date, words)))
-        xml_entries.append(f"<url><loc>{url}</loc><lastmod>{date}</lastmod></url>")
-    xml = f"<urlset>{''.join(xml_entries)}</urlset>"
-    sitemap_df = spark.createDataFrame([(xml,)], "xml string")
-    pages_df = spark.createDataFrame(pages, "url string, html string")
-    return sitemap_df, pages_df
 
 
 def _persisted_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_full_pipeline(spark, fixtures, tmp_path):
-    sitemap_df, pages_df = fixtures
+def test_full_pipeline(spark, news_pages, tmp_path):
+    sitemap_df, pages_df = news_pages
     wd = str(tmp_path / "wd")
     persisted_before = _persisted_rdd_ids(spark)
     pipe = build_pipeline(spark, sitemap_df, pages_df, wd, lda_k=2)

@@ -1,12 +1,15 @@
-"""Driver-side construction cost of the curation operators, in py4j round
-trips (one Python→JVM gateway command each, ~90 µs).
+"""Driver-side fixed costs of the curation operators and the DAG: py4j
+round trips (one Python→JVM gateway command each, ~90 µs) and generated
+classes compiled on a repeat.
 
 Building a DataFrame runs no job, but every expression node assembled
 through the Column API is a gateway call, and a curation pass or a
 ``foreachBatch`` micro-batch pays that cost on every call. The similarity
 and dedup operators ship their expressions as SQL text, one call per
 projection; these budgets hold them there (node-by-node builds cost
-1,200–2,500 round trips each).
+1,200–2,500 round trips each). A warm repeat of a DAG run or a curation
+pass must also find every generated class in Spark's codegen cache
+instead of recompiling it with Janino.
 """
 
 import gc
@@ -20,6 +23,7 @@ from pyspark.sql import types as T
 from bbc_news_data_pipeline_spark.operators.dedup import (
     bloom_hit_expr,
     bloom_hits_count_dense,
+    exact_dedup,
     minhash_candidates,
     ngram_jaccard_pairs,
 )
@@ -29,6 +33,8 @@ from bbc_news_data_pipeline_spark.operators.similarity import (
     semantic_dedup,
 )
 from bbc_news_data_pipeline_spark.operators.topics import fit_lda, topic_words
+from bbc_news_data_pipeline_spark.pipeline.bbc_news import build_pipeline
+from bbc_news_data_pipeline_spark.session import count_codegen_compiles
 
 
 def _build_trips(counter, build):
@@ -137,3 +143,35 @@ def test_topic_words_cost_independent_of_vocabulary(spark, py4j_round_trips):
         assert len(tw) == 10 and {r.word for r in tw} <= set(words)
         bundle.tokens_df.unpersist()
     assert trips[500] <= trips[10], trips
+
+
+def test_repeated_dag_and_curation_pass_compile_nothing(spark, news_pages, corpus, tmp_path):
+    """A DAG run and a curation pass, then both again in the same session:
+    the repeat finds every generated class in the codegen cache. With
+    Spark's default cache of 100 entries the ~220 classes of one round
+    evict each other and every repeat recompiles nearly all of them.
+
+    A repeat has rarely compiled a few classes (2 in one run; cause not
+    found), so a repeat that compiles any class gets one more repeat,
+    which must compile none."""
+    emb, seeds, planes, docs = corpus
+
+    def run_round(i):
+        report = build_pipeline(spark, *news_pages, str(tmp_path / f"wd{i}"), lda_k=2).run()
+        assert not report.failed, report.failed
+        out = str(tmp_path / f"curation{i}")
+        exact_dedup(docs, "text", "doc_id").write.parquet(f"{out}/exact")
+        survivors = spark.read.parquet(f"{out}/exact")
+        minhash_candidates(survivors, "doc_id", "text").write.parquet(f"{out}/cand")
+        lsh_bucket_ann(emb, planes, min_cos=0.9).write.parquet(f"{out}/lsh")
+        semantic_dedup(emb, seeds, min_cos=0.9).write.parquet(f"{out}/sem")
+
+    per_round = []
+    with count_codegen_compiles(spark) as compiled:
+        for i in range(3):
+            before = compiled()
+            run_round(i)
+            per_round.append(compiled() - before)
+            if i and per_round[-1] == 0:
+                break
+    assert per_round[-1] == 0, per_round
