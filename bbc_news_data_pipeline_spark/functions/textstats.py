@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_str
+
 # Compact core of an English stopword list (public-domain word list, the
 # high-frequency head every list shares). Used for the lang-ID ratio and
 # quality scoring; the full 170-word list lives in nlp/stopwords.py.
@@ -32,12 +34,12 @@ def _quoted_list(words: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in words)
 
 
-def stop_token_count_expr(tokens_col: str, words: tuple[str, ...] = EN_STOPWORDS_CORE) -> Column:
+def stop_token_count_expr(tokens_sql: str, words: tuple[str, ...] = EN_STOPWORDS_CORE) -> Column:
     """COUNT of tokens that are stopwords (not set-distinct — ratio needs
-    multiplicity, unlike the reference's set-difference filter E2)."""
-    return F.expr(
-        f"size(filter({tokens_col}, t -> t IN ({_quoted_list(words)})))"
-    ).cast("long")
+    multiplicity, unlike the reference's set-difference filter E2), over a
+    tokens column name or SQL text such as ``"split(lower(text), ' ')"``."""
+    stop = ", ".join(map(sql_str, words))
+    return F.expr(f"CAST(size(filter({tokens_sql}, t -> t IN ({stop}))) AS BIGINT)")
 
 
 def stop_token_count_sql(tokens_sql: str, words: tuple[str, ...] = EN_STOPWORDS_CORE) -> str:
@@ -62,50 +64,39 @@ def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
     with substantive (non-stopword) vocabulary. Deterministic, pure
     column algebra.
     """
-    tokens = F.split(F.col(text_col), " ")
-    n_words = F.size(tokens).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
-    n_stop = stop_token_count_expr_from(tokens)
-    stop_ratio = F.round(n_stop / n_words, 4)
+    tokens = f"split({text_col}, ' ')"
+    n_words = F.expr(f"CAST(size({tokens}) AS BIGINT)")
+    n_chars = F.expr(f"CAST(length({text_col}) AS BIGINT)")
+    n_stop = stop_token_count_expr(tokens)
     return {
         "n_words": n_words,
         "n_chars": n_chars,
         "avg_word_len": F.round((n_chars - n_words + 1) / n_words, 4),
-        "stop_ratio": stop_ratio,
+        "stop_ratio": F.round(n_stop / n_words, 4),
         "quality": F.round(
             F.least(n_words / F.lit(100.0), F.lit(1.0)) * (1.0 - n_stop / n_words), 4
         ),
     }
 
 
-def stop_token_count_expr_from(tokens: Column, words: tuple[str, ...] = EN_STOPWORDS_CORE) -> Column:
-    return F.size(F.filter(tokens, lambda t: t.isin(*words))).cast("long")
-
-
-def max_run_count_expr(arr: Column) -> Column:
-    """COUNT of the most frequent element of an array, computed row-locally:
-    sort the array, then one aggregate() pass tracking the longest run of
-    equal neighbors. No explode, no shuffle — the scale path for per-doc
-    "top n-gram mass" repetition metrics (the explode → groupBy(doc, gram)
-    alternative multiplies rows by array length before its exchange).
+def max_run_count_expr(arr: str) -> Column:
+    """COUNT of the most frequent element of an array (a column name or
+    SQL text), computed row-locally: sort the array, then one aggregate()
+    pass tracking the longest run of equal neighbors. No explode, no
+    shuffle — the scale path for per-doc "top n-gram mass" repetition
+    metrics (the explode → groupBy(doc, gram) alternative multiplies rows
+    by array length before its exchange).
 
     JVM-side but interpreted (higher-order fns skip codegen): O(n log n)
     per row, linear across the corpus.
     """
-    sorted_arr = F.array_sort(arr)
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("int").alias("run"),
-        F.lit(0).cast("int").alias("best"),
+    run = "IF(x <=> acc.prev, acc.run + 1, 1)"
+    return F.expr(
+        f"CAST(aggregate(array_sort({arr}), "
+        "named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'best', 0), "
+        f"(acc, x) -> named_struct('prev', x, 'run', {run}, 'best', greatest(acc.best, {run})), "
+        "acc -> acc.best) AS BIGINT)"
     )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(
-            x.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
-        )
-
-    return F.aggregate(sorted_arr, zero, step, lambda acc: acc["best"]).cast("long")
 
 
 QUALITY_SQL = """

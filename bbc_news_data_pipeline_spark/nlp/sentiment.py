@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sqltext import sql_str
+
 # Compact valence lexicon (AFINN-style integer valences in [-5, 5],
 # authored here; public-domain word sentiment knowledge).
 VALENCE: dict[str, float] = {
@@ -54,7 +56,7 @@ NEGATIVE_THRESHOLD = -0.05  # sentiment_analysis.py:51
 
 def _valence_map_sql() -> str:
     # DOUBLE literals ("3.0D"): a bare 3.0 is a DECIMAL in Spark SQL.
-    return "map(" + ", ".join(f"'{w}', {float(v)!r}D" for w, v in VALENCE.items()) + ")"
+    return "map(" + ", ".join(f"{sql_str(w)}, {float(v)!r}D" for w, v in VALENCE.items()) + ")"
 
 
 def compound_score_expr(tokens_col: str) -> Column:
@@ -71,7 +73,7 @@ def compound_score_expr(tokens_col: str) -> Column:
     lexicon reaches the JVM in one call instead of three py4j round
     trips per entry.
     """
-    words = ", ".join(f"'{w}'" for w in VALENCE)
+    words = ", ".join(map(sql_str, VALENCE))
     return F.expr(
         f"aggregate(filter({tokens_col}, t -> t IN ({words})), "
         f"0.0D, (acc, t) -> acc + element_at({_valence_map_sql()}, t), "

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_str
 from .incremental import merge_partials
 
 # Patterns chosen to compile identically under Java regex (Spark) and RE2
@@ -103,6 +104,22 @@ LANG_RATES: tuple[tuple[str, float], ...] = (
     ("fr", 0.125),
     ("zh", 0.0625),
 )
+
+
+def lang_keep_threshold(rates: tuple[tuple[str, float], ...] = LANG_RATES) -> Column:
+    """Per-row keep-threshold for fixed (lang, rate) pairs: a doc is kept
+    when its sample key is below it. NULL for a language not in
+    ``rates``, so those docs are dropped."""
+    cases = " ".join(
+        f"WHEN lang = {sql_str(lang)} THEN {sample_threshold(rate)}" for lang, rate in rates
+    )
+    return F.expr(f"CAST(CASE {cases} END AS BIGINT)")
+
+
+def rate_keep_threshold(rate_col: str = "rate") -> Column:
+    """Per-row keep-threshold for a sampling-rate column,
+    floor(rate * 2^32): the column twin of :func:`sample_threshold`."""
+    return F.expr(f"CAST(floor({rate_col} * {float(SAMPLE_KEY_MOD)}D) AS BIGINT)")
 
 
 def temperature_rates(counts: DataFrame, budget: float) -> DataFrame:
@@ -531,6 +548,39 @@ def cc_two_phase(
     )
 
 
+def repetition_ratios(df: DataFrame, *, carry: tuple[str, ...] = ("lang",)) -> DataFrame:
+    """Gopher-style repetition features, no quality filter: (doc_id,
+    *carry, n_tokens, dup_word_ratio, top_bigram_ratio) for every doc of
+    at least 2 space-separated tokens.
+
+    dup_word_ratio = 1 - distinct/all tokens; top_bigram_ratio = the
+    most frequent bigram's share of all bigrams, row-local (see
+    ``max_run_count_expr``). Per-doc, so one definition serves the batch
+    queries, the delta and streaming corpus builds and the curation
+    stream alike.
+    """
+    from ..functions.textstats import max_run_count_expr
+    from .dedup import shingles_from_tokens
+
+    toked = df.selectExpr("doc_id", *carry, "split(text, ' ') AS _toks").filter(
+        "size(_toks) >= 2"
+    )
+    staged = toked.select(
+        "doc_id", *carry, "_toks", shingles_from_tokens("_toks", 2).alias("_bi")
+    )
+    return staged.select(
+        "doc_id",
+        *carry,
+        F.expr("CAST(size(_toks) AS BIGINT)").alias("n_tokens"),
+        F.expr("round(1.0D - size(array_distinct(_toks)) / size(_toks), 4)").alias(
+            "dup_word_ratio"
+        ),
+        F.round(max_run_count_expr("_bi") / (F.size("_toks") - 1), 4).alias(
+            "top_bigram_ratio"
+        ),
+    )
+
+
 def gate_documents(
     df: DataFrame,
     *,
@@ -538,32 +588,14 @@ def gate_documents(
     bigram_t: float = 0.1,
     carry: tuple[str, ...] = ("lang",),
 ) -> DataFrame:
-    """q167's row-local quality gate, shared by the batch (q267) and
-    streaming (q277) corpus builds: tokenize, require >= 2 tokens,
-    filter on dup_word_ratio and top_bigram_ratio; returns
-    (doc_id, *carry, n_tokens). Per-doc, so delta-gating ≡
+    """The row-local repetition quality gate: :func:`repetition_ratios`
+    rows with dup_word_ratio <= ``dup_t`` and top_bigram_ratio <=
+    ``bigram_t``. Shared by q167, the batch (q267) and streaming (q277)
+    corpus builds and the curation stream; per-doc, so delta-gating ≡
     rebuild-gating by construction."""
-    from ..functions.textstats import max_run_count_expr
-    from ..operators.dedup import shingles_from_tokens
-
-    toked = df.select(
-        "doc_id", *carry, F.split("text", " ").alias("_toks")
-    ).filter(F.size("_toks") >= 2)
-    staged = toked.select(
-        "doc_id",
-        *carry,
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct("_toks")) / F.size("_toks"), 4
-        ).alias("dup_word_ratio"),
-        shingles_from_tokens("_toks", 2).alias("_bi"),
-    ).withColumn(
-        "top_bigram_ratio",
-        F.round(max_run_count_expr(F.col("_bi")) / F.size("_bi"), 4),
+    return repetition_ratios(df, carry=carry).filter(
+        f"dup_word_ratio <= {float(dup_t)}D AND top_bigram_ratio <= {float(bigram_t)}D"
     )
-    return staged.filter(
-        (F.col("dup_word_ratio") <= dup_t) & (F.col("top_bigram_ratio") <= bigram_t)
-    ).select("doc_id", *carry, "n_tokens")
 
 
 #: The per-shard manifest's columns: every one an additive partial, so a
@@ -685,13 +717,12 @@ def delta_corpus_build(
         gated.groupBy("lang").agg(F.count("*").alias("n")), budget
     ).withColumnRenamed("rate", "r1")
     key = sample_key_expr("doc_id", salt=salt_mix)
-    thr = lambda r: F.floor(F.col(r) * F.lit(float(SAMPLE_KEY_MOD))).cast("long")
     mixed = (
         gated.join(F.broadcast(rates0), "lang", "left")  # new langs: no r0 needed
         .join(F.broadcast(rates1), "lang")
         .filter(
-            ((F.col("e") == 0) & (key < thr("r0")))
-            | ((F.col("e") == 1) & (key < thr("r1")))
+            ((F.col("e") == 0) & (key < rate_keep_threshold("r0")))
+            | ((F.col("e") == 1) & (key < rate_keep_threshold("r1")))
         )
         .select("doc_id", "e", "n_tokens")
         .localCheckpoint()  # feeds the base and batch packings

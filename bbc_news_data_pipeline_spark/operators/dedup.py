@@ -87,19 +87,25 @@ def first_wins(
 
 
 def _shingles_sql(tokens_col: str, k: int) -> str:
-    # element_at is 1-based; i ranges over 0..size-k.
-    gram = ", ".join(f"element_at({tokens_col}, i + {j} + 1)" for j in range(k))
-    return f"transform(sequence(0, size({tokens_col}) - {k}), i -> concat_ws(' ', {gram}))"
+    # window j = slice(t, j+1, n-k+1) holds token i+j at position i, so
+    # zipping the k windows puts each gram's tokens in one element and the
+    # lambda never reads t itself.
+    n = f"size({tokens_col}) - {k - 1}"
+    windows = ", ".join(f"slice({tokens_col}, {j + 1}, {n})" for j in range(k))
+    fields = ", ".join(f"z.`{j}`" for j in range(k))
+    return f"transform(arrays_zip({windows}), z -> concat_ws(' ', {fields}))"
 
 
 def shingles_from_tokens(tokens_col: str, k: int = 5) -> Column:
-    """k-gram word shingles from a MATERIALIZED tokens column.
+    """k-gram word shingles from a tokens column (at least k tokens).
 
-    Must reference a real column, not an inline ``split(...)`` expression:
-    higher-order functions evaluate interpreted (no codegen CSE), so an
-    inlined split would re-tokenize the document once per element_at —
-    O(len²) per row (measured 24× slowdown at sf0.1). Use
-    :func:`with_shingles` which stages tokens through a select first.
+    The tokens reach the gram lambda only through ``slice`` windows zipped
+    outside it, so the work stays linear in the document length even when
+    the optimizer inlines a staged ``split(...)`` back into the expression
+    (a Filter pushed below its projection does): higher-order functions
+    evaluate interpreted (no codegen CSE), and a lambda that indexed the
+    tokens column would re-tokenize the document once per gram — O(len²)
+    per row. Use :func:`with_shingles` to stage tokens and drop short docs.
     """
     return F.expr(_shingles_sql(tokens_col, k))
 
@@ -109,8 +115,8 @@ def with_shingles(
 ) -> DataFrame:
     """(id, shingles array) with tokens materialized in a separate select.
 
-    Docs shorter than k tokens are dropped (Spark's ``sequence`` would
-    count DOWN for a negative span, and ANSI mode rejects element_at(0)).
+    Docs shorter than k tokens are dropped (``slice`` rejects the
+    negative window length they would need).
     """
     toked = df.selectExpr(id_col, f"split({text_col}, ' ') AS _toks").filter(
         f"size(_toks) >= {k}"

@@ -27,6 +27,7 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_str
 from ..nlp.stopwords import EN_STOPWORDS
 
 
@@ -56,7 +57,7 @@ def tokenize(
     call — ``StopWordsRemover`` sends its list to the JVM word by word.
     """
     tok = RegexTokenizer(inputCol=text_col, outputCol="_raw_tokens", pattern=r"\s+")
-    stop = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
+    stop = ", ".join(map(sql_str, EN_STOPWORDS))
     tokens = f"filter(_raw_tokens, t -> NOT t IN ({stop}))"
     if max_tokens:
         tokens = f"slice({tokens}, 1, {max_tokens})"
@@ -101,11 +102,6 @@ def fit_lda(
     return TopicModelBundle(k=k, cv_model=cv_model, lda_model=lda_model, tokens_df=tokens)
 
 
-def _sql_str(s: str) -> str:
-    """A Spark SQL string literal (backslash escapes are on by default)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def topic_words(bundle: TopicModelBundle, topn: int = 10) -> DataFrame:
     """(topic_id, rank, word, weight) — the reference's topic_words_df
     shape (topic_modeling.py:34-40) via describeTopics + posexplode +
@@ -118,7 +114,7 @@ def topic_words(bundle: TopicModelBundle, topn: int = 10) -> DataFrame:
     vocab = bundle.cv_model.vocabulary
     desc = bundle.lda_model.describeTopics(topn)
     per_topic = ", ".join(
-        "array(" + ", ".join(_sql_str(vocab[i]) for i in r["termIndices"]) + ")"
+        "array(" + ", ".join(sql_str(vocab[i]) for i in r["termIndices"]) + ")"
         for r in sorted(desc.collect(), key=lambda r: r["topic"])
     )
     return desc.selectExpr(

@@ -30,8 +30,12 @@ from ..operators.curation import (
     asof_join,
     cc_two_phase,
     connected_components,
+    gate_documents,
+    lang_keep_threshold,
     pii_counts,
+    rate_keep_threshold,
     redact_pii,
+    repetition_ratios,
     sample_key_expr,
     sample_threshold,
 )
@@ -149,12 +153,8 @@ ORDER BY doc_id
 # ---------------------------------------------------------------------------
 def q56_dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    thr = F.lit(None).cast("long")
-    for lang, rate in LANG_RATES:
-        thr = F.when(F.col("lang") == lang, F.lit(sample_threshold(rate))).otherwise(thr)
     return (
-        docs.withColumn("_thr", thr)
-        .filter(sample_key_expr("doc_id", salt="mix") < F.col("_thr"))
+        docs.filter(sample_key_expr("doc_id", salt="mix") < lang_keep_threshold())
         .groupBy("lang")
         .agg(F.count("*").alias("n_kept"))
         .orderBy("lang")
@@ -239,29 +239,8 @@ _DUP_T, _BIGRAM_T = 0.5, 0.1
 
 
 def q58_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textstats import max_run_count_expr
-    from ..operators.dedup import shingles_from_tokens
-
     docs = load(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", F.split("text", " ").alias("_toks")).filter(
-        F.size("_toks") >= 2
-    )
-    base = toked.select(
-        "doc_id",
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct("_toks")) / F.size("_toks"), 4
-        ).alias("dup_word_ratio"),
-        shingles_from_tokens("_toks", 2).alias("_bi"),
-    )
-    return base.select(
-        "doc_id",
-        "n_tokens",
-        "dup_word_ratio",
-        F.round(max_run_count_expr(F.col("_bi")) / F.size("_bi"), 4).alias(
-            "top_bigram_ratio"
-        ),
-    ).withColumn(
+    return repetition_ratios(docs, carry=()).withColumn(
         "flagged",
         (F.col("dup_word_ratio") > _DUP_T) | (F.col("top_bigram_ratio") > _BIGRAM_T),
     )
@@ -363,35 +342,11 @@ ORDER BY e.event_id
 _Q63_DUP_T, _Q63_BIGRAM_T = 0.6, 0.1
 
 
-def _mix_threshold_col() -> F.Column:
-    thr = F.lit(None).cast("long")
-    for lang, rate in LANG_RATES:
-        thr = F.when(F.col("lang") == lang, F.lit(sample_threshold(rate))).otherwise(thr)
-    return thr
-
-
 def q63_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textstats import max_run_count_expr
-    from ..operators.dedup import exact_dedup, shingles_from_tokens
+    from ..operators.dedup import exact_dedup
 
     docs = load(spark, sf_dir, "documents")
-    surv = exact_dedup(docs, "text", "doc_id")
-    toked = surv.select(
-        "doc_id", "lang", F.split("text", " ").alias("_toks")
-    ).filter(F.size("_toks") >= 2)
-    base = toked.select(
-        "doc_id",
-        "lang",
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct("_toks")) / F.size("_toks"), 4
-        ).alias("dup_word_ratio"),
-        shingles_from_tokens("_toks", 2).alias("_bi"),
-    )
-    staged = base.withColumn(
-        "top_bigram_ratio",
-        F.round(max_run_count_expr(F.col("_bi")) / F.size("_bi"), 4),
-    )
+    staged = repetition_ratios(exact_dedup(docs, "text", "doc_id"))
     # Gate via CONDITIONAL AGGREGATES, not a .filter(): a Filter over the
     # aliased ratios would be pushed below the projection, re-inlining the
     # interpreted HOF chain (array_distinct/shingles over split) into a
@@ -402,7 +357,7 @@ def q63_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = (
         (F.col("dup_word_ratio") <= _Q63_DUP_T)
         & (F.col("top_bigram_ratio") <= _Q63_BIGRAM_T)
-        & (sample_key_expr("doc_id", salt="mix") < _mix_threshold_col())
+        & (sample_key_expr("doc_id", salt="mix") < lang_keep_threshold())
     )
     return (
         staged.groupBy("lang")
@@ -761,20 +716,17 @@ _Q103_BUDGET = 0.5  # target sample size as a fraction of the corpus
 
 
 def q103_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.curation import SAMPLE_KEY_MOD
-
     docs = load(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n"))
     rates = _temperature_rates(counts, _Q103_BUDGET)
     keyed = docs.select("lang", sample_key_expr("doc_id", salt="tmix").alias("k"))
-    thr = F.floor(F.col("rate") * F.lit(float(SAMPLE_KEY_MOD))).cast("long")
     return (
         keyed.join(F.broadcast(rates), "lang")
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
             F.max("rate").alias("rate"),
-            F.sum(F.when(F.col("k") < thr, 1).otherwise(0))
+            F.sum(F.when(F.col("k") < rate_keep_threshold(), 1).otherwise(0))
             .cast("long")
             .alias("sampled_n"),
         )
@@ -1878,8 +1830,8 @@ ORDER BY cluster_id
 # (q37/q63/q103/q99/q116); this proves the CHAIN, where stage coupling
 # (mix rates over gated counts, packing over mixed order) is the part no
 # per-stage test exercises.
-# Plan shape: dedup shuffle → row-local gate (lineage-pinned so the
-# filter cannot re-inline the HOF chain) → O(#langs) broadcast rate table
+# Plan shape: dedup shuffle → row-local gate (pinned: it feeds both the
+# rate counts and the keyed pass) → O(#langs) broadcast rate table
 # → row-local shard keys → blocked prefix-sum (bounded windows) → 1
 # manifest row per shard. No global sort, no unbounded window, no
 # corpus-scale broadcast.
@@ -1890,48 +1842,23 @@ _Q167_BUDGET = 0.5
 
 
 def q167_corpus_build_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.textstats import max_run_count_expr
-    from ..operators.curation import SAMPLE_KEY_MOD, shuffle_shards
-    from ..operators.dedup import exact_dedup, shingles_from_tokens
+    from ..operators.curation import shuffle_shards
+    from ..operators.dedup import exact_dedup
     from ..operators.skew import exclusive_prefix_sum
 
     docs = load(spark, sf_dir, "documents")
     surv = exact_dedup(docs, "text", "doc_id")
-    toked = surv.select(
-        "doc_id", "lang", F.split("text", " ").alias("_toks")
-    ).filter(F.size("_toks") >= 2)
-    base = toked.select(
-        "doc_id",
-        "lang",
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct("_toks")) / F.size("_toks"), 4
-        ).alias("dup_word_ratio"),
-        shingles_from_tokens("_toks", 2).alias("_bi"),
-    )
-    staged = base.withColumn(
-        "top_bigram_ratio",
-        F.round(max_run_count_expr(F.col("_bi")) / F.size("_bi"), 4),
-    ).drop("_bi")
-    # lineage pin BEFORE the gate: (a) the filter cannot be pushed below
-    # the projection (which would re-inline the HOF chain per q63's note),
-    # (b) the gated frame feeds TWO consumers (rate counts + keyed pass)
-    # without recomputing the dedup+gate subtree (q146 pattern).
-    gated = (
-        staged.filter(
-            (F.col("dup_word_ratio") <= _Q63_DUP_T)
-            & (F.col("top_bigram_ratio") <= _Q63_BIGRAM_T)
-        )
-        .select("doc_id", "lang", "n_tokens")
-        .localCheckpoint(eager=False)
-    )
+    # pinned: the gated frame feeds TWO consumers (rate counts + keyed
+    # pass) without recomputing the dedup+gate subtree (q146 pattern)
+    gated = gate_documents(
+        surv, dup_t=_Q63_DUP_T, bigram_t=_Q63_BIGRAM_T
+    ).localCheckpoint(eager=False)
     rates = _temperature_rates(
         gated.groupBy("lang").agg(F.count("*").alias("n")), _Q167_BUDGET
     )
-    thr = F.floor(F.col("rate") * F.lit(float(SAMPLE_KEY_MOD))).cast("long")
     mixed = (
         gated.join(F.broadcast(rates), "lang")
-        .filter(sample_key_expr("doc_id", salt="cbmix") < thr)
+        .filter(sample_key_expr("doc_id", salt="cbmix") < rate_keep_threshold())
         .select("doc_id", "n_tokens")
     )
     sharded = shuffle_shards(mixed, "doc_id", _Q167_SHARDS, salt="cbshuf")

@@ -19,7 +19,7 @@ from ..functions.textstats import (
     TOKEN_REGEX,
     quality_score_cols,
     quality_sql,
-    stop_token_count_expr_from,
+    stop_token_count_expr,
     token_count_regex_expr,
     token_count_regex_sql,
 )
@@ -195,8 +195,8 @@ Q35_SQL = quality_sql()
 # ---------------------------------------------------------------------------
 def q36_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    tokens = F.split(F.col("text"), " ")
-    ratio = stop_token_count_expr_from(tokens) / F.size(tokens).cast("long")
+    tokens = "split(text, ' ')"
+    ratio = stop_token_count_expr(tokens) / F.expr(f"CAST(size({tokens}) AS BIGINT)")
     predicted = F.when(ratio >= 0.05, "en").otherwise("non_en")
     return (
         docs.withColumn("predicted", predicted)
@@ -1735,10 +1735,10 @@ Q260_SQL = _q260_sql()
 # ---------------------------------------------------------------------------
 def q263_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    tokens = F.split(F.lower("text"), " ")
+    tokens = "split(lower(text), ' ')"
     staged = docs.select(
-        (stop_token_count_expr_from(tokens) * 100).alias("st100"),
-        F.size(tokens).cast("long").alias("nt"),
+        (stop_token_count_expr(tokens) * 100).alias("st100"),
+        F.expr(f"CAST(size({tokens}) AS BIGINT)").alias("nt"),
         (F.col("lang") == "en").cast("long").alias("y"),
     )
     scored = staged.select(

@@ -51,8 +51,8 @@ from pyspark.sql import functions as F
 
 from ..operators.curation import (
     MANIFEST_COLS,
-    SAMPLE_KEY_MOD,
     gate_documents,
+    rate_keep_threshold,
     sample_key_expr,
     shard_manifest,
     temperature_rates,
@@ -109,10 +109,9 @@ def apply_corpus_batch(
     rates = temperature_rates(cum, budget)
 
     # 4. mix at the updated rates (batch docs only — history is sticky)
-    thr = F.floor(F.col("rate") * F.lit(float(SAMPLE_KEY_MOD))).cast("long")
     mixed = (
         gated.join(F.broadcast(rates), "lang")
-        .filter(sample_key_expr("doc_id", salt=salt_mix) < thr)
+        .filter(sample_key_expr("doc_id", salt=salt_mix) < rate_keep_threshold())
         .select("doc_id", "n_tokens")
     )
 

@@ -19,17 +19,17 @@ time (same ST5 pattern as ingest.dedup_links_stream_bounded).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.textstats import max_run_count_expr
 from ..operators.curation import (
     LANG_RATES,
+    gate_documents,
+    lang_keep_threshold,
     redact_pii,
     sample_key_expr,
-    sample_threshold,
 )
-from ..operators.dedup import fingerprint, shingles_from_tokens
+from ..operators.dedup import fingerprint
+from .drain import drain_to_parquet
 
 DOC_SCHEMA = T.StructType(
     [
@@ -60,29 +60,8 @@ def curate_docs_stream(
     Works identically on a static DataFrame (minus the cross-batch state)
     — the batch/stream parity test relies on that.
     """
-    toked = docs.select(
-        "doc_id", "lang", "text", F.split("text", " ").alias("_toks")
-    ).filter(F.size("_toks") >= 2)
-    base = toked.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.size("_toks").cast("long").alias("n_tokens"),
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct("_toks")) / F.size("_toks"), 4
-        ).alias("dup_word_ratio"),
-        F.round(
-            max_run_count_expr(shingles_from_tokens("_toks", 2)) / (F.size("_toks") - 1),
-            4,
-        ).alias("top_bigram_ratio"),
-    )
-    kept = base.filter(
-        (F.col("dup_word_ratio") <= dup_t) & (F.col("top_bigram_ratio") <= bigram_t)
-    )
-    thr = F.lit(None).cast("long")
-    for lang, rate in rates:
-        thr = F.when(F.col("lang") == lang, F.lit(sample_threshold(rate))).otherwise(thr)
-    mixed = kept.filter(sample_key_expr("doc_id", salt=mix_salt) < thr)
+    kept = gate_documents(docs, dup_t=dup_t, bigram_t=bigram_t, carry=("lang", "text"))
+    mixed = kept.filter(sample_key_expr("doc_id", salt=mix_salt) < lang_keep_threshold(rates))
     return (
         mixed.withColumn("_fp", fingerprint("text"))
         .dropDuplicates(["_fp"])
@@ -100,13 +79,4 @@ def run_docs_curation(
     spark: SparkSession, src_dir: str, out_path: str, checkpoint: str
 ) -> None:
     """One availableNow drain of the curation flow into a parquet sink."""
-    q = (
-        curate_docs_stream(read_docs_stream(spark, src_dir))
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_parquet(curate_docs_stream(read_docs_stream(spark, src_dir)), out_path, checkpoint)

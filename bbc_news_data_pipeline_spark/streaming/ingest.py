@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import drain_to_parquet
+
 LINK_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -77,15 +79,7 @@ def run_links_ingest(
     the streaming twin of sinks.keyed_append, exactly-once via
     checkpointed state."""
     stream = dedup_links_stream(read_links_stream(spark, src_dir), already_scraped)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_parquet(stream, out_path, checkpoint)
 
 
 def windowed_event_counts(

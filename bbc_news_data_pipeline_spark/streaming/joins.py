@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import drain_to_parquet
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), False),
@@ -107,11 +109,4 @@ def run_error_click_join(
     joined = interval_join_streams(
         read_events_stream(spark, src_dir), window_s=window_s, delay=delay
     )
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(joined, out_dir, ckpt_dir)

@@ -100,8 +100,49 @@ def test_max_run_count_matches_exact_mode(spark):
         (4, []),                               # empty → 0
     ]
     df = spark.createDataFrame(rows, "id long, arr array<string>")
-    got = {r.id: r.c for r in df.select("id", max_run_count_expr(F.col("arr")).alias("c")).collect()}
+    got = {r.id: r.c for r in df.select("id", max_run_count_expr("arr").alias("c")).collect()}
     assert got == {0: 3, 1: 1, 2: 4, 3: 1, 4: 0}
+
+
+def test_stop_token_count_escapes_quote_and_backslash(spark):
+    from bbc_news_data_pipeline_spark.functions.textstats import stop_token_count_expr
+
+    words = ("it's", "a\\b")
+    df = spark.createDataFrame(
+        [(["it's", "a\\b", "it's", "its", "ab"],)], "toks array<string>"
+    )
+    got = df.select(stop_token_count_expr("toks", words).alias("n")).first().n
+    assert got == 3
+
+
+def _lambda_bodies(plan):
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    i = plan.find("lambdafunction(")
+    while i >= 0:
+        j, depth = i + len("lambdafunction"), 0
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+            if depth == 0:
+                break
+        yield plan[i:j]
+        i = plan.find("lambdafunction(", i + 1)
+
+
+def test_repetition_gate_lambdas_never_retokenize(spark, sf_dir):
+    """The gate's filter is pushed below the projection that staged the
+    tokens, so the optimized plan inlines split(text) into the ratio
+    expressions. No lambda may read it: a gram lambda that indexes the
+    tokens re-splits the document once per gram, O(len²) per row."""
+    from bbc_news_data_pipeline_spark.operators.curation import gate_documents
+    from bbc_news_data_pipeline_spark.streaming.curation import curate_docs_stream
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for df in (gate_documents(docs), curate_docs_stream(docs)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = list(_lambda_bodies(plan))
+        assert bodies and "split(text" in plan, plan
+        assert not [b for b in bodies if "split(text" in b], plan
 
 
 # --- connected components --------------------------------------------------

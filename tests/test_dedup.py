@@ -165,6 +165,19 @@ def test_winnow_fingerprints_guarantee(spark):
         assert len(fps) <= max(1, len(gram_sets[d]))
 
 
+def test_with_shingles_matches_python_kgrams(spark):
+    texts = {1: "a b c d e f g", 2: "a b", 3: "x y z x y", 4: "one"}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    for k in (2, 5):
+        got = {r.doc_id: r.g for r in dedup.with_shingles(df, "doc_id", "text", k, out="g").collect()}
+        want = {
+            i: [" ".join(t.split(" ")[j : j + k]) for j in range(len(t.split(" ")) - k + 1)]
+            for i, t in texts.items()
+            if len(t.split(" ")) >= k
+        }
+        assert got == want, k
+
+
 def test_winnow_short_doc_single_window(spark):
     """Docs with >= k tokens but fewer than k+window-1 collapse to one
     window (the global min); docs under k tokens drop out."""

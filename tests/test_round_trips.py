@@ -5,9 +5,9 @@ classes compiled on a repeat.
 Building a DataFrame runs no job, but every expression node assembled
 through the Column API is a gateway call, and a curation pass or a
 ``foreachBatch`` micro-batch pays that cost on every call. The similarity
-and dedup operators ship their expressions as SQL text, one call per
-projection; these budgets hold them there (node-by-node builds cost
-1,200–2,500 round trips each). A warm repeat of a DAG run or a curation
+and dedup operators and the curation text gate ship their expressions as
+SQL text, one call per projection; these budgets hold them there
+(node-by-node builds cost 400–2,500 round trips each). A warm repeat of a DAG run or a curation
 pass must also find every generated class in Spark's codegen cache
 instead of recompiling it with Janino.
 """
@@ -20,6 +20,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bbc_news_data_pipeline_spark.functions.textstats import quality_score_cols
+from bbc_news_data_pipeline_spark.operators.curation import gate_documents
 from bbc_news_data_pipeline_spark.operators.dedup import (
     bloom_hit_expr,
     bloom_hits_count_dense,
@@ -35,6 +37,7 @@ from bbc_news_data_pipeline_spark.operators.similarity import (
 from bbc_news_data_pipeline_spark.operators.topics import fit_lda, topic_words
 from bbc_news_data_pipeline_spark.pipeline.bbc_news import build_pipeline
 from bbc_news_data_pipeline_spark.session import count_codegen_compiles
+from bbc_news_data_pipeline_spark.streaming.curation import curate_docs_stream
 
 
 def _build_trips(counter, build):
@@ -104,6 +107,20 @@ def test_ngram_jaccard_pairs_budget(spark, py4j_round_trips, corpus):
             py4j_round_trips, lambda: ngram_jaccard_pairs(docs, "doc_id", "text", max_df=max_df)
         )
         assert n <= 300, (max_df, n)
+
+
+def test_curation_text_gate_budgets(spark, py4j_round_trips, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    budgets = {
+        "gate_documents": (200, lambda: gate_documents(docs)),
+        "curate_docs_stream": (450, lambda: curate_docs_stream(docs)),
+        "quality_score_cols": (
+            300,
+            lambda: docs.select(*[c.alias(n) for n, c in quality_score_cols("text").items()]),
+        ),
+    }
+    trips = {name: _build_trips(py4j_round_trips, build) for name, (_, build) in budgets.items()}
+    assert all(trips[name] <= cap for name, (cap, _) in budgets.items()), trips
 
 
 def test_bloom_probe_cost_independent_of_filter_words(spark, py4j_round_trips):
