@@ -70,14 +70,16 @@ def det_ln_sql(expr: str, binder: str = "t") -> tuple[str, str]:
     return t_expr, series
 
 
-#: Taylor degree for det_exp_small: |x| ≤ 1 ⟹ truncation ≤ 1/14! ≈ 1.1e-11.
+#: Taylor degree for det_exp_small_sql: |x| ≤ 1 ⟹ truncation ≤ 1/14! ≈ 1.1e-11.
 _EXP_DEG = 13
 #: Horner coefficients 1/13!, 1/12!, …, 1/1!, 1/0! as exact double literals.
 _EXP_COEFFS = [1.0 / math.factorial(k) for k in range(_EXP_DEG, -1, -1)]
 
 
-def det_exp_small(x: Column) -> Column:
-    """Bit-deterministic exp for |x| ≤ 1 (e.g. bounded sigmoid logits).
+def det_exp_small_sql(binder: str) -> str:
+    """Bit-deterministic exp for |x| ≤ 1 (e.g. bounded sigmoid logits),
+    as SQL text valid in both Spark and DuckDB; ``binder`` must name a
+    column already bound to the argument (it is referenced 13 times).
 
     Fixed-shape Horner evaluation of the degree-13 Taylor polynomial with
     shared double literals — every step a correctly-rounded IEEE op, so
@@ -86,15 +88,6 @@ def det_exp_small(x: Column) -> Column:
     (deterministic either way, but past ~|x|=2 the value stops being a
     faithful exp).
     """
-    e: Column = F.lit(_EXP_COEFFS[0])
-    for c in _EXP_COEFFS[1:]:
-        e = e * x + F.lit(c)
-    return e
-
-
-def det_exp_small_sql(binder: str) -> str:
-    """SQL twin of :func:`det_exp_small`; ``binder`` must name a column
-    already bound to the argument (it is referenced 13 times)."""
     e = repr(_EXP_COEFFS[0])
     for c in _EXP_COEFFS[1:]:
         e = f"({e} * {binder} + {c!r})"

@@ -36,7 +36,7 @@ trigger a quadratic pair blow-up or an unbounded array collect. All
 hashing uses md5 (stable, engine-portable, seed-prefixed) — NOT Spark's
 ``hash()``, whose values would not be reproducible in the DuckDB oracle.
 
-The shingle, MinHash, band-key and pair-generation expressions are built
+The shingle, MinHash, SimHash, band-key and pair-generation expressions are built
 as Spark SQL text and sent with one ``F.expr``/``selectExpr`` call per
 projection: each ``F.lit``/``F.col`` of a node-by-node Column build is
 three py4j round trips, which made ``minhash_candidates`` ~1,600
@@ -337,12 +337,10 @@ def with_simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # Filter (computed twice per row — the SCALE.md pushdown pathology).
     # split() never yields an empty array, so text IS NOT NULL is exactly
     # equivalent and reaches the parquet scan as a cheap pushed filter.
-    hashed = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.expr(
-            f"transform(split({text_col}, ' '), "
-            "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
-        ).alias("_h"),
+    hashed = df.filter(f"{text_col} IS NOT NULL").selectExpr(
+        id_col,
+        f"transform(split({text_col}, ' '), "
+        "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint)) AS _h",
     )
     # Per-bit majority sums via explode + 60 codegen'd conditional SUMs,
     # NOT 60 aggregate() folds over the array: interpreted folds evaluate
@@ -351,19 +349,15 @@ def with_simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # LOOKS like a new shuffle but hash aggregation computes all 60
     # partial sums map-side, so only docs × 60 longs travel — the token
     # stream and text never shuffle.
-    expl = hashed.select(F.col(id_col), F.explode("_h").alias("_t"))
+    expl = hashed.selectExpr(id_col, "explode(_h) AS _t")
     bit_aggs = [
-        F.expr(
-            f"sum(CASE WHEN (_t >> {b}) % 2 = 1 THEN 1L ELSE -1L END)"
-        ).alias(f"_b{b}")
+        F.expr(f"sum(CASE WHEN (_t >> {b}) % 2 = 1 THEN 1L ELSE -1L END) AS _b{b}")
         for b in range(SIMHASH_BITS)
     ]
-    bits = expl.groupBy(id_col).agg(*bit_aggs)
-    packed = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"_b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        packed = term if packed is None else packed + term
-    return bits.select(F.col(id_col), packed.alias("simhash"))
+    packed = " + ".join(
+        f"(CASE WHEN _b{b} > 0 THEN {1 << b}L ELSE 0L END)" for b in range(SIMHASH_BITS)
+    )
+    return expl.groupBy(id_col).agg(*bit_aggs).selectExpr(id_col, f"{packed} AS simhash")
 
 
 def simhash_candidates(
@@ -382,22 +376,19 @@ def simhash_candidates(
     """
     width = SIMHASH_BITS // bands
     sh = with_simhash(df, id_col, text_col)
-    band_exprs = [
-        (F.shiftrightunsigned(F.col("simhash"), b * width) % (1 << width)).alias("band_val")
-        for b in range(bands)
-    ]
-    banded = sh.select(
-        F.struct(F.col(id_col), F.col("simhash")).alias("d"),
-        F.posexplode(F.array(*[e for e in band_exprs])).alias("band_idx", "band_val"),
+    band_vals = ", ".join(
+        f"shiftrightunsigned(simhash, {b * width}) % {1 << width}" for b in range(bands)
+    )
+    banded = sh.selectExpr(
+        f"struct({id_col}, simhash) AS d",
+        f"posexplode(array({band_vals})) AS (band_idx, band_val)",
     )
     return (
         pairs_within_groups(banded, ["band_idx", "band_val"], max_group=max_group)
-        .select(
-            F.col(f"p.a.{id_col}").alias("id_a"),
-            F.col(f"p.b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("p.a.simhash").bitwiseXOR(F.col("p.b.simhash"))
-            ).alias("hamming"),
+        .selectExpr(
+            f"p.a.{id_col} AS id_a",
+            f"p.b.{id_col} AS id_b",
+            "bit_count(p.a.simhash ^ p.b.simhash) AS hamming",
         )
         .distinct()
     )
@@ -550,16 +541,12 @@ def blockize(df: DataFrame, id_col: str, text_col: str, block_w: int = 10) -> Da
     document (last block may be shorter). Row-local — the shared
     tokenization of batch :func:`block_dedup` and the streaming twin
     (streaming/blockdedup.py), so both dedup the SAME block values."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, CAST(ceil(size(split(lower({text_col}), ' ')) "
-                f"/ {block_w}.0) AS INT) - 1), "
-                f"i -> array_join(slice(split(lower({text_col}), ' '), "
-                f"i * {block_w} + 1, {block_w}), ' '))"
-            )
-        ).alias("bidx", "block"),
+    # Tokens staged once per document: a lambda that re-split the text
+    # would split it once per block, O(len²) per row.
+    return df.selectExpr(id_col, f"split(lower({text_col}), ' ') AS _toks").selectExpr(
+        id_col,
+        f"posexplode(transform(sequence(0, CAST(ceil(size(_toks) / {block_w}.0) AS INT) - 1), "
+        f"i -> array_join(slice(_toks, i * {block_w} + 1, {block_w}), ' '))) AS (bidx, block)",
     )
 
 

@@ -29,10 +29,12 @@ unique-key tiebreak, and "now" anchors derive from the data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.detmath import det_exp_small, det_ln
+from ..functions.detmath import det_ln
 from ..functions.detmath import det_ln_sql as _det_ln_sql
 from ..functions.detmath import det_exp_small_sql as _det_exp_small_sql
 from ..sources.tables import load
@@ -756,42 +758,176 @@ ORDER BY d.doc_id
 #
 # Shape at scale: ZERO shuffles — hashing, weight lookup, and the fold
 # over tokens are row-local Catalyst higher-order functions, so the
-# whole classifier is one projection over the scan and scales linearly
-# with input bytes. No Python, no explode, no vocab join.
+# whole classifier is a chain of projections over the scan and scales
+# linearly with input bytes. No Python, no explode, no vocab join.
 # ---------------------------------------------------------------------------
 _Q117_D = 4096  # hashing-trick bucket count
 _Q117_WMOD = 100001  # weight lattice: w_int in [-50000, 50000]
+_TOKS = "split(lower(text), ' ')"  # the classifier family's tokenizer
+
+
+# The classifier family's shared decisions (q117 serves, q159 calibrates,
+# q270 trains, q276 selects features, q278 cross-validates), each written
+# once as Spark SQL text: a plan then costs one py4j round trip per
+# projection instead of several per Column node. Double literals carry a
+# D suffix because a bare 1.0 is a DECIMAL in Spark SQL. The DuckDB
+# oracles below are independent re-derivations and do not use these.
+def _bucket_sql(t: str) -> str:
+    """Token -> hashing-trick bucket in [0, _Q117_D): md5 'ft:' trick."""
+    return (
+        f"CAST(conv(substring(md5(concat('ft:', {t})), 1, 8), 16, 10) AS BIGINT)"
+        f" % {_Q117_D}"
+    )
+
+
+def _weight_fold_sql(toks: str) -> str:
+    """Sum of q117's stand-in weights over a token array: w_int(b) =
+    (b·2654435761) mod _Q117_WMOD − 50000, an exact int64 fold."""
+    w = f"({_bucket_sql('t')}) * 2654435761 % {_Q117_WMOD} - 50000"
+    return f"aggregate({toks}, CAST(0 AS BIGINT), (acc, t) -> acc + ({w}))"
+
+
+def _diverse_sql(toks: str) -> str:
+    """Lexical-diversity label: 1 when 2·|distinct tokens| > n, else 0."""
+    return f"CAST(size(array_distinct({toks})) * 2 > size({toks}) AS INT)"
+
+
+def _feature_frame(docs: DataFrame, **extra: Column) -> DataFrame:
+    """(doc_id, b, c, n, y, *extra): per (doc, bucket) the token count c,
+    with the doc's length n, label y and any per-doc ``extra`` columns.
+
+    Lazily pinned: every step's plan reads one compiled RDD, and the
+    query's single final action materializes it (an eager pin cost 107
+    construction jobs at sf0.1, all fixed overhead)."""
+    per_doc = [f"min({k}) AS {k}" for k in extra]
+    return (
+        docs.select("doc_id", "text", *[c.alias(k) for k, c in extra.items()])
+        .selectExpr(
+            "doc_id",
+            f"explode({_TOKS}) AS t",
+            f"CAST(size({_TOKS}) AS BIGINT) AS n",
+            f"{_diverse_sql(_TOKS)} AS y",
+            *extra,
+        )
+        .selectExpr("doc_id", f"{_bucket_sql('t')} AS b", "n", "y", *extra)
+        .groupBy("doc_id", "b")
+        .agg(
+            *[
+                F.expr(e)
+                for e in ("CAST(count(*) AS BIGINT) AS c", "min(n) AS n", "min(y) AS y", *per_doc)
+            ]
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _with_weights(df: DataFrame, w: DataFrame | None) -> DataFrame:
+    """``df`` with each bucket's weight ``w``; ``w is None`` is the
+    all-zero start, where every bucket reads NULL (coalesced to 0)."""
+    if w is None:
+        return df.selectExpr("*", "CAST(NULL AS BIGINT) AS w")
+    return df.join(w, "b", "left")
+
+
+def _forward(feat: DataFrame, w: DataFrame | None) -> DataFrame:
+    """(doc_id, n, y, pq): the mean-pooled sigmoid, floor-quantized to an
+    int 1e-6 grid in [1, 999999] before any aggregation, so every sum
+    over it is exact int64.
+
+    Lazily pinned: a pin still compiles to ONE RDD object, so the loss
+    readout and the gradient share it; the plan cannot re-nest doubly-
+    referenced subtrees (the un-pinned form measured 160 s)."""
+    p = "1.0D / (1.0D + exp(-(CAST(s AS DOUBLE) / (1000000.0D * n))))"
+    return (
+        _with_weights(feat, w)
+        .groupBy("doc_id")
+        .agg(
+            F.expr("min(n) AS n"),
+            F.expr("min(y) AS y"),
+            F.expr("CAST(sum(c * coalesce(w, 0)) AS BIGINT) AS s"),
+        )
+        .selectExpr(
+            "doc_id",
+            "n",
+            "y",
+            f"CAST(greatest(1, least(999999, floor({p} * 1000000 + 0.5D))) AS BIGINT) AS pq",
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _readout(pr: DataFrame) -> DataFrame:
+    """(lsum, n_correct, n_docs, logloss) of a forward pass: per-doc
+    logloss floored onto an int 1e-9 grid (exact int64 sum) and accuracy
+    at the 0.5 threshold."""
+    pp = "pq / 1000000.0D"
+    li = f"floor(-(y * ln({pp}) + (1 - y) * ln(1.0D - {pp})) * 1000000000)"
+    return pr.selectExpr(
+        f"CAST(sum(CAST({li} AS BIGINT)) AS BIGINT) AS lsum",
+        "CAST(sum(CASE WHEN CAST(pq > 500000 AS INT) = y THEN 1 ELSE 0 END) AS BIGINT)"
+        " AS n_correct",
+        "CAST(count(*) AS BIGINT) AS n_docs",
+    ).selectExpr("*", "round(CAST(lsum AS DOUBLE) / 1000000000.0D / n_docs, 6) AS logloss")
+
+
+def _descend(
+    feat: DataFrame, pr: DataFrame, w: DataFrame | None, nn: DataFrame, eta: float
+) -> DataFrame:
+    """Weights after one full-batch gradient step: per-(doc, bucket)
+    contributions floor((pq − y·1e6)·c·1e6/n) summed exactly in int64 per
+    bucket, then w − floor(η·G/(1e6·N)) (double-exact, |η·G| < 2^53).
+    Lazily pinned, like :func:`_forward`."""
+    gi = "CAST(floor(CAST((pq - y * 1000000) * c AS DOUBLE) * 1000000.0D / n) AS BIGINT)"
+    grad = (
+        feat.join(pr.select("doc_id", "pq"), "doc_id")
+        .groupBy("b")
+        .agg(F.expr(f"CAST(sum({gi}) AS BIGINT) AS g"))
+    )
+    step = f"CAST(floor({eta!r}D * CAST(g AS DOUBLE) / (1000000.0D * nd)) AS BIGINT)"
+    return (
+        _with_weights(grad, w)
+        .crossJoin(F.broadcast(nn))
+        .selectExpr("b", f"coalesce(w, 0) - {step} AS w")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _lattice_train(
+    feat: DataFrame, steps: int, eta: float
+) -> tuple[DataFrame, list[DataFrame]]:
+    """``steps`` gradient steps from all-zero weights over a pinned
+    feature frame: (final weights, the forward pass each step read)."""
+    nn = feat.selectExpr("CAST(count(DISTINCT doc_id) AS BIGINT) AS nd")
+    w, passes = None, []
+    for _ in range(steps):
+        passes.append(_forward(feat, w))
+        w = _descend(feat, passes[-1], w, nn, eta)
+    return w, passes
 
 
 def q117_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-
-    def w_int(t: F.Column) -> F.Column:
-        hex8 = F.substring(F.md5(F.concat(F.lit("ft:"), t)), 1, 8)
-        bucket = F.conv(hex8, 16, 10).cast("long") % _Q117_D
-        return (bucket * F.lit(2654435761)) % F.lit(_Q117_WMOD) - F.lit(50000)
-
-    toks = F.split(F.lower(F.col("text")), " ")
-    scored = docs.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda acc, t: acc + w_int(t)
-        ).alias("w_sum"),
-    )
-    # |logit| ≤ 0.5 (|w| ≤ 5e4), inside det_exp_small's domain — engine
+    # Tokens are scored through the family's shared _weight_fold_sql
+    # (whose bucket is _bucket_sql, the featurizer q270/q276/q278 train on).
+    # |logit| ≤ 0.5 (|w| ≤ 5e4), inside det_exp_small_sql's domain — engine
     # exp()'s last ulp differs across engines and the score is EMITTED
     # per-row on a 1e-6 grid, so the sigmoid runs on the deterministic
-    # Taylor surrogate (round-9 sweep; the q276 fix class).
-    logit = F.col("w_sum") / (F.lit(100000.0) * F.col("n_tokens"))
-    return scored.select(
-        "doc_id",
-        "n_tokens",
-        "w_sum",
-        F.round(F.lit(1.0) / (F.lit(1.0) + det_exp_small(-logit)), 6).alias(
-            "score"
-        ),
-        F.when(F.col("w_sum") >= 0, F.lit("keep")).otherwise(F.lit("drop")).alias("label"),
+    # Taylor surrogate over the staged argument mx (round-9 sweep; the
+    # q276 fix class).
+    return (
+        load(spark, sf_dir, "documents")
+        .selectExpr(
+            "doc_id",
+            f"CAST(size({_TOKS}) AS BIGINT) AS n_tokens",
+            f"{_weight_fold_sql(_TOKS)} AS w_sum",
+        )
+        .selectExpr("*", "-(w_sum / (100000.0D * n_tokens)) AS mx")
+        .selectExpr(
+            "doc_id",
+            "n_tokens",
+            "w_sum",
+            f"round(1.0D / (1.0D + {_det_exp_small_sql('mx')}), 6) AS score",
+            "CASE WHEN w_sum >= 0 THEN 'keep' ELSE 'drop' END AS label",
+        )
     )
 
 
@@ -850,148 +986,16 @@ _Q270_K = 8
 
 
 def q270_classifier_training(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
-    base = docs.select(
-        "doc_id",
-        F.explode(toks).alias("t"),
-        F.size(toks).cast("long").alias("n"),
-        (F.size(F.array_distinct(toks)) * 2 > F.size(toks)).cast("int").alias("y"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ft:"), F.col("t"))), 1, 8), 16, 10
-        ).cast("long")
-        % _Q117_D
-    )
-    feat = (
-        base.select("doc_id", bucket.alias("b"), "n", "y")
-        .groupBy("doc_id", "b")
-        .agg(
-            F.count("*").cast("long").alias("c"),
-            F.min("n").alias("n"),
-            F.min("y").alias("y"),
-        )
-        # lazy: still a LogicalRDD leaf in every per-step plan (the RDD is
-        # compiled once, here), but materialization happens inside the
-        # query's single final action instead of as its own scheduler job —
-        # the K-step chain then runs as ONE action whose shared RDDs are
-        # computed exactly once (r10; the eager form cost 107 construction
-        # jobs at sf0.1, all fixed overhead).
-        .localCheckpoint(eager=False)
-    )
-    nn = feat.groupBy().agg(
-        F.count_distinct("doc_id").cast("long").alias("nd")
-    )
-
-    w = None  # step-0 weights: all-zero (absent bucket rows read as 0)
-    out = []
-    for k in range(_Q270_K + 1):
-        if w is None:
-            scored = feat.groupBy("doc_id").agg(
-                F.min("n").alias("n"),
-                F.min("y").alias("y"),
-                F.lit(0).cast("long").alias("s"),
-            )
-        else:
-            scored = (
-                feat.join(w, "b", "left")
-                .groupBy("doc_id")
-                .agg(
-                    F.min("n").alias("n"),
-                    F.min("y").alias("y"),
-                    F.sum(F.col("c") * F.coalesce("w", F.lit(0)))
-                    .cast("long")
-                    .alias("s"),
-                )
-            )
-        p = F.lit(1.0) / (
-            F.lit(1.0)
-            + F.exp(-(F.col("s").cast("double") / (F.lit(1000000.0) * F.col("n"))))
-        )
-        pq = F.greatest(
-            F.lit(1),
-            F.least(F.lit(999999), F.floor(p * 1000000 + F.lit(0.5))),
-        ).cast("long")
-        pr = scored.select("doc_id", "n", "y", pq.alias("pq")).localCheckpoint(
-            eager=False
-        )
-        # lazy checkpoint ≠ no checkpoint: pr still compiles to ONE RDD
-        # object here, so both its readers (loss rollup + gradient) and
-        # w{k}'s two references share that RDD — the plan cannot re-nest
-        # doubly-referenced subtrees (the un-checkpointed form measured
-        # 160s), while the materialization job count drops from 17 eager
-        # checkpoints to the single final action.
-        pp = F.col("pq") / F.lit(1000000.0)
-        li = F.floor(
-            -(
-                F.col("y") * F.log(pp)
-                + (F.lit(1) - F.col("y")) * F.log(F.lit(1.0) - pp)
-            )
-            * 1000000000
-        ).cast("long")
-        out.append(
-            pr.agg(
-                F.sum(li).cast("long").alias("lsum"),
-                F.sum(
-                    F.when(
-                        (F.col("pq") > 500000).cast("int") == F.col("y"), 1
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_correct"),
-                F.count("*").cast("long").alias("n_docs"),
-            ).select(
-                F.lit(k).cast("int").alias("step"),
-                F.round(
-                    F.col("lsum").cast("double") / 1e9 / F.col("n_docs"), 6
-                ).alias("logloss"),
-                "n_correct",
-                "n_docs",
-            )
-        )
-        if k == _Q270_K:
-            break
-        grad = (
-            feat.join(pr.select("doc_id", "pq"), "doc_id")
-            .select(
-                "b",
-                F.floor(
-                    ((F.col("pq") - F.col("y") * 1000000) * F.col("c")).cast(
-                        "double"
-                    )
-                    * F.lit(1000000.0)
-                    / F.col("n")
-                )
-                .cast("long")
-                .alias("gi"),
-            )
-            .groupBy("b")
-            .agg(F.sum("gi").cast("long").alias("g"))
-        )
-        joined = (
-            grad.join(w, "b", "left")
-            if w is not None
-            else grad.withColumn("w", F.lit(None).cast("long"))
-        )
-        w = (
-            joined.crossJoin(F.broadcast(nn))
-            .select(
-                "b",
-                (
-                    F.coalesce("w", F.lit(0))
-                    - F.floor(
-                        F.lit(_Q270_ETA)
-                        * F.col("g").cast("double")
-                        / (F.lit(1000000.0) * F.col("nd"))
-                    ).cast("long")
-                ).alias("w"),
-            )
-            .localCheckpoint(eager=False)  # see pr note
-        )
-    return reduce(lambda a, b: a.unionByName(b), out).orderBy("step")
+    feat = _feature_frame(load(spark, sf_dir, "documents"))
+    w, passes = _lattice_train(feat, _Q270_K, _Q270_ETA)
+    passes.append(_forward(feat, w))  # the loss after the last step
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _readout(pr).selectExpr(f"{k} AS step", "logloss", "n_correct", "n_docs")
+            for k, pr in enumerate(passes)
+        ],
+    ).orderBy("step")
 
 
 def _q270_step_sql(k: int, last: bool) -> str:
@@ -1175,34 +1179,18 @@ def _q276_mi_stages(dialect: str) -> list[dict[str, str]]:
 
 def q276_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
-    base = docs.select(
-        "doc_id",
-        F.explode(toks).alias("t"),
-        (F.size(F.array_distinct(toks)) * 2 > F.size(toks)).cast("int").alias("y"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ft:"), F.col("t"))), 1, 8), 16, 10
-        ).cast("long")
-        % _Q117_D
-    )
+    y = f"{_diverse_sql(_TOKS)} AS y"
     present = (
-        base.select("doc_id", bucket.alias("b"), "y")
+        docs.selectExpr("doc_id", f"explode({_TOKS}) AS t", y)
+        .selectExpr("doc_id", f"{_bucket_sql('t')} AS b", "y")
         .groupBy("doc_id", "b")
-        .agg(F.min("y").alias("y"))
+        .agg(F.expr("min(y) AS y"))
     )
-    lab = docs.select(
-        "doc_id",
-        (F.size(F.array_distinct(toks)) * 2 > F.size(toks)).cast("int").alias("y"),
-    )
-    tot = lab.agg(
-        F.count("*").cast("long").alias("nn"),
-        F.sum("y").cast("long").alias("npos"),
+    tot = docs.selectExpr(y).selectExpr(
+        "CAST(count(*) AS BIGINT) AS nn", "CAST(sum(y) AS BIGINT) AS npos"
     )
     cells = present.groupBy("b").agg(
-        F.count("*").cast("long").alias("n1"),
-        F.sum("y").cast("long").alias("n11"),
+        F.expr("CAST(count(*) AS BIGINT) AS n1"), F.expr("CAST(sum(y) AS BIGINT) AS n11")
     )
     # Integer-only emission (r11): the r9/r10 driver reds survived BOTH
     # engine-ln() replacement AND BIGINT emission — the double feeding
@@ -1293,10 +1281,12 @@ Q276_SQL = _q276_oracle_sql()
 # weights: train/val logloss on the 1e-9 integer grid, val accuracy,
 # and the val−train gap on an exact 1e-6 grid (the overfit readout).
 # Same determinism discipline as q270 throughout (floor-quantized
-# sigmoids before any aggregation; exact int64 gradient sums; eager
+# sigmoids before any aggregation; exact int64 gradient sums; lazy
 # per-step checkpoints; the oracle's doubly-referenced weight chains
 # MATERIALIZED). Scale: 2 folds × K steps of the q270 layout — the
-# feature frame is built and checkpointed ONCE with the fold tag.
+# feature frame is built and checkpointed ONCE with the fold tag, and
+# both queries run the same trainer helpers (_feature_frame,
+# _lattice_train, _forward, _readout).
 # ---------------------------------------------------------------------------
 _Q278_FOLDS = 2
 _Q278_K = 4
@@ -1304,177 +1294,35 @@ _Q278_ETA = 200.0
 
 
 def q278_classifier_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from functools import reduce
-
     from ..operators.curation import sample_key_expr
 
-    docs = load(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
-    base = docs.select(
-        "doc_id",
-        F.explode(toks).alias("t"),
-        F.size(toks).cast("long").alias("n"),
-        (F.size(F.array_distinct(toks)) * 2 > F.size(toks)).cast("int").alias("y"),
-        (sample_key_expr("doc_id", salt="cvfold") % _Q278_FOLDS)
-        .cast("int")
-        .alias("fold"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ft:"), F.col("t"))), 1, 8), 16, 10
-        ).cast("long")
-        % _Q117_D
-    )
-    feat = (
-        base.select("doc_id", bucket.alias("b"), "n", "y", "fold")
-        .groupBy("doc_id", "b")
-        .agg(
-            F.count("*").cast("long").alias("c"),
-            F.min("n").alias("n"),
-            F.min("y").alias("y"),
-            F.min("fold").alias("fold"),
-        )
-        # lazy: every fold/step/eval still reads the ONE compiled RDD; the
-        # single final action materializes it (see the q270 note)
-        .localCheckpoint(eager=False)
-    )
-
-    def forward(df, w):
-        if w is None:
-            scored = df.groupBy("doc_id").agg(
-                F.min("n").alias("n"),
-                F.min("y").alias("y"),
-                F.lit(0).cast("long").alias("s"),
-            )
-        else:
-            scored = (
-                df.join(w, "b", "left")
-                .groupBy("doc_id")
-                .agg(
-                    F.min("n").alias("n"),
-                    F.min("y").alias("y"),
-                    F.sum(F.col("c") * F.coalesce("w", F.lit(0)))
-                    .cast("long")
-                    .alias("s"),
-                )
-            )
-        p = F.lit(1.0) / (
-            F.lit(1.0)
-            + F.exp(-(F.col("s").cast("double") / (F.lit(1000000.0) * F.col("n"))))
-        )
-        pq = F.greatest(
-            F.lit(1), F.least(F.lit(999999), F.floor(p * 1000000 + F.lit(0.5)))
-        ).cast("long")
-        return scored.select("doc_id", "n", "y", pq.alias("pq"))
-
-    def lossrow(pr):
-        pp = F.col("pq") / F.lit(1000000.0)
-        li = F.floor(
-            -(
-                F.col("y") * F.log(pp)
-                + (F.lit(1) - F.col("y")) * F.log(F.lit(1.0) - pp)
-            )
-            * 1000000000
-        ).cast("long")
-        return pr.agg(
-            F.sum(li).cast("long").alias("lsum"),
-            F.sum(
-                F.when((F.col("pq") > 500000).cast("int") == F.col("y"), 1)
-                .otherwise(0)
-            )
-            .cast("long")
-            .alias("n_correct"),
-            F.count("*").cast("long").alias("n_docs"),
-        )
-
+    fold = (sample_key_expr("doc_id", salt="cvfold") % _Q278_FOLDS).cast("int")
+    feat = _feature_frame(load(spark, sf_dir, "documents"), fold=fold)
     out = []
-    for fold in range(_Q278_FOLDS):
-        train = feat.filter(F.col("fold") != fold)
-        val = feat.filter(F.col("fold") == fold)
-        nn = train.groupBy().agg(
-            F.count_distinct("doc_id").cast("long").alias("nd")
+    for f in range(_Q278_FOLDS):
+        train, val = feat.filter(f"fold <> {f}"), feat.filter(f"fold = {f}")
+        w, _ = _lattice_train(train, _Q278_K, _Q278_ETA)
+        tr = _readout(_forward(train, w)).selectExpr(
+            "n_docs AS n_train", "lsum AS tl", "logloss AS train_logloss"
         )
-        w = None
-        for _ in range(_Q278_K):
-            pr = forward(train, w).localCheckpoint(eager=False)
-            grad = (
-                train.join(pr.select("doc_id", "pq"), "doc_id")
-                .select(
-                    "b",
-                    F.floor(
-                        ((F.col("pq") - F.col("y") * 1000000) * F.col("c")).cast(
-                            "double"
-                        )
-                        * F.lit(1000000.0)
-                        / F.col("n")
-                    )
-                    .cast("long")
-                    .alias("gi"),
-                )
-                .groupBy("b")
-                .agg(F.sum("gi").cast("long").alias("g"))
-            )
-            joined = (
-                grad.join(w, "b", "left")
-                if w is not None
-                else grad.withColumn("w", F.lit(None).cast("long"))
-            )
-            w = (
-                joined.crossJoin(F.broadcast(nn))
-                .select(
-                    "b",
-                    (
-                        F.coalesce("w", F.lit(0))
-                        - F.floor(
-                            F.lit(_Q278_ETA)
-                            * F.col("g").cast("double")
-                            / (F.lit(1000000.0) * F.col("nd"))
-                        ).cast("long")
-                    ).alias("w"),
-                )
-                .localCheckpoint(eager=False)  # the q270 lineage bound
-            )
-        tr_ls = lossrow(forward(train, w).localCheckpoint(eager=False))
-        va_ls = lossrow(forward(val, w).localCheckpoint(eager=False))
-        mloss = lambda: F.round(
-            F.col("lsum").cast("double") / 1e9 / F.col("n_docs"), 6
-        )
-        tr = tr_ls.select(
-            mloss().alias("train_logloss"),
-            F.col("n_docs").alias("n_train"),
-            F.col("lsum").alias("_tl"),
-            F.col("n_docs").alias("_tn"),
-        )
-        va = va_ls.select(
-            mloss().alias("val_logloss"),
-            (F.col("n_correct") / F.col("n_docs")).alias("_vacc"),
-            F.col("n_docs").alias("n_val"),
-            F.col("lsum").alias("_vl"),
-            F.col("n_docs").alias("_vn"),
+        va = _readout(_forward(val, w)).selectExpr(
+            "n_docs AS n_val", "lsum AS vl", "logloss AS val_logloss", "n_correct"
         )
         out.append(
-            tr.crossJoin(F.broadcast(va)).select(
-                F.lit(fold).cast("int").alias("fold"),
+            tr.crossJoin(F.broadcast(va)).selectExpr(
+                f"{f} AS fold",
                 "n_train",
                 "n_val",
                 "train_logloss",
                 "val_logloss",
-                F.round("_vacc", 6).alias("val_accuracy"),
+                "round(n_correct / n_val, 6) AS val_accuracy",
                 # gap on an exact 1e-6 grid from the integer loss sums
-                (
-                    F.floor(
-                        (
-                            F.col("_vl").cast("double") / 1e9 / F.col("_vn")
-                            - F.col("_tl").cast("double") / 1e9 / F.col("_tn")
-                        )
-                        * 1000000
-                        + F.lit(0.5)
-                    )
-                    / F.lit(1000000.0)
-                ).alias("generalization_gap"),
+                "floor((CAST(vl AS DOUBLE) / 1000000000.0D / n_val"
+                " - CAST(tl AS DOUBLE) / 1000000000.0D / n_train) * 1000000 + 0.5D)"
+                " / 1000000.0D AS generalization_gap",
             )
         )
-    return reduce(lambda a, b: a.unionByName(b), out).orderBy("fold")
+    return reduce(DataFrame.unionByName, out).orderBy("fold")
 
 
 def _q278_fold_sql(f: int) -> str:
@@ -2281,39 +2129,29 @@ _Q159_TEMP = 4000.0  # temperature: spreads q117's near-0.5 raw sigmoids
 
 
 def q159_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-
-    # Same score as q117 (kept inline so q117's fingerprint is untouched;
-    # the expressions are cross-linked in both docstrings).
-    def w_int(t: F.Column) -> F.Column:
-        hex8 = F.substring(F.md5(F.concat(F.lit("ft:"), t)), 1, 8)
-        bucket = F.conv(hex8, 16, 10).cast("long") % _Q117_D
-        return (bucket * F.lit(2654435761)) % F.lit(_Q117_WMOD) - F.lit(50000)
-
-    toks = F.split(F.lower(F.col("text")), " ")
-    scored = docs.select(
-        (F.col("n_chars") >= _Q159_THRESH).alias("y"),
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda acc, t: acc + w_int(t)
-        ).alias("w_sum"),
+    # The same score as q117, through the family's shared weight fold.
+    # |logit| ≤ 12.5 (|w| ≤ 5e4, TEMP 4e3) — too wide for det_exp_small_sql
+    # directly, so range-reduce: exp(x) = det_exp_small_sql(x/16)^16 (the
+    # /16 is exact, the 4 squarings are correctly-rounded IEEE ops, each
+    # staged in its own projection: as text, e*e nested 4 deep is 16
+    # copies), keeping the whole sigmoid bit-identical across engines
+    # before the fixed-point quantization (round-9 sweep; engine exp() is
+    # ulp-unstable).
+    exp_x = (
+        load(spark, sf_dir, "documents")
+        .selectExpr(
+            f"n_chars >= {_Q159_THRESH} AS y",
+            f"CAST(size({_TOKS}) AS BIGINT) AS n_tokens",
+            f"{_weight_fold_sql(_TOKS)} AS w_sum",
+        )
+        .selectExpr("y", f"(-(w_sum / ({_Q159_TEMP!r}D * n_tokens))) / 16.0D AS mx")
+        .selectExpr("y", f"{_det_exp_small_sql('mx')} AS e")
     )
-    # |logit| ≤ 12.5 (|w| ≤ 5e4, TEMP 4e3) — too wide for det_exp_small
-    # directly, so range-reduce: exp(x) = det_exp_small(x/16)^16 (the /16
-    # is exact, the 4 squarings are correctly-rounded IEEE ops), keeping
-    # the whole sigmoid bit-identical across engines before the fixed-
-    # point quantization (round-9 sweep; engine exp() is ulp-unstable).
-    logit = F.col("w_sum") / (F.lit(_Q159_TEMP) * F.col("n_tokens"))
-    e = det_exp_small((-logit) / F.lit(16.0))
     for _ in range(4):
-        e = e * e
-    s_fp = F.round(F.lit(_Q159_FP) / (F.lit(1.0) + e), 0).cast("long")
-    binned = scored.select(
-        "y", s_fp.alias("s_fp")
-    ).withColumn(
-        "bin",
-        F.least(F.floor(F.col("s_fp") / (_Q159_FP // 10)), F.lit(9)).cast("int"),
-    )
+        exp_x = exp_x.selectExpr("y", "e * e AS e")
+    binned = exp_x.selectExpr(
+        "y", f"CAST(round({_Q159_FP} / (1.0D + e), 0) AS BIGINT) AS s_fp"
+    ).selectExpr("*", f"CAST(least(floor(s_fp / {_Q159_FP // 10}), 9) AS INT) AS bin")
     per_bin = binned.groupBy("bin").agg(
         F.count("*").alias("n"),
         F.sum("s_fp").alias("sum_fp"),

@@ -132,17 +132,20 @@ def _lambda_bodies(plan):
 def test_repetition_gate_lambdas_never_retokenize(spark, sf_dir):
     """The gate's filter is pushed below the projection that staged the
     tokens, so the optimized plan inlines split(text) into the ratio
-    expressions. No lambda may read it: a gram lambda that indexes the
-    tokens re-splits the document once per gram, O(len²) per row."""
+    expressions. No lambda may split: a gram (or block) lambda that
+    indexes the tokens re-splits the document once per gram, O(len²) per
+    row. ``blockize`` (block dedup, batch and streaming) is held to the
+    same rule."""
     from bbc_news_data_pipeline_spark.operators.curation import gate_documents
+    from bbc_news_data_pipeline_spark.operators.dedup import blockize
     from bbc_news_data_pipeline_spark.streaming.curation import curate_docs_stream
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for df in (gate_documents(docs), curate_docs_stream(docs)):
+    for df in (gate_documents(docs), curate_docs_stream(docs), blockize(docs, "doc_id", "text")):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         bodies = list(_lambda_bodies(plan))
-        assert bodies and "split(text" in plan, plan
-        assert not [b for b in bodies if "split(text" in b], plan
+        assert bodies and "split(" in plan, plan
+        assert not [b for b in bodies if "split(" in b], plan
 
 
 # --- connected components --------------------------------------------------

@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from bbc_news_data_pipeline_spark.functions.detmath import (
-    det_exp_small,
     det_exp_small_sql,
     det_ln,
     det_ln_sql,
@@ -74,7 +73,7 @@ def test_spark_duckdb_bit_equality_exp(spark):
     df = spark.createDataFrame([(x,) for x in EXP_INPUTS], "x double")
     got = {
         r["x"]: r["y"]
-        for r in df.select("x", det_exp_small(F.col("x")).alias("y")).collect()
+        for r in df.selectExpr("x", f"{det_exp_small_sql('x')} AS y").collect()
     }
     rows = duckdb.sql(
         f"SELECT x, {det_exp_small_sql('x')} AS y "

@@ -5,9 +5,11 @@ classes compiled on a repeat.
 Building a DataFrame runs no job, but every expression node assembled
 through the Column API is a gateway call, and a curation pass or a
 ``foreachBatch`` micro-batch pays that cost on every call. The similarity
-and dedup operators and the curation text gate ship their expressions as
-SQL text, one call per projection; these budgets hold them there
-(node-by-node builds cost 400–2,500 round trips each). A warm repeat of a DAG run or a curation
+and dedup operators (SimHash included), the curation text gate and the
+hashed quality-classifier family (q117 scoring, q159 calibration, q270
+training, q278 cross-validation) ship their expressions as SQL text, one
+call per projection; these budgets hold them there (node-by-node builds
+cost 400–10,000 round trips each). A warm repeat of a DAG run or a curation
 pass must also find every generated class in Spark's codegen cache
 instead of recompiling it with Janino.
 """
@@ -28,6 +30,7 @@ from bbc_news_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     minhash_candidates,
     ngram_jaccard_pairs,
+    simhash_candidates,
 )
 from bbc_news_data_pipeline_spark.operators.similarity import (
     QUANT_SCALE,
@@ -36,6 +39,12 @@ from bbc_news_data_pipeline_spark.operators.similarity import (
 )
 from bbc_news_data_pipeline_spark.operators.topics import fit_lda, topic_words
 from bbc_news_data_pipeline_spark.pipeline.bbc_news import build_pipeline
+from bbc_news_data_pipeline_spark.plans.quality_plans import (
+    q117_hashed_classifier,
+    q159_calibration_ece,
+    q270_classifier_training,
+    q278_classifier_cv,
+)
 from bbc_news_data_pipeline_spark.session import count_codegen_compiles
 from bbc_news_data_pipeline_spark.streaming.curation import curate_docs_stream
 
@@ -100,6 +109,12 @@ def test_minhash_candidates_budget(spark, py4j_round_trips, corpus):
     assert n <= 500, n
 
 
+def test_simhash_candidates_budget(spark, py4j_round_trips, corpus):
+    docs = corpus[3]
+    n = _build_trips(py4j_round_trips, lambda: simhash_candidates(docs, "doc_id", "text"))
+    assert n <= 500, n
+
+
 def test_ngram_jaccard_pairs_budget(spark, py4j_round_trips, corpus):
     docs = corpus[3]
     for max_df in (None, 3):
@@ -120,6 +135,20 @@ def test_curation_text_gate_budgets(spark, py4j_round_trips, sf_dir):
         ),
     }
     trips = {name: _build_trips(py4j_round_trips, build) for name, (_, build) in budgets.items()}
+    assert all(trips[name] <= cap for name, (cap, _) in budgets.items()), trips
+
+
+def test_quality_classifier_budgets(spark, py4j_round_trips, sf_dir):
+    budgets = {
+        "q117": (100, q117_hashed_classifier),
+        "q159": (700, q159_calibration_ece),
+        "q270": (2000, q270_classifier_training),
+        "q278": (2000, q278_classifier_cv),
+    }
+    trips = {
+        name: _build_trips(py4j_round_trips, lambda: query(spark, sf_dir))
+        for name, (_, query) in budgets.items()
+    }
     assert all(trips[name] <= cap for name, (cap, _) in budgets.items()), trips
 
 
