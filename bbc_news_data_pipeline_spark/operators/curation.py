@@ -562,9 +562,13 @@ def repetition_ratios(df: DataFrame, *, carry: tuple[str, ...] = ("lang",)) -> D
     from ..functions.textstats import max_run_count_expr
     from .dedup import shingles_from_tokens
 
-    toked = df.selectExpr("doc_id", *carry, "split(text, ' ') AS _toks").filter(
-        "size(_toks) >= 2"
-    )
+    # Tokens come out of a generator: the filters on them (here and in
+    # gate_documents) cannot sink below a Generate, so they read the
+    # once-split tokens. Staged by a projection, split(text) would be
+    # inlined into every size/distinct/slice term of a pushed-down filter.
+    toked = df.selectExpr(
+        "doc_id", *carry, "explode(array(split(text, ' '))) AS _toks"
+    ).filter("size(_toks) >= 2")
     staged = toked.select(
         "doc_id", *carry, "_toks", shingles_from_tokens("_toks", 2).alias("_bi")
     )
@@ -593,8 +597,12 @@ def gate_documents(
     ``bigram_t``. Shared by q167, the batch (q267) and streaming (q277)
     corpus builds and the curation stream; per-doc, so delta-gating ≡
     rebuild-gating by construction."""
-    return repetition_ratios(df, carry=carry).filter(
-        f"dup_word_ratio <= {float(dup_t)}D AND top_bigram_ratio <= {float(bigram_t)}D"
+    # the threshold filter reads the ratios off a generator, so it stays
+    # above the projection that computes them once per doc
+    return (
+        repetition_ratios(df, carry=carry)
+        .selectExpr("inline(array(struct(*)))")
+        .filter(f"dup_word_ratio <= {float(dup_t)}D AND top_bigram_ratio <= {float(bigram_t)}D")
     )
 
 

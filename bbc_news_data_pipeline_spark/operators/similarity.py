@@ -65,11 +65,17 @@ def _qint(arr: str) -> Column:
     return F.expr(_qint_sql(arr))
 
 
-def _dot_q_sql(aq: str, bq: str) -> str:
+def _idot_sql(aq: str, bq: str) -> str:
+    """Exact BIGINT dot product of two int64 arrays (pre-quantized
+    vectors, or an integer literal array)."""
     return (
-        f"CAST(aggregate(zip_with({aq}, {bq}, (l, r) -> l * r), "
-        "CAST(0 AS BIGINT), (acc, p) -> acc + p) AS DOUBLE)"
+        f"aggregate(zip_with({aq}, {bq}, (l, r) -> l * r), "
+        "CAST(0 AS BIGINT), (acc, p) -> acc + p)"
     )
+
+
+def _dot_q_sql(aq: str, bq: str) -> str:
+    return f"CAST({_idot_sql(aq, bq)} AS DOUBLE)"
 
 
 def dot_q(aq: str, bq: str) -> Column:
@@ -142,6 +148,68 @@ def sq_l2(a: str, b: str) -> Column:
     integer, it ranks without ANY rounding — the k-means assignment
     argmin needs no 6dp tiebreak epsilon at all."""
     return F.expr(_sq_l2_q_sql(_qint_sql(a), _qint_sql(b)))
+
+
+def nearest_centroid(
+    points: DataFrame,
+    cents: DataFrame,
+    keys: list[str],
+    pv: str,
+    cv: str,
+    cell: str,
+    on: list[str] | None = None,
+) -> DataFrame:
+    """Assign every ``points`` row to its nearest ``cents`` row by exact
+    int64 squared L2 between the pre-quantized arrays ``pv`` and ``cv``.
+    Returns (*keys, cell, d): one row per ``keys`` value, the nearest
+    centroid's id in the ``cell`` column and its distance ``d``. Ties go
+    to the smallest id: the argmin is ``min(struct(d, cell))``, so every
+    k-means step, PQ codebook, IVF assignment and SemDeDup cluster in the
+    package breaks ties in this one place.
+
+    ``cents`` is broadcast: with ``on`` it is equi-joined on those
+    columns (per-subspace PQ codebooks score only their own subvector),
+    without it every centroid scores every point in a
+    BroadcastNestedLoopJoin. The aggregate plans as a SortAggregate,
+    partial and final: its struct-typed buffer is not one the hash
+    aggregate can update in place (``min_by(cell, struct(d, cell))``
+    plans the same way). The exchange moves one partial row per key and
+    task, never the |cents| scored rows.
+    """
+    pairs = (
+        points.join(F.broadcast(cents), on)
+        if on
+        else points.crossJoin(F.broadcast(cents))
+    )
+    return (
+        pairs.selectExpr(*keys, f"struct({_sq_l2_q_sql(pv, cv)} AS d, {cell} AS c) AS _dc")
+        .groupBy(*keys)
+        .agg(F.expr("min(_dc) AS _b"))
+        .selectExpr(*keys, f"_b.c AS {cell}", "_b.d AS d")
+    )
+
+
+def anchored_centroids(emb: DataFrame, ncell: int, ascale: int) -> DataFrame:
+    """(cell, cvec) of the anchored fixture: the quantized vectors of
+    rows ``vec_id < ncell`` scaled by ``ascale``, far enough apart that
+    the fixture has real clusters. Spark twin of the oracles'
+    ``_anchored_corpus_sql`` (plans/embeddings_plans.py)."""
+    return emb.filter(f"vec_id < {ncell}").selectExpr(
+        "vec_id AS cell", f"transform({_qint_sql('embedding')}, x -> x * {ascale}) AS cvec"
+    )
+
+
+def anchored_corpus(emb: DataFrame, cents: DataFrame, ncell: int) -> DataFrame:
+    """(vec_id, qv) of the anchored fixture: every row ``vec_id >= ncell``
+    as its quantized vector plus the centroid of cell ``vec_id % ncell``
+    from ``cents`` (:func:`anchored_centroids`, or the frozen copy a
+    streaming index stored)."""
+    return (
+        emb.filter(f"vec_id >= {ncell}")
+        .selectExpr("vec_id", f"vec_id % {ncell} AS _ac", f"{_qint_sql('embedding')} AS _qv")
+        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
+        .selectExpr("vec_id", "zip_with(cvec, _qv, (a, b) -> a + b) AS qv")
+    )
 
 
 def qround(c: Column, d: int) -> Column:
@@ -258,14 +326,13 @@ def ivf_topk(
     # (not once per centroid — the assignment scores |cells| pairs per
     # vector), and centroid quantizations/norms precompute into the tiny
     # broadcast. Same division grouping as cosine() -> identical doubles.
-    # Argmax is a SORT-FREE hash aggregate over SLIM columns only:
-    # max_by on the composite (c_cos, -cell_id) reproduces the (score
-    # desc, cell_id asc) window tiebreak, stays primitive-typed (so
-    # Spark picks HashAggregate with map-side partials — the exchange
-    # moves one (id, cell) row per vector, not |cells| payload rows),
-    # and the embedding column rejoins afterwards instead of riding the
-    # aggregation buffer (an array-typed first() demotes the whole agg
-    # to SortAggregate).
+    # The argmax aggregates SLIM columns only: max_by on the composite
+    # (c_cos, -cell_id) reproduces the (score desc, cell_id asc) window
+    # tiebreak with map-side partials (a SortAggregate, partial and
+    # final, like nearest_centroid's argmin — the exchange moves one
+    # (id, cell) row per vector and task, not |cells| payload rows), and
+    # the embedding column rejoins afterwards instead of riding the
+    # aggregation buffer.
     c_cos = _cos_q_sql("_qv", "cell_qv", "_nrm", "cell_nrm")
     cell_map = (
         emb.selectExpr("*", f"{_qint_sql(vec_col)} AS _qv")
@@ -410,12 +477,13 @@ def semantic_dedup(
     :func:`_qint`) and must be bounded by construction — the caller picks
     k (fixed count or a fixed-rate sample), which is what bounds the
     broadcast below; at 100 TB k is a parameter (e.g. 65k centroids ·
-    64 dims · 8 B ≈ 33 MB), never O(corpus). Assignment reproduces
-    q83's shape: staged quantization, exact int64 squared-L2 scores, a
-    sort-free ``min_by`` hash-aggregate argmin with (distance, seed_id)
-    tiebreak. A corpus row whose id IS a seed id clusters to itself
-    without scoring (distance 0 is the unique minimum, so this is an
-    identity, not a special case — it just skips k wasted scores).
+    64 dims · 8 B ≈ 33 MB), never O(corpus). Assignment is
+    :func:`nearest_centroid` (q83's k-means step): staged quantization,
+    exact int64 squared-L2 scores, a SortAggregate argmin with
+    (distance, seed_id) tiebreak. A corpus row whose id IS a seed id
+    clusters to itself without scoring (distance 0 is the unique
+    minimum, so this is an identity, not a special case — it just skips
+    k wasted scores).
 
     Shape at scale: one bounded broadcast (seeds), one shuffle on
     ``id_col`` (the argmin aggregate), one shuffle on ``cluster_id``
@@ -429,12 +497,9 @@ def semantic_dedup(
     staged = emb.selectExpr(id_col, f"{_qint_sql(vec_col)} AS _qv")
     seed_ids = seeds.selectExpr(f"seed_id AS {id_col}")
     corpus = staged.join(F.broadcast(seed_ids), id_col, "left_anti")
-    assign = (
-        corpus.crossJoin(F.broadcast(seeds))
-        .selectExpr(id_col, "seed_id", f"{_sq_l2_q_sql('_qv', 'seed_qv')} AS _d")
-        .groupBy(id_col)
-        .agg(F.expr("min_by(seed_id, struct(_d, seed_id)) AS cluster_id"))
-    )
+    assign = nearest_centroid(
+        corpus, seeds, [id_col], "_qv", "seed_qv", "seed_id"
+    ).selectExpr(id_col, "seed_id AS cluster_id")
     # The assignment subtree feeds THREE consumers (pair generation, the
     # dropped-id derivation, and the survivor anti-join) and Catalyst
     # plans each as an independent copy — 3 BroadcastNestedLoopJoins and

@@ -16,7 +16,17 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.similarity import _round_sql, cosine_topk, lsh_bucket_ann
+from ..operators.similarity import (
+    _idot_sql,
+    _qint_sql,
+    _round_sql,
+    _sq_l2_q_sql,
+    anchored_centroids,
+    anchored_corpus,
+    cosine_topk,
+    lsh_bucket_ann,
+    nearest_centroid,
+)
 from ..sources.tables import load
 from .dedup_plans import _hex2int_sql
 from .registry import Query
@@ -42,6 +52,46 @@ def _cos_sql(a: str, b: str) -> str:
     return f"({_DOT.format(a=a, b=b)} / ({_NORM.format(a=a)} * {_NORM.format(a=b)}))"
 
 
+# Spark-side readout shared by the ANN recall queries (q199, q231, q268,
+# q281, q285, q286): the exact top-k under the (distance, vec_id) total
+# order marks the ground truth, and recall@k counts the marked rows a
+# search returned.
+def _topk(scored: DataFrame, d: str, k: int, qkey: tuple[str, ...] = ()) -> DataFrame:
+    """The ``k`` rows of ``scored`` nearest under (``d``, vec_id); per
+    ``qkey`` query when given, as a row_number window partitioned by the
+    query (bounded sorts, never a global one)."""
+    if not qkey:
+        return scored.orderBy(d, "vec_id").limit(k)
+    part = ", ".join(qkey)
+    return (
+        scored.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {part} ORDER BY {d}, vec_id) AS _rn"
+        )
+        .filter(f"_rn <= {k}")
+        .drop("_rn")
+    )
+
+
+def _exact_mark(scored: DataFrame, d: str, k: int, qkey: tuple[str, ...] = ()) -> DataFrame:
+    """(*qkey, vec_id, in_exact = 1) for the exact top-k of ``scored``:
+    left-join a search's result to it and ``in_exact`` marks the hits."""
+    return _topk(scored, d, k, qkey).selectExpr(*qkey, "vec_id", "1 AS in_exact")
+
+
+#: hits among found rows left-joined to :func:`_exact_mark`
+_HITS_SQL = "sum(coalesce(in_exact, 0))"
+
+
+def _recall_sql(k: int) -> str:
+    return f"{_HITS_SQL} / {float(k)!r}D"
+
+
+def _sqdist4_sql(c: str) -> str:
+    """An exact int64 squared distance in unit² (QUANT_SCALE² units
+    divided out), floor-rounded to 4dp."""
+    return _round_sql(f"CAST({c} AS DOUBLE) / 1e12", 4)
+
+
 # ---------------------------------------------------------------------------
 # q40 — brute-force cosine top-k against one query vector. Broadcast map +
 # TakeOrderedAndProject: no shuffle at any scale.
@@ -65,7 +115,8 @@ LIMIT 10
 # ---------------------------------------------------------------------------
 # q41 — nearest probe per vector (IVF assignment step): 8 probe vectors,
 # every other vector assigned to its max-cosine probe. Probe side is a tiny
-# broadcast; ranking via row_number with rounded-score + probe-id tiebreak.
+# broadcast; the Spark side ranks with a max_by aggregate, the oracle with
+# row_number, both on the rounded score with a probe-id tiebreak.
 # ---------------------------------------------------------------------------
 def q41_nearest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import _qint, dot_q, norm, qround
@@ -97,10 +148,11 @@ def q41_nearest_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("cos6"),
     )
-    # Sort-free argmax (the at-scale form SCALE.md promises): max_by on
-    # the composite (cos6, -probe_id) reproduces the (score desc,
-    # probe_id asc) tiebreak as a map-side-combinable hash aggregate —
-    # no per-vector window sort, exchange moves one row per vector.
+    # Window-free argmax: max_by on the composite (cos6, -probe_id)
+    # reproduces the (score desc, probe_id asc) tiebreak. It plans as a
+    # SortAggregate with map-side partials (a struct-typed buffer rules
+    # out the hash aggregate), so the exchange moves one row per vector
+    # and task, not one per (vector, probe).
     best = F.max_by(
         F.struct("probe_id", "cos6", "label", "probe_label"),
         F.struct(F.col("cos6"), (-F.col("probe_id")).alias("_t")),
@@ -308,9 +360,11 @@ ORDER BY e.vec_id, e.dim
 # nearest of 10 fixed seed centroids (quantized-exact squared L2 — an
 # int64, so the argmin needs NO rounding epsilon; ties → lowest seed id),
 # then recompute per-(cluster, dim) centroid means — the training loop of
-# an IVF index (q41/q53 consume exactly such centroids). Assignment is a
-# broadcast map over the corpus (no shuffle); the centroid update is ONE
-# shuffle on (cluster, dim) with map-side partial aggregation, the mean
+# an IVF index (q41/q53 consume exactly such centroids). Assignment is
+# nearest_centroid: a broadcast nested-loop join and one argmin
+# SortAggregate (one exchange on vec_id, map-side partials); the
+# centroid update is ONE shuffle on (cluster, dim) with map-side partial
+# aggregation, the mean
 # computed as exact-int64 sum of quantized components / (scale · n) so
 # the value is engine-deterministic (a float avg's accumulation order
 # differs between engines — the same 1-ulp class q41 hit at sf0.1).
@@ -319,57 +373,43 @@ ORDER BY e.vec_id, e.dim
 _Q83_SEED_MOD = 50  # seeds: vec_id 0, 50, …, 450 → k = 10
 
 
-def q83_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import QUANT_SCALE, _qint, qround, sq_l2_q
-
-    emb = load(spark, sf_dir, "embeddings")
-    seeds = emb.filter(F.col("vec_id") % _Q83_SEED_MOD == 0).select(
-        F.col("vec_id").alias("seed_id"), _qint("embedding").alias("seed_qv")
-    )
-    # corpus quantization staged once per row (the assignment scores
-    # k seeds per vector); seed quantizations ride the tiny broadcast
-    corpus = emb.filter(F.col("vec_id") % _Q83_SEED_MOD != 0).withColumn(
-        "_qv", _qint("embedding")
-    )
-    # Sort-free argmin: min_by on the composite (d, seed_id) reproduces
-    # the (distance asc, seed_id asc) tiebreak as a primitive-typed
-    # HashAggregate (d is an exact int64, no rounding epsilon); the
-    # embedding rejoins afterwards rather than riding the agg buffer
-    # (array-typed any_value would demote the agg to SortAggregate)
-    seed_map = (
-        corpus.crossJoin(F.broadcast(seeds))
-        .select(
-            "vec_id",
-            "seed_id",
-            sq_l2_q("_qv", "seed_qv").alias("d"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.min_by(F.col("seed_id"), F.struct(F.col("d"), F.col("seed_id"))).alias(
-                "seed_id"
-            )
-        )
-    )
-    assigned = corpus.select("vec_id", "embedding").join(seed_map, "vec_id")
-    qval = F.floor(F.col("val").cast("double") * QUANT_SCALE + F.lit(0.5)).cast("long")
+def _kmeans_step(corpus: DataFrame, cents: DataFrame) -> DataFrame:
+    """One Lloyd iteration, shared by q83 and q127: assign every
+    (vec_id, _qv) corpus row to its nearest (cluster_id, cqv) centroid,
+    then emit (cluster_id, dim, centroid_val, n_members) — each member
+    mean the exact int64 component sum / (QUANT_SCALE · n), rounded at
+    4dp."""
+    assign = nearest_centroid(corpus, cents, ["vec_id"], "_qv", "cqv", "cluster_id")
     return (
-        assigned.select(
-            F.col("seed_id").alias("cluster_id"),
-            F.posexplode("embedding").alias("dim", "val"),
-        )
+        corpus.join(assign, "vec_id")
+        .selectExpr("cluster_id", "posexplode(_qv) AS (dim, q)")
         .groupBy("cluster_id", "dim")
-        .agg(F.sum(qval).alias("_qs"), F.count("*").alias("n_members"))
-        .select(
+        .agg(F.expr("sum(q) AS _qs"), F.expr("count(*) AS n_members"))
+        .selectExpr(
             "cluster_id",
             "dim",
-            qround(
-                F.col("_qs").cast("double") / (F.lit(float(QUANT_SCALE)) * F.col("n_members")),
-                4,
-            ).alias("centroid_val"),
+            f"{_round_sql('CAST(_qs AS DOUBLE) / (1000000.0D * n_members)', 4)} AS centroid_val",
             "n_members",
         )
-        .orderBy("cluster_id", "dim")
     )
+
+
+def _kmeans_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """q83/q127 inputs: the (cluster_id, cqv) seeds (every
+    _Q83_SEED_MOD-th vector) and the (vec_id, _qv) corpus of the rest,
+    each quantized once per row."""
+    emb = load(spark, sf_dir, "embeddings")
+    q = _qint_sql("embedding")
+    seeds = emb.filter(f"vec_id % {_Q83_SEED_MOD} = 0").selectExpr(
+        "vec_id AS cluster_id", f"{q} AS cqv"
+    )
+    corpus = emb.filter(f"vec_id % {_Q83_SEED_MOD} != 0").selectExpr("vec_id", f"{q} AS _qv")
+    return seeds, corpus
+
+
+def q83_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
+    seeds, corpus = _kmeans_frames(spark, sf_dir)
+    return _kmeans_step(corpus, seeds).orderBy("cluster_id", "dim")
 
 
 # exact int64 squared distance on quantized components — ranks without
@@ -559,20 +599,13 @@ _PI_VQ = [
 
 
 def q107_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import QUANT_SCALE, _qint, qround
+    from ..operators.similarity import QUANT_SCALE, qround
 
     emb = load(spark, sf_dir, "embeddings")
-    vq = F.array(*[F.lit(v).cast("long") for v in _PI_VQ])
+    vq = "CAST(array(" + ", ".join(str(v) for v in _PI_VQ) + ") AS ARRAY<BIGINT>)"
     scored = (
-        emb.select(_qint("embedding").alias("xq"))
-        .withColumn(
-            "s",
-            F.aggregate(
-                F.zip_with(F.col("xq"), vq, lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
+        emb.selectExpr(f"{_qint_sql('embedding')} AS xq")
+        .selectExpr("xq", f"{_idot_sql('xq', vq)} AS s")
         .withColumn(
             "s2",
             F.expr(
@@ -653,77 +686,27 @@ ORDER BY k
 # the classic way an iterative algorithm drifts apart after step 1.
 # Empty clusters simply vanish from the centroid table (mirrored).
 #
-# Shape at scale per iteration (same as q83): broadcast-map assignment
-# (no shuffle), one (cluster, dim) map-side-combinable shuffle for the
+# Shape at scale per iteration (same as q83, one shared _kmeans_step):
+# the nearest_centroid assignment (one vec_id exchange), one
+# (cluster, dim) map-side-combinable shuffle for the
 # update, and a k·dim-row centroid table rebuilt into broadcastable
 # arrays. A full convergence loop is this plan in a driver loop with
 # localCheckpoint every few rounds (the q57 CC policy); each iteration
 # stays oracle-checkable because the state handed forward is exact.
 # ---------------------------------------------------------------------------
 def q127_kmeans_two_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import QUANT_SCALE, _qint, qround, sq_l2_q
-
-    emb = load(spark, sf_dir, "embeddings")
-    seeds = emb.filter(F.col("vec_id") % _Q83_SEED_MOD == 0).select(
-        F.col("vec_id").alias("cluster_id"), _qint("embedding").alias("cqv")
-    )
-    corpus = emb.filter(F.col("vec_id") % _Q83_SEED_MOD != 0).withColumn(
-        "_qv", _qint("embedding")
-    )
-
-    def assign(centroids: DataFrame) -> DataFrame:
-        return (
-            corpus.crossJoin(F.broadcast(centroids))
-            .select(
-                "vec_id",
-                "cluster_id",
-                sq_l2_q("_qv", "cqv").alias("d"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.min_by(
-                    F.col("cluster_id"), F.struct(F.col("d"), F.col("cluster_id"))
-                ).alias("cluster_id")
-            )
-        )
-
-    qval = F.floor(F.col("val").cast("double") * QUANT_SCALE + F.lit(0.5)).cast("long")
-
-    def update(assignment: DataFrame) -> DataFrame:
-        return (
-            corpus.select("vec_id", "embedding")
-            .join(assignment, "vec_id")
-            .select("cluster_id", F.posexplode("embedding").alias("dim", "val"))
-            .groupBy("cluster_id", "dim")
-            .agg(F.sum(qval).alias("_qs"), F.count("*").alias("n_members"))
-            .select(
-                "cluster_id",
-                "dim",
-                qround(
-                    F.col("_qs").cast("double")
-                    / (F.lit(float(QUANT_SCALE)) * F.col("n_members")),
-                    4,
-                ).alias("centroid_val"),
-                "n_members",
-            )
-        )
-
-    c1 = update(assign(seeds))
+    seeds, corpus = _kmeans_frames(spark, sf_dir)
+    c1 = _kmeans_step(corpus, seeds)
     # centroid round-trip: 4dp-rounded means re-quantized to exact int64
     # arrays (ordered by dim) — iteration 2 ranks on exact integers again
-    c1_arr = (
-        c1.select(
-            "cluster_id",
-            "dim",
-            F.floor(F.col("centroid_val") * QUANT_SCALE + F.lit(0.5))
-            .cast("long")
-            .alias("qc"),
+    c1_arr = c1.groupBy("cluster_id").agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(dim, "
+            "CAST(floor(centroid_val * 1000000 + 0.5D) AS BIGINT) AS qc))), "
+            "x -> x.qc) AS cqv"
         )
-        .groupBy("cluster_id")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "qc"))).alias("_s"))
-        .select("cluster_id", F.expr("transform(_s, x -> x.qc)").alias("cqv"))
     )
-    return update(assign(c1_arr)).orderBy("cluster_id", "dim")
+    return _kmeans_step(corpus, c1_arr).orderBy("cluster_id", "dim")
 
 
 _SQD2_SQL = (
@@ -943,61 +926,38 @@ _Q186_SUB = 16
 _Q186_SEED_MOD = 64
 
 
-def q186_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint, sq_l2_q
+def _subvectors_sql(vec: str, name: str) -> str:
+    """Generator text splitting ``vec`` into its _Q186_M PQ subspaces:
+    one (m, ``name``) row per subspace, each a _Q186_SUB-dim slice."""
+    subs = ", ".join(
+        f"struct({m} AS m, slice({vec}, {m * _Q186_SUB + 1}, {_Q186_SUB}) AS {name})"
+        for m in range(_Q186_M)
+    )
+    return f"inline(array({subs}))"
 
-    emb = load(spark, sf_dir, "embeddings")
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                _qint(f"slice(embedding, {m * _Q186_SUB + 1}, {_Q186_SUB})").alias("qv"),
-            )
-            for m in range(_Q186_M)
-        ]
+
+def q186_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    qe = load(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", f"{_qint_sql('embedding')} AS qv"
     )
-    seeds = (
-        emb.filter(F.col("vec_id") % _Q186_SEED_MOD == 0)
-        .select(F.col("vec_id").alias("code"), F.explode(sub_structs).alias("s"))
-        .select("code", F.col("s.m").alias("m"), F.col("s.qv").alias("seed_qv"))
+    seeds = qe.filter(f"vec_id % {_Q186_SEED_MOD} = 0").selectExpr(
+        "vec_id AS code", _subvectors_sql("qv", "seed_qv")
     )
-    corpus = (
-        emb.filter(F.col("vec_id") % _Q186_SEED_MOD != 0)
-        .select("vec_id", F.explode(sub_structs).alias("s"))
-        .select("vec_id", F.col("s.m").alias("m"), F.col("s.qv").alias("qv"))
+    corpus = qe.filter(f"vec_id % {_Q186_SEED_MOD} != 0").selectExpr(
+        "vec_id", _subvectors_sql("qv", "sv")
     )
-    best = (
-        corpus.join(F.broadcast(seeds), "m")
-        .select(
-            "vec_id",
-            "m",
-            F.struct(
-                sq_l2_q("qv", "seed_qv").alias("d"),
-                F.col("code").alias("code"),
-            ).alias("ds"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min("ds").alias("b"))
-    )
+    best = nearest_centroid(corpus, seeds, ["vec_id", "m"], "sv", "seed_qv", "code", on=["m"])
     scale2 = 1_000_000_000_000.0  # QUANT_SCALE^2
     return (
-        best.groupBy(F.col("m").alias("subspace"), F.col("b.code").alias("code"))
-        .agg(
-            F.count("*").cast("long").alias("n_members"),
-            F.sum("b.d").alias("_sqerr"),
-        )
-        .select(
-            F.col("subspace").cast("int").alias("subspace"),
-            F.col("code").cast("long").alias("code"),
+        best.groupBy("m", "code")
+        .agg(F.expr("CAST(count(*) AS BIGINT) AS n_members"), F.expr("sum(d) AS _sqerr"))
+        .selectExpr(
+            "CAST(m AS INT) AS subspace",
+            "CAST(code AS BIGINT) AS code",
             "n_members",
-            F.expr(
-                f"floor(CAST(_sqerr AS DOUBLE) / ({scale2!r} * n_members)"
-                " * 10000 + 0.5) / 10000"
-            ).alias("avg_sqerr"),
-            F.expr(
-                f"floor(CAST(_sqerr AS DOUBLE) / {scale2!r} * 10000 + 0.5)"
-                " / 10000"
-            ).alias("total_sqerr"),
+            f"floor(CAST(_sqerr AS DOUBLE) / ({scale2!r} * n_members) * 10000 + 0.5) / 10000"
+            " AS avg_sqerr",
+            f"floor(CAST(_sqerr AS DOUBLE) / {scale2!r} * 10000 + 0.5) / 10000 AS total_sqerr",
         )
         .orderBy("subspace", "code")
     )
@@ -1062,10 +1022,8 @@ _Q231_LEVELS = 255
 
 
 def q231_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint, sq_l2_q
-
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv")).localCheckpoint(
+    qe = emb.selectExpr("vec_id", f"{_qint_sql('embedding')} AS qv").localCheckpoint(
         eager=False
     )  # feeds stats + coding + exact baseline
     dims = qe.select(
@@ -1100,40 +1058,28 @@ def q231_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = coded.filter(F.col("vec_id") != _Q231_QID)
     top_sq = (
         corpus.crossJoin(F.broadcast(qrow))
-        .select(
+        .selectExpr(
             "vec_id",
-            sq_l2_q("cv", "qcv").alias("cdist"),
-            sq_l2_q("qv", "quvec").alias("edist"),
+            f"{_sq_l2_q_sql('cv', 'qcv')} AS cdist",
+            f"{_sq_l2_q_sql('qv', 'quvec')} AS edist",
         )
         .orderBy("cdist", "vec_id")
         .limit(_Q231_K)
         .localCheckpoint(eager=False)
     )
-    exact_topk = (
-        corpus.crossJoin(F.broadcast(qrow))
-        .select("vec_id", sq_l2_q("qv", "quvec").alias("ed"))
-        .orderBy("ed", "vec_id")
-        .limit(_Q231_K)
-        .select("vec_id", F.lit(1).alias("in_exact"))
+    exact = corpus.crossJoin(F.broadcast(qrow)).selectExpr(
+        "vec_id", f"{_sq_l2_q_sql('qv', 'quvec')} AS ed"
     )
-    hits = top_sq.join(exact_topk, "vec_id", "left")
-    recall = hits.agg(
-        (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q231_K))).alias(
-            "recall_at_k"
-        )
-    )
-    scale2 = 1_000_000_000_000.0
-    r4 = lambda c: F.floor(c / F.lit(scale2) * 10000 + F.lit(0.5)) / F.lit(
-        10000.0
-    )
+    hits = top_sq.join(_exact_mark(exact, "ed", _Q231_K), "vec_id", "left")
+    recall = hits.selectExpr(f"{_recall_sql(_Q231_K)} AS recall_at_k")
     return (
         hits.crossJoin(F.broadcast(recall))
-        .select(
+        .selectExpr(
             "vec_id",
-            F.col("cdist").cast("long").alias("code_sqdist"),
-            r4(F.col("edist").cast("double")).alias("exact_sqdist"),
-            F.coalesce("in_exact", F.lit(0)).cast("int").alias("in_exact_topk"),
-            F.round("recall_at_k", 4).alias("recall_at_k"),
+            "CAST(cdist AS BIGINT) AS code_sqdist",
+            f"{_sqdist4_sql('edist')} AS exact_sqdist",
+            "CAST(coalesce(in_exact, 0) AS INT) AS in_exact_topk",
+            "round(recall_at_k, 4) AS recall_at_k",
         )
         .orderBy("vec_id")
     )
@@ -1357,117 +1303,67 @@ _Q199_NCELL = 8
 
 
 def q199_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint, sq_l2_q
-
-    emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    cents = qe.filter(F.col("vec_id") < _Q199_NCELL).select(
-        F.col("vec_id").alias("cell"), F.col("qv").alias("cvec")
+    qe = load(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", f"{_qint_sql('embedding')} AS qv"
     )
-    corpus = qe.filter(F.col("vec_id") >= _Q199_NCELL).localCheckpoint(
+    cents = qe.filter(f"vec_id < {_Q199_NCELL}").selectExpr("vec_id AS cell", "qv AS cvec")
+    corpus = qe.filter(f"vec_id >= {_Q199_NCELL}").localCheckpoint(
         eager=False
     )  # feeds assignment, codes, exact baseline
-    query = qe.filter(F.col("vec_id") == _Q199_QID).select(
-        F.col("qv").alias("quvec")
-    )
+    query = qe.filter(f"vec_id = {_Q199_QID}").selectExpr("qv AS quvec")
 
     # IVF: assign every corpus vector to its nearest cell (exact argmin)
-    assign = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("qv", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cell").alias("cell"))
+    assign = nearest_centroid(corpus, cents, ["vec_id"], "qv", "cvec", "cell").select(
+        "vec_id", "cell"
     )
     probed = (
         cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
+        .selectExpr("cell", f"{_sq_l2_q_sql('cvec', 'quvec')} AS d")
         .orderBy("d", "cell")
         .limit(_Q199_NPROBE)
         .select("cell")
     )
 
     # PQ: M subspace codebooks from deterministic seeds; corpus → codes
-    sub = lambda c, m: F.slice(c, m * _Q186_SUB + 1, _Q186_SUB)
-    subrows = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(m).alias("m"), sub(F.col("qv"), m).alias("sv"))
-                for m in range(_Q186_M)
-            ]
-        )
-    ).alias("s")
-    seeds = (
-        qe.filter(F.col("vec_id") % _Q186_SEED_MOD == 0)
-        .select(F.col("vec_id").alias("code"), subrows)
-        .select("code", "s.m", F.col("s.sv").alias("seed_sv"))
+    seeds = qe.filter(f"vec_id % {_Q186_SEED_MOD} = 0").selectExpr(
+        "vec_id AS code", _subvectors_sql("qv", "seed_sv")
     )
-    codes = (
-        corpus.select("vec_id", subrows)
-        .select("vec_id", "s.m", F.col("s.sv").alias("sv"))
-        .join(F.broadcast(seeds), "m")
-        .select(
-            "vec_id",
-            "m",
-            F.struct(
-                sq_l2_q("sv", "seed_sv").alias("d"),
-                F.col("code").alias("code"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", "m", F.col("b.code").alias("code"))
-    )
+    codes = nearest_centroid(
+        corpus.selectExpr("vec_id", _subvectors_sql("qv", "sv")),
+        seeds, ["vec_id", "m"], "sv", "seed_sv", "code", on=["m"],
+    ).select("vec_id", "m", "code")
 
     # ADC lookup table: query subvector vs every codeword — M·k rows
     lut = (
-        qe.filter(F.col("vec_id") == _Q199_QID)
-        .select(subrows)
-        .select("s.m", F.col("s.sv").alias("q_sv"))
+        query.selectExpr(_subvectors_sql("quvec", "q_sv"))
         .join(seeds, "m")
-        .select("m", "code", sq_l2_q("q_sv", "seed_sv").alias("d_mc"))
+        .selectExpr("m", "code", f"{_sq_l2_q_sql('q_sv', 'seed_sv')} AS d_mc")
     )
     adc = (
         codes.join(assign, "vec_id")
         .join(F.broadcast(probed), "cell", "left_semi")
         .join(F.broadcast(lut), ["m", "code"])
         .groupBy("vec_id")
-        .agg(F.sum("d_mc").alias("adc_d"))
+        .agg(F.expr("sum(d_mc) AS adc_d"))
         .orderBy("adc_d", "vec_id")
         .limit(_Q199_K)
     )
-    exact = (
-        corpus.crossJoin(F.broadcast(query))
-        .select("vec_id", sq_l2_q("qv", "quvec").alias("ex_d"))
+    exact = corpus.crossJoin(F.broadcast(query)).selectExpr(
+        "vec_id", f"{_sq_l2_q_sql('qv', 'quvec')} AS ex_d"
     )
-    exact_topk = exact.orderBy("ex_d", "vec_id").limit(_Q199_K)
-    hits = adc.join(
-        exact_topk.select("vec_id", F.lit(1).alias("in_exact")), "vec_id", "left"
-    )
-    recall = hits.agg(
-        (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q199_K))).alias(
-            "recall_at_k"
-        )
-    )
-    scale2 = 1_000_000_000_000.0  # QUANT_SCALE^2
-    r4 = lambda c: F.floor(c / F.lit(scale2) * 10000 + F.lit(0.5)) / F.lit(10000.0)
+    hits = adc.join(_exact_mark(exact, "ex_d", _Q199_K), "vec_id", "left")
+    recall = hits.selectExpr(f"{_recall_sql(_Q199_K)} AS recall_at_k")
     return (
-        hits.join(exact.select("vec_id", "ex_d"), "vec_id")
+        hits.join(exact, "vec_id")
         .join(assign, "vec_id")
         .crossJoin(F.broadcast(recall))
-        .select(
+        .selectExpr(
             "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            r4(F.col("adc_d").cast("double")).alias("adc_sqdist"),
-            r4(F.col("ex_d").cast("double")).alias("exact_sqdist"),
-            F.coalesce("in_exact", F.lit(0)).cast("int").alias("in_exact_topk"),
-            F.round("recall_at_k", 4).alias("recall_at_k"),
+            "CAST(cell AS BIGINT) AS cell",
+            f"{_sqdist4_sql('adc_d')} AS adc_sqdist",
+            f"{_sqdist4_sql('ex_d')} AS exact_sqdist",
+            "CAST(coalesce(in_exact, 0) AS INT) AS in_exact_topk",
+            "round(recall_at_k, 4) AS recall_at_k",
         )
         .orderBy("vec_id")
     )
@@ -1635,162 +1531,84 @@ corpus AS (
 
 
 def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint, sq_l2_q
-
-    M, SUB = _Q186_M, _Q186_SUB
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    cents = qe.filter(F.col("vec_id") < _Q268_NCELL).select(
-        F.col("vec_id").alias("cell"),
-        F.transform("qv", lambda x: x * _Q268_ASCALE).alias("cvec"),
-    )
-    corpus = (
-        qe.filter(F.col("vec_id") >= _Q268_NCELL)
-        .withColumn("_ac", F.col("vec_id") % _Q268_NCELL)
-        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
-        .select("vec_id", F.zip_with("cvec", "qv", lambda a, b: a + b).alias("qv"))
-        .localCheckpoint(eager=False)  # feeds assignment, coding, exact
-    )
-    query = corpus.filter(F.col("vec_id") == _Q268_QID).select(
-        F.col("qv").alias("quvec")
-    )
-    assign = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("qv", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cell").alias("cell"))
+    cents = anchored_centroids(emb, _Q268_NCELL, _Q268_ASCALE)
+    corpus = anchored_corpus(emb, cents, _Q268_NCELL).localCheckpoint(
+        eager=False
+    )  # feeds assignment, coding, exact
+    query = corpus.filter(f"vec_id = {_Q268_QID}").selectExpr("qv AS quvec")
+    assign = nearest_centroid(corpus, cents, ["vec_id"], "qv", "cvec", "cell").select(
+        "vec_id", "cell"
     )
     withcell = (
         corpus.join(assign, "vec_id")
         .join(F.broadcast(cents), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            "qv",
-            F.zip_with("qv", "cvec", lambda a, b: a - b).alias("rv"),
-        )
+        .selectExpr("vec_id", "cell", "qv", "zip_with(qv, cvec, (a, b) -> a - b) AS rv")
         .localCheckpoint(eager=False)  # feeds both coding spaces
     )
     probed = (
         cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
+        .selectExpr("cell", f"{_sq_l2_q_sql('cvec', 'quvec')} AS d")
         .orderBy("d", "cell")
         .limit(_Q268_NPROBE)
         .select("cell")
         .localCheckpoint(eager=False)  # feeds LUT + both ADC semis
     )
 
-    def subframe(col, space):
-        return withcell.select(
-            "vec_id",
-            F.lit(space).alias("sp"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.slice(col, m * SUB + 1, SUB).alias("sv"),
-                        )
-                        for m in range(M)
-                    ]
-                )
-            ).alias("s"),
-        ).select("vec_id", "sp", "s.m", F.col("s.sv").alias("sv"))
-
     # Both coding spaces ride ONE tagged frame (sp ∈ {raw, res}): the K
     # Lloyd iterations then cost one pass over 2x the rows instead of
     # two separate 3-pass chains — identical arithmetic, half the jobs
     # (measured 9.6s -> the chain is per-iteration fixed-cost-bound).
     subs = (
-        subframe(F.col("qv"), "raw")
-        .unionByName(subframe(F.col("rv"), "res"))
+        withcell.selectExpr("vec_id", "'raw' AS sp", _subvectors_sql("qv", "sv"))
+        .unionByName(withcell.selectExpr("vec_id", "'res' AS sp", _subvectors_sql("rv", "sv")))
         .localCheckpoint(eager=False)  # 3 passes read it
     )
-    cb = subs.filter(F.col("vec_id") % _Q186_SEED_MOD == 0).select(
-        "sp", "m", F.col("vec_id").alias("code"), F.col("sv").alias("cw")
+    cb = subs.filter(f"vec_id % {_Q186_SEED_MOD} = 0").selectExpr(
+        "sp", "m", "vec_id AS code", "sv AS cw"
     )
 
     def assign_codes(cb_df):
-        return (
-            subs.join(F.broadcast(cb_df), ["sp", "m"])
-            .select(
-                "vec_id",
-                "sp",
-                "m",
-                F.struct(
-                    sq_l2_q("sv", "cw").alias("d"),
-                    F.col("code").alias("code"),
-                ).alias("dc"),
-            )
-            .groupBy("vec_id", "sp", "m")
-            .agg(F.min("dc").alias("b"))
-            .select("vec_id", "sp", "m", F.col("b.code").alias("code"))
-        )
+        return nearest_centroid(
+            subs, cb_df, ["vec_id", "sp", "m"], "sv", "cw", "code", on=["sp", "m"]
+        ).select("vec_id", "sp", "m", "code")
 
     for _ in range(_Q268_ITERS):
-        asg = assign_codes(cb)
         upd = (
-            subs.join(asg, ["vec_id", "sp", "m"])
-            .select("sp", "m", "code", F.posexplode("sv").alias("dim", "val"))
+            subs.join(assign_codes(cb), ["vec_id", "sp", "m"])
+            .selectExpr("sp", "m", "code", "posexplode(sv) AS (dim, val)")
             .groupBy("sp", "m", "code", "dim")
             .agg(
-                F.floor(
-                    F.sum("val").cast("double") / F.count("*") + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("cwv")
+                F.expr("CAST(floor(CAST(sum(val) AS DOUBLE) / count(*) + 0.5D) AS BIGINT) AS cwv")
             )
             .groupBy("sp", "m", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cwv"))),
-                    lambda s: s["cwv"],
-                ).alias("cw")
-            )
+            .agg(F.expr("transform(array_sort(collect_list(struct(dim, cwv))), s -> s.cwv) AS cw"))
         )
         # empty cluster keeps its previous codeword (mirrors the
         # oracle's NOT EXISTS union)
         kept = cb.join(upd.select("sp", "m", "code"), ["sp", "m", "code"], "left_anti")
         cb = upd.unionByName(kept).localCheckpoint(eager=False)
     codes_all = assign_codes(cb).localCheckpoint(eager=False)
-    codes_raw = codes_all.filter(F.col("sp") == "raw").drop("sp")
-    codes_res = codes_all.filter(F.col("sp") == "res").drop("sp")
-    cb_raw = cb.filter(F.col("sp") == "raw").drop("sp")
-    cb_res = cb.filter(F.col("sp") == "res").drop("sp")
+    codes_raw = codes_all.filter("sp = 'raw'").drop("sp")
+    codes_res = codes_all.filter("sp = 'res'").drop("sp")
+    cb_raw = cb.filter("sp = 'raw'").drop("sp")
+    cb_res = cb.filter("sp = 'res'").drop("sp")
 
-    def qsubframe(src, vec, extra):
-        return src.select(
-            *extra,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.slice(vec, m * SUB + 1, SUB).alias("qsv"),
-                        )
-                        for m in range(M)
-                    ]
-                )
-            ).alias("s"),
-        ).select(*extra, "s.m", F.col("s.qsv").alias("qsv"))
-
-    lut_raw = qsubframe(query, F.col("quvec"), []).join(cb_raw, "m").select(
-        "m", "code", sq_l2_q("qsv", "cw").alias("d_mc")
+    d_mc = f"{_sq_l2_q_sql('qsv', 'cw')} AS d_mc"
+    lut_raw = (
+        query.selectExpr(_subvectors_sql("quvec", "qsv"))
+        .join(cb_raw, "m")
+        .selectExpr("m", "code", d_mc)
     )
     qres = (
         probed.join(F.broadcast(cents), "cell")
         .crossJoin(F.broadcast(query))
-        .select("cell", F.zip_with("quvec", "cvec", lambda a, b: a - b).alias("qrv"))
+        .selectExpr("cell", "zip_with(quvec, cvec, (a, b) -> a - b) AS qrv")
     )
-    lut_res = qsubframe(qres, F.col("qrv"), ["cell"]).join(cb_res, "m").select(
-        "cell", "m", "code", sq_l2_q("qsv", "cw").alias("d_mc")
+    lut_res = (
+        qres.selectExpr("cell", _subvectors_sql("qrv", "qsv"))
+        .join(cb_res, "m")
+        .selectExpr("cell", "m", "code", d_mc)
     )
 
     def adc_topk(codes, lut, on):
@@ -1799,47 +1617,35 @@ def q268_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(probed), "cell", "left_semi")
             .join(F.broadcast(lut), on)
             .groupBy("vec_id")
-            .agg(F.sum("d_mc").alias("adc_d"))
+            .agg(F.expr("sum(d_mc) AS adc_d"))
             .orderBy("adc_d", "vec_id")
             .limit(_Q268_K)
         )
 
     adc_res = adc_topk(codes_res, lut_res, ["cell", "m", "code"])
     adc_raw = adc_topk(codes_raw, lut_raw, ["m", "code"])
-    exact = corpus.crossJoin(F.broadcast(query)).select(
-        "vec_id", sq_l2_q("qv", "quvec").alias("ex_d")
+    exact = corpus.crossJoin(F.broadcast(query)).selectExpr(
+        "vec_id", f"{_sq_l2_q_sql('qv', 'quvec')} AS ex_d"
     )
-    exact_topk = exact.orderBy("ex_d", "vec_id").limit(_Q268_K)
-    mark = exact_topk.select("vec_id", F.lit(1).alias("in_exact"))
+    mark = _exact_mark(exact, "ex_d", _Q268_K)
     hits = adc_res.join(mark, "vec_id", "left")
-    recall = hits.agg(
-        (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q268_K))).alias(
-            "recall_at_k"
-        )
+    recall = hits.selectExpr(f"{_recall_sql(_Q268_K)} AS recall_at_k")
+    recall_raw = adc_raw.join(mark, "vec_id", "left").selectExpr(
+        f"{_recall_sql(_Q268_K)} AS recall_raw_at_k"
     )
-    recall_raw = (
-        adc_raw.join(mark, "vec_id", "left")
-        .agg(
-            (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q268_K))).alias(
-                "recall_raw_at_k"
-            )
-        )
-    )
-    scale2 = 1_000_000_000_000.0  # QUANT_SCALE^2
-    r4 = lambda c: F.floor(c / F.lit(scale2) * 10000 + F.lit(0.5)) / F.lit(10000.0)
     return (
         hits.join(exact, "vec_id")
         .join(assign, "vec_id")
         .crossJoin(F.broadcast(recall))
         .crossJoin(F.broadcast(recall_raw))
-        .select(
+        .selectExpr(
             "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            r4(F.col("adc_d").cast("double")).alias("adc_sqdist"),
-            r4(F.col("ex_d").cast("double")).alias("exact_sqdist"),
-            F.coalesce("in_exact", F.lit(0)).cast("int").alias("in_exact_topk"),
-            F.round("recall_at_k", 4).alias("recall_at_k"),
-            F.round("recall_raw_at_k", 4).alias("recall_raw_at_k"),
+            "CAST(cell AS BIGINT) AS cell",
+            f"{_sqdist4_sql('adc_d')} AS adc_sqdist",
+            f"{_sqdist4_sql('ex_d')} AS exact_sqdist",
+            "CAST(coalesce(in_exact, 0) AS INT) AS in_exact_topk",
+            "round(recall_at_k, 4) AS recall_at_k",
+            "round(recall_raw_at_k, 4) AS recall_raw_at_k",
         )
         .orderBy("vec_id")
     )
@@ -2067,31 +1873,17 @@ _Q280_SHIFT_DIV = 8
 
 
 def q280_projected_w1_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint
-
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    u = qe.filter(F.col("vec_id") == 0).select(F.col("qv").alias("uvec"))
-    dot = lambda a, b: F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    qe = emb.selectExpr("vec_id", f"{_qint_sql('embedding')} AS qv")
+    u = qe.filter("vec_id = 0").selectExpr("qv AS uvec")
     proj = (
         qe.crossJoin(F.broadcast(u))
-        .select(
-            (F.col("vec_id") % 2).alias("grp"),
-            dot(F.col("qv"), F.col("uvec")).alias("s"),
-        )
+        .selectExpr("vec_id % 2 AS grp", f"{_idot_sql('qv', 'uvec')} AS s")
         .localCheckpoint(eager=False)  # both scenarios read it
     )
-    sh = u.select(
-        F.floor(
-            dot(F.col("uvec"), F.col("uvec")).cast("double")
-            / F.lit(float(_Q280_SHIFT_DIV))
-        )
-        .cast("long")
-        .alias("shv")
+    sh = u.selectExpr(
+        f"CAST(floor(CAST({_idot_sql('uvec', 'uvec')} AS DOUBLE) "
+        f"/ {float(_Q280_SHIFT_DIV)!r}D) AS BIGINT) AS shv"
     )
     bk = lambda c: F.floor(c.cast("double") / F.lit(float(_Q280_BW))).cast("long")
     cells = (
@@ -3183,135 +2975,108 @@ _Q281_ASCALE = 16
 _Q281_BUDGET_DEN = 4  # probe until ≥ floor(n_corpus/4)+1 rows covered
 
 
-def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _qint, sq_l2_q
-
+def _anchored_ivf(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(cents, corpus, assign, sizes) of the multiprobe queries (q281,
+    q285, q286): the anchored fixture at (_Q281_NCELL, _Q281_ASCALE),
+    every corpus vector's nearest cell and each cell's postings size.
+    The corpus and the assignment are pinned lazily: each is read by
+    several scans."""
     emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
-        F.col("vec_id").alias("cell"),
-        F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
-    )
-    corpus = (
-        qe.filter(F.col("vec_id") >= _Q281_NCELL)
-        .withColumn("_ac", F.col("vec_id") % _Q281_NCELL)
-        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
-        .select("vec_id", F.zip_with("cvec", "qv", lambda a, b: a + b).alias("qv"))
-        .localCheckpoint(eager=False)  # assignment + search + exact read it
-    )
-    query = corpus.filter(F.col("vec_id") == _Q281_QID).select(
-        F.col("qv").alias("quvec")
-    )
+    cents = anchored_centroids(emb, _Q281_NCELL, _Q281_ASCALE)
+    corpus = anchored_corpus(emb, cents, _Q281_NCELL).localCheckpoint(eager=False)
     assign = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("qv", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cell").alias("cell"))
-        .localCheckpoint(eager=False)  # sizes + both semi-joins read it
+        nearest_centroid(corpus, cents, ["vec_id"], "qv", "cvec", "cell")
+        .select("vec_id", "cell")
+        .localCheckpoint(eager=False)
     )
-    sizes = assign.groupBy("cell").agg(F.count("*").cast("long").alias("sz"))
-    bud = corpus.agg(
-        (
-            F.floor(
-                F.count("*").cast("double") / F.lit(float(_Q281_BUDGET_DEN))
-            ).cast("long")
-            + F.lit(1).cast("long")
-        ).alias("bud")
-    )
+    sizes = assign.groupBy("cell").agg(F.expr("CAST(count(*) AS BIGINT) AS sz"))
+    return cents, corpus, assign, sizes
+
+
+def _budget_sql(n: str, den: int) -> str:
+    """The scan budget in postings rows: floor(n / den) + 1."""
+    return f"CAST(floor(CAST({n} AS DOUBLE) / {float(den)!r}D) AS BIGINT) + 1L"
+
+
+def _probe_order(
+    cents: DataFrame, queries: DataFrame, sizes: DataFrame, qkey: tuple[str, ...] = ()
+) -> DataFrame:
+    """The budgeted multi-probe order, per ``qkey`` query when given:
+    (*qkey, cell, d, sz, before) — every cell's exact distance ``d`` to
+    the query's ``quvec``, its postings size ``sz``, and ``before``, the
+    postings rows of the cells strictly nearer under the (d, cell) total
+    order. A budget probes exactly the cells with ``before < budget``
+    (the nearest cell always). ``before`` is an exclusive-prefix
+    dominance self-join on the ≤NCELL-row-per-query frame, never a
+    window."""
     cd = (
-        cents.crossJoin(F.broadcast(query))
-        .select(
-            "cell", sq_l2_q("cvec", "quvec").alias("d")
-        )
+        cents.crossJoin(F.broadcast(queries))
+        .selectExpr(*qkey, "cell", f"{_sq_l2_q_sql('cvec', 'quvec')} AS d")
         .join(sizes, "cell", "left")
-        .select("cell", "d", F.coalesce("sz", F.lit(0).cast("long")).alias("sz"))
+        .selectExpr(*qkey, "cell", "d", "coalesce(sz, 0L) AS sz")
         .localCheckpoint(eager=False)  # dominance self-join reads it twice
     )
-    # exclusive prefix of postings rows in probe order: rows covered by
-    # cells STRICTLY nearer under the (d, cell) total order
-    before = (
-        cd.alias("a")
-        .join(
-            cd.select(
-                F.col("cell").alias("c2"), F.col("d").alias("d2"),
-                F.col("sz").alias("s2"),
-            ),
-            (F.col("d2") < F.col("d"))
-            | ((F.col("d2") == F.col("d")) & (F.col("c2") < F.col("cell"))),
-            "left",
-        )
-        .groupBy("cell", "d", "sz")
-        .agg(F.coalesce(F.sum("s2"), F.lit(0).cast("long")).alias("before"))
+    nearer = cd.selectExpr(*(f"{k} AS _{k}" for k in qkey), "cell AS c2", "d AS d2", "sz AS s2")
+    on = " AND ".join([*(f"_{k} = {k}" for k in qkey), "(d2 < d OR (d2 = d AND c2 < cell))"])
+    return (
+        cd.join(nearer, F.expr(on), "left")
+        .groupBy(*qkey, "cell", "d", "sz")
+        .agg(F.expr("coalesce(sum(s2), 0L) AS before"))
     )
+
+
+def q281_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cents, corpus, assign, sizes = _anchored_ivf(spark, sf_dir)
+    query = corpus.filter(f"vec_id = {_Q281_QID}").selectExpr("qv AS quvec")
+    bud = corpus.selectExpr(f"{_budget_sql('count(*)', _Q281_BUDGET_DEN)} AS bud")
     probed = (
-        before.crossJoin(F.broadcast(bud))
-        .filter(F.col("before") < F.col("bud"))
-        .select("cell", "sz")
-        .localCheckpoint(eager=False)  # stats + semi-join read it
+        _probe_order(cents, query, sizes)
+        .crossJoin(F.broadcast(bud))
+        .filter("before < bud")
+        .select("cell", "d", "sz")
+        .localCheckpoint(eager=False)  # stats, single + semi-join read it
     )
-    pstats = probed.agg(
-        F.count("*").cast("long").alias("n_cells_probed"),
-        F.sum("sz").cast("long").alias("rows_scanned"),
+    pstats = probed.selectExpr(
+        "CAST(count(*) AS BIGINT) AS n_cells_probed", "CAST(sum(sz) AS BIGINT) AS rows_scanned"
     )
-    single = cd.orderBy("d", "cell").limit(1).select("cell")
+    single = probed.orderBy("d", "cell").limit(1)  # the nearest cell is always probed
+    exact = corpus.crossJoin(F.broadcast(query)).selectExpr(
+        "vec_id", f"{_sq_l2_q_sql('qv', 'quvec')} AS d"
+    )
 
     def topk(cells_df):
         return (
             corpus.join(assign, "vec_id")
             .join(F.broadcast(cells_df.select("cell")), "cell", "left_semi")
             .crossJoin(F.broadcast(query))
-            .select(
-                "vec_id", "cell", sq_l2_q("qv", "quvec").alias("d")
-            )
+            .selectExpr("vec_id", "cell", f"{_sq_l2_q_sql('qv', 'quvec')} AS d")
             .orderBy("d", "vec_id")
             .limit(_Q281_K)
         )
 
-    multi = topk(probed)
-    one = topk(single)
-    exact_topk = (
-        corpus.crossJoin(F.broadcast(query))
-        .select("vec_id", sq_l2_q("qv", "quvec").alias("ex_d"))
-        .orderBy("ex_d", "vec_id")
-        .limit(_Q281_K)
-        .localCheckpoint(eager=False)  # both recall joins read it
+    mark = _exact_mark(exact, "d", _Q281_K).localCheckpoint(eager=False)  # 2 recall joins
+    hits = topk(probed).join(mark, "vec_id", "left").localCheckpoint(eager=False)
+    recall = hits.selectExpr(f"{_recall_sql(_Q281_K)} AS recall_at_k")
+    recall_one = topk(single).join(mark, "vec_id", "left").selectExpr(
+        f"{_recall_sql(_Q281_K)} AS recall_single_at_k"
     )
-    mark = exact_topk.select("vec_id", F.lit(1).alias("in_exact"))
-    hits = multi.join(mark, "vec_id", "left").localCheckpoint(eager=False)
-    recall = hits.agg(
-        (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q281_K))).alias(
-            "recall_at_k"
-        )
-    )
-    recall_one = one.join(mark, "vec_id", "left").agg(
-        (F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q281_K))).alias(
-            "recall_single_at_k"
-        )
-    )
-    scale2 = 1_000_000_000_000.0  # QUANT_SCALE^2
-    r4 = lambda c: F.floor(c / F.lit(scale2) * 10000 + F.lit(0.5)) / F.lit(10000.0)
     return (
         hits.crossJoin(F.broadcast(recall))
         .crossJoin(F.broadcast(recall_one))
         .crossJoin(F.broadcast(pstats))
         .crossJoin(F.broadcast(bud))
-        .select(
+        .selectExpr(
             "vec_id",
-            F.col("cell").cast("long").alias("cell"),
-            r4(F.col("d").cast("double")).alias("sqdist"),
-            F.coalesce("in_exact", F.lit(0)).cast("int").alias("in_exact_topk"),
-            F.round("recall_at_k", 4).alias("recall_at_k"),
-            F.round("recall_single_at_k", 4).alias("recall_single_at_k"),
+            "CAST(cell AS BIGINT) AS cell",
+            f"{_sqdist4_sql('d')} AS sqdist",
+            "CAST(coalesce(in_exact, 0) AS INT) AS in_exact_topk",
+            "round(recall_at_k, 4) AS recall_at_k",
+            "round(recall_single_at_k, 4) AS recall_single_at_k",
             "n_cells_probed",
             "rows_scanned",
-            F.col("bud").alias("budget_rows"),
+            "bud AS budget_rows",
         )
         .orderBy("vec_id")
     )
@@ -3447,7 +3212,6 @@ def q282_stream_ann_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time
 
-    from ..operators.similarity import _qint
     from ..streaming.annindex import run_stream_postings
 
     emb = load(spark, sf_dir, "embeddings")
@@ -3456,12 +3220,9 @@ def q282_stream_ann_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(src)
     try:
         # frozen coarse quantizer (the offline "train" half)
-        emb.filter(F.col("vec_id") < _Q282_NCELL).select(
-            F.col("vec_id").alias("cell"),
-            F.transform(
-                _qint("embedding"), lambda x: x * _Q282_ASCALE
-            ).alias("cvec"),
-        ).write.mode("overwrite").parquet(f"{state}/centroids")
+        anchored_centroids(emb, _Q282_NCELL, _Q282_ASCALE).write.mode(
+            "overwrite"
+        ).parquet(f"{state}/centroids")
 
         base_t = time.time()
         for ep in range(_Q282_EPOCHS):
@@ -3591,108 +3352,44 @@ _Q285_DENS = [16, 8, 4, 2]  # budget = floor(n/den) + 1
 def q285_multiprobe_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
-    from ..operators.similarity import _qint, sq_l2_q
-
-    emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
-        F.col("vec_id").alias("cell"),
-        F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
-    )
-    corpus = (
-        qe.filter(F.col("vec_id") >= _Q281_NCELL)
-        .withColumn("_ac", F.col("vec_id") % _Q281_NCELL)
-        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
-        .select("vec_id", F.zip_with("cvec", "qv", lambda a, b: a + b).alias("qv"))
-        .localCheckpoint(eager=False)
-    )
-    query = corpus.filter(F.col("vec_id") == _Q281_QID).select(
-        F.col("qv").alias("quvec")
-    )
-    assign = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("qv", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cell").alias("cell"))
-        .localCheckpoint(eager=False)
-    )
-    sizes = assign.groupBy("cell").agg(F.count("*").cast("long").alias("sz"))
-    nt = corpus.agg(F.count("*").cast("long").alias("nt"))
-    cd = (
-        cents.crossJoin(F.broadcast(query))
-        .select("cell", sq_l2_q("cvec", "quvec").alias("d"))
-        .join(sizes, "cell", "left")
-        .select("cell", "d", F.coalesce("sz", F.lit(0).cast("long")).alias("sz"))
-        .localCheckpoint(eager=False)
-    )
+    cents, corpus, assign, sizes = _anchored_ivf(spark, sf_dir)
+    query = corpus.filter(f"vec_id = {_Q281_QID}").selectExpr("qv AS quvec")
+    nt = corpus.selectExpr("CAST(count(*) AS BIGINT) AS nt")
     before = (
-        cd.join(
-            cd.select(
-                F.col("cell").alias("c2"), F.col("d").alias("d2"),
-                F.col("sz").alias("s2"),
-            ),
-            (F.col("d2") < F.col("d"))
-            | ((F.col("d2") == F.col("d")) & (F.col("c2") < F.col("cell"))),
-            "left",
-        )
-        .groupBy("cell", "d", "sz")
-        .agg(F.coalesce(F.sum("s2"), F.lit(0).cast("long")).alias("before"))
+        _probe_order(cents, query, sizes)
         .crossJoin(F.broadcast(nt))
         .localCheckpoint(eager=False)  # one probe-set filter per budget
     )
     scored = (
         corpus.join(assign, "vec_id")
         .crossJoin(F.broadcast(query))
-        .select("vec_id", "cell", sq_l2_q("qv", "quvec").alias("d"))
+        .selectExpr("vec_id", "cell", f"{_sq_l2_q_sql('qv', 'quvec')} AS d")
         .localCheckpoint(eager=False)  # 4 budget scans + exact read it
     )
-    exact_topk = (
-        scored.select("vec_id", "d")
-        .orderBy("d", "vec_id")
-        .limit(_Q281_K)
-        .select("vec_id", F.lit(1).alias("in_exact"))
-        .localCheckpoint(eager=False)
-    )
+    exact_topk = _exact_mark(scored, "d", _Q281_K).localCheckpoint(eager=False)
 
     def curve_point(den: int):
-        bud = F.floor(F.col("nt").cast("double") / F.lit(float(den))).cast(
-            "long"
-        ) + F.lit(1).cast("long")
-        probed = before.filter(F.col("before") < bud).select("cell", "sz")
-        pstats = probed.agg(
-            F.count("*").cast("long").alias("n_cells_probed"),
-            F.sum("sz").cast("long").alias("rows_scanned"),
+        bud = _budget_sql("nt", den)
+        probed = before.filter(f"before < {bud}").select("cell", "sz")
+        pstats = probed.selectExpr(
+            "CAST(count(*) AS BIGINT) AS n_cells_probed", "CAST(sum(sz) AS BIGINT) AS rows_scanned"
         )
-        topk = (
-            scored.join(F.broadcast(probed.select("cell")), "cell", "left_semi")
-            .orderBy("d", "vec_id")
-            .limit(_Q281_K)
+        topk = _topk(
+            scored.join(F.broadcast(probed.select("cell")), "cell", "left_semi"), "d", _Q281_K
         )
-        recall = topk.join(exact_topk, "vec_id", "left").agg(
-            (
-                F.sum(F.coalesce("in_exact", F.lit(0))) / F.lit(float(_Q281_K))
-            ).alias("recall_at_k")
+        recall = topk.join(exact_topk, "vec_id", "left").selectExpr(
+            f"{_recall_sql(_Q281_K)} AS recall_at_k"
         )
         return (
-            nt.select(
-                F.lit(den).cast("int").alias("budget_den"),
-                bud.alias("budget_rows"),
-            )
+            nt.selectExpr(f"{den} AS budget_den", f"{bud} AS budget_rows")
             .crossJoin(F.broadcast(pstats))
             .crossJoin(F.broadcast(recall))
-            .select(
+            .selectExpr(
                 "budget_den",
                 "budget_rows",
                 "n_cells_probed",
                 "rows_scanned",
-                F.round("recall_at_k", 4).alias("recall_at_k"),
+                "round(recall_at_k, 4) AS recall_at_k",
             )
         )
 
@@ -3790,150 +3487,64 @@ _Q286_QRES = 5
 def q286_multiprobe_recall_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
-    from pyspark.sql import Window
-
-    from ..operators.similarity import _qint, sq_l2_q
-
-    emb = load(spark, sf_dir, "embeddings")
-    qe = emb.select("vec_id", _qint("embedding").alias("qv"))
-    cents = qe.filter(F.col("vec_id") < _Q281_NCELL).select(
-        F.col("vec_id").alias("cell"),
-        F.transform("qv", lambda x: x * _Q281_ASCALE).alias("cvec"),
-    )
-    corpus = (
-        qe.filter(F.col("vec_id") >= _Q281_NCELL)
-        .withColumn("_ac", F.col("vec_id") % _Q281_NCELL)
-        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
-        .select("vec_id", F.zip_with("cvec", "qv", lambda a, b: a + b).alias("qv"))
-        .localCheckpoint(eager=False)
-    )
+    cents, corpus, assign, sizes = _anchored_ivf(spark, sf_dir)
     qset = (
-        corpus.filter(F.col("vec_id") % _Q286_QMOD == _Q286_QRES)
+        corpus.filter(f"vec_id % {_Q286_QMOD} = {_Q286_QRES}")
         .orderBy("vec_id")
         .limit(_Q286_NQ)
-        .select(F.col("vec_id").alias("qid"), F.col("qv").alias("quvec"))
+        .selectExpr("vec_id AS qid", "qv AS quvec")
         .localCheckpoint(eager=False)  # cd + scored read it
     )
-    assign = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("qv", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select("vec_id", F.col("b.cell").alias("cell"))
-        .localCheckpoint(eager=False)
-    )
-    sizes = assign.groupBy("cell").agg(F.count("*").cast("long").alias("sz"))
-    nt = corpus.agg(F.count("*").cast("long").alias("nt"))
-    cd = (
-        cents.crossJoin(F.broadcast(qset))
-        .select(
-            "qid", "cell", sq_l2_q("cvec", "quvec").alias("d")
-        )
-        .join(sizes, "cell", "left")
-        .select(
-            "qid", "cell", "d",
-            F.coalesce("sz", F.lit(0).cast("long")).alias("sz"),
-        )
-        .localCheckpoint(eager=False)  # dominance self-join reads it twice
-    )
+    nt = corpus.selectExpr("CAST(count(*) AS BIGINT) AS nt")
     before = (
-        cd.join(
-            cd.select(
-                F.col("qid").alias("q2"), F.col("cell").alias("c2"),
-                F.col("d").alias("d2"), F.col("sz").alias("s2"),
-            ),
-            (F.col("q2") == F.col("qid"))
-            & (
-                (F.col("d2") < F.col("d"))
-                | ((F.col("d2") == F.col("d")) & (F.col("c2") < F.col("cell")))
-            ),
-            "left",
-        )
-        .groupBy("qid", "cell", "d", "sz")
-        .agg(F.coalesce(F.sum("s2"), F.lit(0).cast("long")).alias("before"))
+        _probe_order(cents, qset, sizes, ("qid",))
         .crossJoin(F.broadcast(nt))
         .localCheckpoint(eager=False)  # one probe-set filter per budget
     )
     scored = (
         corpus.join(assign, "vec_id")
         .crossJoin(F.broadcast(qset))
-        .select(
-            "qid", "vec_id", "cell",
-            sq_l2_q("qv", "quvec").alias("d"),
-        )
+        .selectExpr("qid", "vec_id", "cell", f"{_sq_l2_q_sql('qv', 'quvec')} AS d")
         .localCheckpoint(eager=False)  # 4 budget scans + exact read it
     )
-    wq = Window.partitionBy("qid").orderBy("d", "vec_id")
-    exact_topk = (
-        scored.select(
-            "qid", "vec_id", F.row_number().over(wq).alias("rn")
-        )
-        .filter(F.col("rn") <= _Q281_K)
-        .select("qid", "vec_id", F.lit(1).alias("in_exact"))
-        .localCheckpoint(eager=False)  # one recall join per budget
-    )
+    exact_topk = _exact_mark(scored, "d", _Q281_K, ("qid",)).localCheckpoint(
+        eager=False
+    )  # one recall join per budget
 
     def curve_point(den: int):
-        bud = F.floor(F.col("nt").cast("double") / F.lit(float(den))).cast(
-            "long"
-        ) + F.lit(1).cast("long")
-        probed = before.filter(F.col("before") < bud).select(
-            "qid", "cell", "sz"
+        bud = _budget_sql("nt", den)
+        probed = before.filter(f"before < {bud}").select("qid", "cell", "sz")
+        pstats = probed.selectExpr(
+            "CAST(count(*) AS BIGINT) AS n_cells_probed_total",
+            "CAST(sum(sz) AS BIGINT) AS rows_scanned_total",
         )
-        pstats = probed.agg(
-            F.count("*").cast("long").alias("n_cells_probed_total"),
-            F.sum("sz").cast("long").alias("rows_scanned_total"),
-        )
-        topk = (
-            scored.join(
-                F.broadcast(probed.select("qid", "cell")),
-                ["qid", "cell"],
-                "left_semi",
-            )
-            .select("qid", "vec_id", F.row_number().over(wq).alias("rn"))
-            .filter(F.col("rn") <= _Q281_K)
-            .select("qid", "vec_id")
+        topk = _topk(
+            scored.join(F.broadcast(probed.select("qid", "cell")), ["qid", "cell"], "left_semi"),
+            "d", _Q281_K, ("qid",),
         )
         hits = (
             topk.join(exact_topk, ["qid", "vec_id"], "left")
             .groupBy("qid")
-            .agg(
-                F.sum(F.coalesce("in_exact", F.lit(0)))
-                .cast("long")
-                .alias("hits")
-            )
+            .agg(F.expr(f"CAST({_HITS_SQL} AS BIGINT) AS hits"))
         )
-        stats = hits.agg(
-            F.count("*").cast("long").alias("n_queries"),
-            F.sum("hits").cast("long").alias("sum_hits"),
-            F.min("hits").cast("long").alias("min_hits"),
+        stats = hits.selectExpr(
+            "CAST(count(*) AS BIGINT) AS n_queries",
+            "CAST(sum(hits) AS BIGINT) AS sum_hits",
+            "CAST(min(hits) AS BIGINT) AS min_hits",
         )
         return (
-            nt.select(
-                F.lit(den).cast("int").alias("budget_den"),
-                bud.alias("budget_rows"),
-            )
+            nt.selectExpr(f"{den} AS budget_den", f"{bud} AS budget_rows")
             .crossJoin(F.broadcast(pstats))
             .crossJoin(F.broadcast(stats))
-            .select(
+            .selectExpr(
                 "budget_den",
                 "budget_rows",
                 "n_queries",
                 "n_cells_probed_total",
                 "rows_scanned_total",
-                F.expr(
-                    f"CAST((sum_hits * 10000) div ({_Q281_K} * n_queries) "
-                    "AS BIGINT)"
-                ).alias("mean_recall_bp"),
-                F.expr(
-                    f"CAST((min_hits * 10000) div {_Q281_K} AS BIGINT)"
-                ).alias("min_recall_bp"),
+                f"CAST((sum_hits * 10000) div ({_Q281_K} * n_queries) AS BIGINT)"
+                " AS mean_recall_bp",
+                f"CAST((min_hits * 10000) div {_Q281_K} AS BIGINT) AS min_recall_bp",
             )
         )
 

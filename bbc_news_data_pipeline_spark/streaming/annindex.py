@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.incremental import merge_partials
+from ..operators.similarity import anchored_corpus, nearest_centroid
 from ..sources.sinks import table_exists
 from .drain import drain
 
@@ -101,24 +102,15 @@ def apply_postings_batch(
 ) -> dict:
     """Fold one micro-batch of (vec_id, embedding) into the stored
     postings + cellstats, assigning against the frozen centroids."""
-    from ..operators.similarity import _qint, sq_l2_q
-
     cents_p, post_p, stats_p = (
         os.path.join(state_dir, t) for t in ("centroids", "postings", "cellstats")
     )
     cents = spark.read.parquet(cents_p)  # frozen; missing = config error → loud
     ncell = cents.count()
 
-    # clustered-corpus derivation shared with q268/q281: anchor + own vec
-    vecs = (
-        batch_df.filter(F.col("vec_id") >= ncell)
-        .select("vec_id", _qint("embedding").alias("v"))
-        .withColumn("_ac", F.col("vec_id") % ncell)
-        .join(F.broadcast(cents.withColumnRenamed("cell", "_ac")), "_ac")
-        .select(
-            "vec_id", F.zip_with("cvec", "v", lambda a, b: a + b).alias("v")
-        )
-    )
+    # the anchored fixture's corpus (anchor + own vec) against the
+    # frozen centroids: the same builder q268/q281/q285/q286 use
+    vecs = anchored_corpus(batch_df, cents, ncell)
     # replay idempotence: drop vectors the index already holds. The probe
     # is BUCKET-PRUNED — the batch's bucket footprint is bounded by
     # POSTING_BUCKETS (bounded collect), and the isin filter on the
@@ -175,21 +167,8 @@ def apply_postings_batch(
                 _bucket_probe(spark, post_p, batch_buckets), "vec_id", "left_anti"
             )
     new_post = (
-        vecs.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                sq_l2_q("v", "cvec").alias("d"),
-                F.col("cell").alias("cell"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("b"))
-        .select(
-            "vec_id",
-            F.col("b.cell").alias("cell"),
-            F.col("b.d").cast("long").alias("r2"),
-        )
+        nearest_centroid(vecs, cents, ["vec_id"], "qv", "cvec", "cell")
+        .selectExpr("vec_id", "cell", "d AS r2")
         .localCheckpoint()  # EAGER: feeds stats fold + postings append
     )
     bstats = new_post.groupBy("cell").agg(

@@ -130,12 +130,13 @@ def _lambda_bodies(plan):
 
 
 def test_repetition_gate_lambdas_never_retokenize(spark, sf_dir):
-    """The gate's filter is pushed below the projection that staged the
-    tokens, so the optimized plan inlines split(text) into the ratio
-    expressions. No lambda may split: a gram (or block) lambda that
-    indexes the tokens re-splits the document once per gram, O(len²) per
-    row. ``blockize`` (block dedup, batch and streaming) is held to the
-    same rule."""
+    """A filter pushed below the projection that staged the tokens would
+    inline split(text) into the ratio expressions. No lambda may split:
+    a gram (or block) lambda that indexes the tokens re-splits the
+    document once per gram, O(len²) per row. ``blockize`` (block dedup,
+    batch and streaming) is held to the same rule. The gate itself
+    splits each document exactly once: its filters read generator
+    output, which no filter sinks below."""
     from bbc_news_data_pipeline_spark.operators.curation import gate_documents
     from bbc_news_data_pipeline_spark.operators.dedup import blockize
     from bbc_news_data_pipeline_spark.streaming.curation import curate_docs_stream
@@ -146,6 +147,8 @@ def test_repetition_gate_lambdas_never_retokenize(spark, sf_dir):
         bodies = list(_lambda_bodies(plan))
         assert bodies and "split(" in plan, plan
         assert not [b for b in bodies if "split(" in b], plan
+    gate_plan = gate_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert gate_plan.count("split(") == 1, gate_plan
 
 
 # --- connected components --------------------------------------------------

@@ -72,6 +72,65 @@ def test_topk_order(spark, vectors):
     assert all(r.vec_id < 25 for r in top)  # top-k all from the planted cluster
 
 
+def _argmin_ref(p, cents):
+    """(cell, d) of the exact int64 squared-L2 argmin, ties to the
+    smallest cell id."""
+    d = {c: int(((p - v) ** 2).sum()) for c, v in cents.items()}
+    return min(d.items(), key=lambda cd: (cd[1], cd[0]))
+
+
+def test_nearest_centroid_ties_exact_distance_and_subspaces(spark):
+    """The one nearest-centroid argmin every k-means step, PQ codebook,
+    IVF assignment and SemDeDup cluster uses: equidistant centroids
+    resolve to the smaller cell id, ``d`` is the exact int64 squared L2
+    (values past 2^31, as quantized vectors give), and the join-keyed
+    per-subspace form matches a per-subspace argmin."""
+    rng = np.random.default_rng(11)
+    dim = 6
+    pts = {i: rng.integers(-2_000_000, 2_000_000, dim) for i in range(1, 41)}
+    cents = {c: rng.integers(-2_000_000, 2_000_000, dim) for c in (0, 2, 4)}
+    # point 0 sits exactly midway between cells 3 and 1, far from the rest
+    pts[0] = np.zeros(dim, dtype=np.int64)
+    cents[3] = np.array([-10] + [0] * (dim - 1))
+    cents[1] = np.array([10] + [0] * (dim - 1))
+    as_rows = lambda m: [(k, [int(x) for x in v]) for k, v in m.items()]
+    p_df = spark.createDataFrame(as_rows(pts), "vec_id long, qv array<long>")
+    c_df = spark.createDataFrame(as_rows(cents), "cell long, cvec array<long>")
+
+    got = {
+        r.vec_id: (r.cell, r.d)
+        for r in similarity.nearest_centroid(
+            p_df, c_df, ["vec_id"], "qv", "cvec", "cell"
+        ).collect()
+    }
+    assert got[0] == (1, 100)
+    assert got == {i: _argmin_ref(p, cents) for i, p in pts.items()}
+    assert max(d for _, d in got.values()) > 2**31
+
+    # per-subspace form: subspace m of a point scores only codebook m
+    half = dim // 2
+    sub = lambda m, v: v[m * half:(m + 1) * half]
+    sp_df = spark.createDataFrame(
+        [(i, m, [int(x) for x in sub(m, p)]) for i, p in pts.items() for m in (0, 1)],
+        "vec_id long, m int, sv array<long>",
+    )
+    cb_df = spark.createDataFrame(
+        [(c, m, [int(x) for x in sub(m, v)]) for c, v in cents.items() for m in (0, 1)],
+        "code long, m int, cw array<long>",
+    )
+    got_sub = {
+        (r.vec_id, r.m): (r.code, r.d)
+        for r in similarity.nearest_centroid(
+            sp_df, cb_df, ["vec_id", "m"], "sv", "cw", "code", on=["m"]
+        ).collect()
+    }
+    assert got_sub == {
+        (i, m): _argmin_ref(sub(m, p), {c: sub(m, v) for c, v in cents.items()})
+        for i, p in pts.items()
+        for m in (0, 1)
+    }
+
+
 def test_lsh_bucket_ann_finds_cluster(spark, vectors):
     rows, df = vectors
     rng = np.random.default_rng(7)
