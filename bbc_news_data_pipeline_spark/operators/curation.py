@@ -234,9 +234,10 @@ def connected_components(
                 F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
             )
             # lazy: the convergence agg below is the round's ONE action —
-            # it materializes (and caches) stepped as a side effect, so the
-            # old eager-checkpoint-then-count pair (2 scheduler jobs/round)
-            # collapses to 1 without changing what any round computes
+            # it materializes (and caches) stepped as a side effect. One
+            # action is not one job: under AQE every shuffle stage of the
+            # pinned plan runs as its own job, ~8 per round (16- and
+            # 32-edge chains ran 128 and 256 jobs on 4 cores)
             .localCheckpoint(eager=False)
         )
         changed = int(
@@ -298,7 +299,8 @@ def resolve_ancestors(
                 F.col("jc").isNotNull().alias("_moved"),
             )
             # lazy: the convergence agg is the round's ONE action and
-            # materializes stepped as a side effect (see connected_components)
+            # materializes stepped as a side effect; under AQE that is ~5
+            # Spark jobs per round (see connected_components)
             .localCheckpoint(eager=False)
         )
         moved = int(
@@ -518,8 +520,10 @@ def cc_two_phase(
         # ONE action per round: n_edges and changed fused into a single
         # aggregate (both edge sets are DISTINCT by construction, so the
         # old exceptAll count equals the unmatched-row count of a left
-        # join — no second shuffle pass, no separate count jobs). The agg
-        # also materializes the round's checkpoints.
+        # join — no second shuffle pass, no separate count action). The
+        # agg also materializes the round's checkpoints, so under AQE the
+        # one action runs ~13 Spark jobs per round (16- and 32-edge
+        # chains: 5 and 6 rounds, 68 and 81 jobs on 4 cores).
         stats = (
             e_ss.join(
                 e.select("a", "b", F.lit(1).alias("_old")), ["a", "b"], "left"

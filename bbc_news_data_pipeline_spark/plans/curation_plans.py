@@ -48,8 +48,10 @@ from .dedup_plans import (
     _CAPPED_PAIRS_CTES,
     _MAX_GROUP,
     _SIGS,
+    _capped_pairs,
     _hex2int_sql,
     _shingle_sql,
+    _sym_edges,
 )
 from .registry import Query
 
@@ -594,14 +596,7 @@ _Q120_B = 64
 
 def q120_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = _capped_pairs(docs)
     bucketed = docs.select(
         "doc_id", (sample_key_expr("doc_id", "neg") % _Q120_B).alias("b")
     )
@@ -1754,8 +1749,11 @@ w0 AS (
 _Q166_SKIP_MOD = 4
 
 
-def q166_logstar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
+def _chain_edges(docs: DataFrame, salt: str, mod: int) -> DataFrame:
+    """Per-source chain graph as ``(a, b)`` edges: each doc links to its
+    successor by doc_id within its source (the path), and to the doc two
+    ahead when md5(salt:doc_id) % mod == 0 (the skip). The shared window
+    frame is pinned because both edge sets read it; the union is not."""
     w = Window.partitionBy("source").orderBy("doc_id")
     d = docs.select(
         "doc_id",
@@ -1766,10 +1764,15 @@ def q166_logstar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("a"), F.col("n1").alias("b")
     )
     skip_e = d.filter(
-        F.col("n2").isNotNull()
-        & (sample_key_expr("doc_id", salt="ccskip") % _Q166_SKIP_MOD == 0)
+        F.col("n2").isNotNull() & (sample_key_expr("doc_id", salt=salt) % mod == 0)
     ).select(F.col("doc_id").alias("a"), F.col("n2").alias("b"))
-    labels, _rounds = cc_two_phase(path_e.unionByName(skip_e), "a", "b")
+    return path_e.unionByName(skip_e)
+
+
+def q166_logstar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents").select("doc_id", "source")
+    edges = _chain_edges(docs, "ccskip", _Q166_SKIP_MOD)
+    labels, _rounds = cc_two_phase(edges, "a", "b")
     return (
         labels.groupBy("cluster_id")
         .agg(
@@ -2284,20 +2287,9 @@ _Q180_BATCH_MOD = 5
 
 def q180_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy("doc_id")
-    d = docs.select(
-        "doc_id",
-        F.lead("doc_id", 1).over(w).alias("n1"),
-        F.lead("doc_id", 2).over(w).alias("n2"),
-    ).localCheckpoint(eager=False)  # feeds both edge sets
-    path_e = d.filter(F.col("n1").isNotNull()).select(
-        F.col("doc_id").alias("a"), F.col("n1").alias("b")
+    edges = _chain_edges(docs, "ccinc", _Q180_SKIP_MOD).localCheckpoint(
+        eager=False
     )
-    skip_e = d.filter(
-        F.col("n2").isNotNull()
-        & (sample_key_expr("doc_id", salt="ccinc") % _Q180_SKIP_MOD == 0)
-    ).select(F.col("doc_id").alias("a"), F.col("n2").alias("b"))
-    edges = path_e.unionByName(skip_e).localCheckpoint(eager=False)
     is_batch = sample_key_expr("a", salt="ccbatch") % _Q180_BATCH_MOD == 0
     base_e = edges.filter(~is_batch)
     batch_e = edges.filter(is_batch).localCheckpoint(eager=False)
@@ -2659,40 +2651,36 @@ ORDER BY r2.source, r2.lang
 _Q200_K = 3
 
 
-def q200_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint(eager=False)  # K round-joins reference this
-    )
-    lab = edges.select(F.col("u").alias("v")).distinct().select(
+def _lpa_start(edges: DataFrame) -> DataFrame:
+    """Round-0 labels: every node of the ``(u, v)`` edge list labels itself."""
+    return edges.select(F.col("u").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
     )
+
+
+def _lpa_round(edges: DataFrame, lab: DataFrame) -> DataFrame:
+    """One synchronous LPA round: each node adopts its neighbors' majority
+    label, ties to the smaller label (max over (count, −label)). Unpinned."""
+    nb = edges.join(lab.select(F.col("v").alias("u"), "lbl"), "u").select("v", "lbl")
+    return (
+        nb.groupBy("v", "lbl")
+        .agg(F.count("*").alias("c"))
+        .select("v", F.struct(F.col("c"), (-F.col("lbl")).alias("nl")).alias("s"))
+        .groupBy("v")
+        .agg(F.max("s").alias("b"))
+        .select("v", (-F.col("b.nl")).alias("lbl"))
+    )
+
+
+def q200_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load(spark, sf_dir, "documents")
+    # K round-joins reference this
+    edges = _sym_edges(_capped_pairs(docs)).localCheckpoint(eager=False)
+    lab = _lpa_start(edges)
     rounds: list[DataFrame] = []
     for _ in range(_Q200_K):
-        nb = edges.join(
-            lab.select(F.col("v").alias("u"), "lbl"), "u"
-        ).select("v", "lbl")
-        cnt = nb.groupBy("v", "lbl").agg(F.count("*").alias("c"))
-        lab = (
-            cnt.select(
-                "v",
-                F.struct(F.col("c"), (-F.col("lbl")).alias("nl")).alias("s"),
-            )
-            .groupBy("v")
-            .agg(F.max("s").alias("b"))
-            .select("v", (-F.col("b.nl")).alias("lbl"))
-            .localCheckpoint(eager=False)  # feeds next round + output
-        )
+        # feeds next round + output
+        lab = _lpa_round(edges, lab).localCheckpoint(eager=False)
         rounds.append(lab)
     l1, l2, l3 = rounds
     comm = l3.groupBy("lbl").agg(F.count("*").alias("comm_size"))
@@ -2961,38 +2949,14 @@ ORDER BY brand, fold
 # ---------------------------------------------------------------------------
 def q250_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds edges + intra join + m
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint(eager=False)  # LPA rounds + degrees reference this
-    )
-    lab = edges.select(F.col("u").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
-    )
+    # feeds edges + intra join + m
+    pairs = _capped_pairs(docs).localCheckpoint(eager=False)
+    # LPA rounds + degrees reference this
+    edges = _sym_edges(pairs).localCheckpoint(eager=False)
+    lab = _lpa_start(edges)
     for _ in range(_Q200_K):
-        nb = edges.join(
-            lab.select(F.col("v").alias("u"), "lbl"), "u"
-        ).select("v", "lbl")
-        cnt = nb.groupBy("v", "lbl").agg(F.count("*").alias("c"))
-        lab = (
-            cnt.select(
-                "v",
-                F.struct(F.col("c"), (-F.col("lbl")).alias("nl")).alias("s"),
-            )
-            .groupBy("v")
-            .agg(F.max("s").alias("b"))
-            .select("v", (-F.col("b.nl")).alias("lbl"))
-            .localCheckpoint(eager=False)  # next round + joins below
-        )
+        # next round + joins below
+        lab = _lpa_round(edges, lab).localCheckpoint(eager=False)
     deg = edges.groupBy(F.col("u").alias("v")).agg(F.count("*").alias("deg"))
     dsum = (
         lab.join(deg, "v")

@@ -25,7 +25,8 @@ from ..operators.dedup import (
 from ..sources.tables import load
 from .registry import Query
 
-SHINGLE_K = 5  # keep in sync with text_plans.SHINGLE_K
+SHINGLE_K = 5  # word-shingle width for MinHash / Jaccard (tuned so the
+# inverted-index join stays sub-quadratic on the synthetic zipfian corpus)
 
 # Hot-bucket star cap (operators/dedup.py:pairs_within_groups), explicit in
 # the candidate-pair query definitions AND mirrored in their oracles: a
@@ -201,6 +202,28 @@ WITH {_CAPPED_PAIRS_CTES}
 SELECT DISTINCT id_a, id_b FROM pairs
 ORDER BY id_a, id_b
 """
+
+
+def _capped_pairs(docs: DataFrame) -> DataFrame:
+    """Spark twin of ``_CAPPED_PAIRS_CTES`` + ``SELECT DISTINCT id_a, id_b``:
+    the distinct capped candidate pairs (id_a < id_b). Unpinned — each
+    caller decides whether its consumers justify a checkpoint."""
+    return (
+        minhash_candidates(
+            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
+            max_group=_MAX_GROUP,
+        )
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _sym_edges(pairs: DataFrame) -> DataFrame:
+    """Both orientations of each pair as directed ``(u, v)`` edges — the
+    oracles' ``SELECT id_a AS u, id_b AS v … UNION ALL …`` edge list."""
+    return pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).union(
+        pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -637,17 +660,7 @@ _PR_TOPK = 20
 
 def q111_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).union(
-        pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-    )
+    edges = _sym_edges(_capped_pairs(docs))
     deg = edges.groupBy("u").agg(F.count("*").alias("deg"))
     agg = (
         edges.join(deg, "u")
@@ -786,14 +799,7 @@ def q114_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import with_minhash, with_shingles
 
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = _capped_pairs(docs)
     sigs = with_minhash(docs, "doc_id", "text", n_hashes=8, k=SHINGLE_K)
     sh = with_shingles(docs, "doc_id", "text", SHINGLE_K).select(
         "doc_id", F.array_distinct("shingles").alias("sset")
@@ -889,19 +895,8 @@ _Q139_SCALE = 1_000_000
 
 def q139_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint(eager=False)  # K step-joins + deg reference this
-    )
+    # K step-joins + deg reference this
+    edges = _sym_edges(_capped_pairs(docs)).localCheckpoint(eager=False)
     deg = edges.groupBy("u").agg(F.count("*").alias("deg")).localCheckpoint(
         eager=False
     )
@@ -1622,19 +1617,8 @@ _Q244_NSEEDS = 5
 
 def q244_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = (
-        minhash_candidates(
-            docs, "doc_id", "text", n_hashes=8, bands=4, k=SHINGLE_K,
-            max_group=_MAX_GROUP,
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-        .localCheckpoint(eager=False)  # K frontier joins reference this
-    )
+    # K frontier joins reference this
+    edges = _sym_edges(_capped_pairs(docs)).localCheckpoint(eager=False)
     nodes = edges.select("v").distinct().localCheckpoint(eager=False)
     seeds = nodes.orderBy("v").limit(_Q244_NSEEDS)  # TakeOrdered: bounded
     labeled = seeds.select("v", F.lit(0).alias("dist")).localCheckpoint(

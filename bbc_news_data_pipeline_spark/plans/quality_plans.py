@@ -1094,7 +1094,9 @@ ORDER BY step
 # have exactly one defined result everywhere, so mi_nano cannot flip.
 # Ranking uses the fixed-point grid value itself (desc, bucket
 # tiebreak) so top-K membership and emitted values share one
-# deterministic key. Top-20 as a bounded TakeOrdered. Scale: one
+# deterministic key. The exact counts the MI reads (n11, nn, npos) are
+# emitted beside it, so a hash mismatch that also shows in a count is
+# upstream of the MI math. Top-20 as a bounded TakeOrdered. Scale: one
 # distinct rollup + one groupBy on the bucket key — Zipf/hash-bounded;
 # no windows, no per-doc fan-out beyond tokenization.
 # ---------------------------------------------------------------------------
@@ -1210,6 +1212,9 @@ def q276_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.selectExpr(
             "b AS bucket",
             "n1 AS n_docs_with",
+            "n11",
+            "nn",
+            "npos",
             "pos_rate_bp",
             "mi_nano",
         )
@@ -1259,6 +1264,9 @@ base AS (
 {joined}
 SELECT b AS bucket,
        n1 AS n_docs_with,
+       n11,
+       nn,
+       npos,
        pos_rate_bp,
        mi_nano
 FROM {prev}
@@ -6524,7 +6532,8 @@ QUERIES = [
           tags=("bench",)),
     Query("q276_feature_mi", q276_feature_mi, Q276_SQL,
           survey="ext:feature-selection,ext:mutual-information,"
-                 "ext:hashing-trick,ext:quality-classifier",
+                 "ext:contingency-counts,ext:hashing-trick,"
+                 "ext:quality-classifier",
           tags=("bench",)),
     Query("q278_classifier_cv", q278_classifier_cv, Q278_SQL,
           survey="ext:cross-validation,ext:classifier-training,"

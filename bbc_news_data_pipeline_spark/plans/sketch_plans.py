@@ -47,6 +47,7 @@ from ..operators.sketches import (
     hll_registers,
 )
 from ..sources.tables import load
+from .curation_plans import _chain_edges
 from .dedup_plans import _hex2int_sql
 from .registry import Query
 
@@ -3534,23 +3535,8 @@ _Q172_SKIP_MOD = 3
 def q172_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
-    from ..operators.curation import sample_key_expr
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy("doc_id")
-    d = docs.select(
-        "doc_id",
-        F.lead("doc_id", 1).over(w).alias("n1"),
-        F.lead("doc_id", 2).over(w).alias("n2"),
-    ).localCheckpoint(eager=False)  # feeds both edge sets
-    path_e = d.filter(F.col("n1").isNotNull()).select(
-        F.col("doc_id").alias("a"), F.col("n1").alias("b")
-    )
-    skip_e = d.filter(
-        F.col("n2").isNotNull()
-        & (sample_key_expr("doc_id", salt="nfskip") % _Q172_SKIP_MOD == 0)
-    ).select(F.col("doc_id").alias("a"), F.col("n2").alias("b"))
-    e0 = path_e.unionByName(skip_e)
+    e0 = _chain_edges(docs, "nfskip", _Q172_SKIP_MOD)
     edges = (
         e0.unionByName(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

@@ -25,10 +25,8 @@ from ..functions.textstats import (
 )
 from ..operators.dedup import fingerprint, ngram_jaccard_pairs, with_minhash
 from ..sources.tables import load
+from .dedup_plans import SHINGLE_K, _shingle_sql
 from .registry import Query
-
-SHINGLE_K = 5  # word-shingle width for MinHash / Jaccard (tuned so the
-# inverted-index join stays sub-quadratic on the synthetic zipfian corpus)
 
 
 # ---------------------------------------------------------------------------
@@ -249,12 +247,6 @@ FROM documents
 def q38_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return with_minhash(docs, "doc_id", "text", n_hashes=4, k=SHINGLE_K)
-
-
-def _shingle_sql(k: int = SHINGLE_K) -> str:
-    toks = "str_split(text, ' ')"
-    parts = " || ' ' || ".join(f"{toks}[i + {j}]" for j in range(k))
-    return f"list_transform(generate_series(1, len({toks}) - {k - 1}), i -> {parts})"
 
 
 Q38_SQL = f"""

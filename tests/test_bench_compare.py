@@ -153,3 +153,36 @@ def test_family_normalized_records_preferred(capsys, tmp_path):
     out = capsys.readouterr().out
     assert "FAMILY-NORMALIZED" in out
     assert "x 1.00" in out
+
+
+def test_compact_summary_fits_tail_capture_with_per_query_map():
+    """bench.py's last line must survive the driver's ~4 KB tail capture
+    with the per-query map included: every bench-tagged query at a
+    worst-case 99.999 s, keyed by its unique qNNN prefix, still parses
+    and stays under 4,000 bytes."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from bench import compact_summary
+    from bbc_news_data_pipeline_spark.plans import all_queries
+
+    names = [q.name for q in all_queries() if "bench" in q.tags]
+    worst = {n: 99.999 for n in names}
+    record = {
+        "sf": 0.1,
+        "queries": worst,
+        "value": 99999.999,
+        "value_norm": 99999.999,
+        "value_norm_family": 99999.999,
+        "calibration_sec": 99.999,
+        "calibration_shuffle_sec": 99.999,
+        "calibration_drain_sec": 99.999,
+        "loadavg_1m": 99.99,
+        "queries_norm_family": worst,
+    }
+    line = compact_summary(record)
+    assert len(line.encode("utf-8")) < 4000, len(line)
+    parsed = json.loads(line)
+    assert parsed["metric"] == "headline_summary_compact"
+    assert parsed["n_queries"] == len(names)
+    per_query = parsed["per_query_sec"]
+    assert len(per_query) == len(names)  # qNNN prefixes are unique
+    assert set(per_query.values()) == {99.999}

@@ -583,6 +583,57 @@ def test_label_propagation_python_twin(spark, sf_dir):
         assert r.comm_size == sizes[r.lbl3]
 
 
+def test_near_dup_graph_helpers_python_twin(spark):
+    """The shared graph pieces vs python twins: _sym_edges emits each
+    distinct pair in both orientations exactly once; one _lpa_round
+    breaks a tie in neighbor-label counts toward the smaller label; and
+    _chain_edges on 2 sources x 6 docs is the per-source path plus the
+    md5-salted skip edges (doc -> doc two ahead)."""
+    import hashlib
+
+    from bbc_news_data_pipeline_spark.plans.curation_plans import (
+        _chain_edges,
+        _lpa_round,
+        _lpa_start,
+    )
+    from bbc_news_data_pipeline_spark.plans.dedup_plans import _sym_edges
+
+    ps = [(1, 2), (1, 3), (2, 3), (4, 5)]
+    pairs = spark.createDataFrame(ps, "id_a long, id_b long")
+    got = sorted(tuple(r) for r in _sym_edges(pairs).collect())
+    assert got == sorted(ps + [(b, a) for a, b in ps])
+
+    # node 10's neighbors carry labels 9, 9, 4, 4, 2: the count tie
+    # between 9 and 4 resolves to 4, and 2 loses on count
+    star = spark.createDataFrame(
+        [(10, n) for n in range(11, 16)], "id_a long, id_b long"
+    )
+    edges = _sym_edges(star)
+    start = {r.v: r.lbl for r in _lpa_start(edges).collect()}
+    assert start == {v: v for v in range(10, 16)}
+    lab = spark.createDataFrame(
+        [(10, 1), (11, 9), (12, 9), (13, 4), (14, 4), (15, 2)], "v long, lbl long"
+    )
+    got = {r.v: r.lbl for r in _lpa_round(edges, lab).collect()}
+    assert got == {10: 4, 11: 1, 12: 1, 13: 1, 14: 1, 15: 1}
+
+    salt, mod = "ccskip", 2
+    rows = [(i, "ab"[i % 2]) for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string")
+    got = sorted(tuple(r) for r in _chain_edges(docs, salt, mod).collect())
+
+    def key(i):
+        return int(hashlib.md5(f"{salt}:{i}".encode()).hexdigest()[:8], 16)
+
+    path, skip = [], []
+    for src in "ab":
+        ids = sorted(i for i, s in rows if s == src)
+        path += list(zip(ids, ids[1:]))
+        skip += [(a, c) for a, c in zip(ids, ids[2:]) if key(a) % mod == 0]
+    assert 0 < len(skip) < 8  # the salt both keeps and drops skip edges
+    assert got == sorted(path + skip)
+
+
 def test_raking_weights_python_twin_and_lang_marginal_exact(spark, sf_dir):
     """q224 vs an integer-exact python IPF twin; after the final lang
     round the lang marginals are uniform up to integer-floor residue

@@ -303,6 +303,7 @@ def test_feature_mi_python_twin(spark, sf_dir):
         n1 = len(pres[r.bucket])
         n11 = sum(labels[d] for d in pres[r.bucket])
         assert r.n_docs_with == n1
+        assert (r.n11, r.nn, r.npos) == (n11, nn, npos)
         # r10: pure-BIGINT emission (integer nano/bp numerators) — the
         # hashed schema carries no doubles at all.
         assert isinstance(r.pos_rate_bp, int) and isinstance(r.mi_nano, int)
